@@ -7,10 +7,6 @@ synthetic pages corpus deterministically derived from the documents
 table (scaled up BENCH_PAGE_FACTOR x by replication with distinct URLs,
 so the frontier is meaningfully larger than the raw table). Individual
 query timings are reported under "queries" (seconds).
-
-Set SPARK_GRAFT_BENCH_SCALING=1 to also run the two-parallelism scaling
-probe (local[8] vs local[32]) — see scripts/scaling_bench.py for the
-full report used in BASELINE.md.
 """
 
 from __future__ import annotations
@@ -32,9 +28,10 @@ PAGE_FACTOR = int(os.environ.get("BENCH_PAGE_FACTOR", "16"))
 BODY_REPEAT = int(os.environ.get("BENCH_BODY_REPEAT", "10"))
 
 
-def build_corpus(spark, sf_dir: str):
+def build_corpus(spark, sf_dir: str, page_factor: int = PAGE_FACTOR,
+                 body_repeat: int = BODY_REPEAT):
     """Deterministic synthetic crawl corpus from the documents table,
-    replicated PAGE_FACTOR x with distinct URLs. Generated DISTRIBUTED —
+    replicated ``page_factor`` x with distinct URLs. Generated DISTRIBUTED —
     pure Catalyst expressions (explode + concat + encode), no driver loop —
     so corpus size is bounded by the cluster, not the driver."""
     from commoncrawl_spark.fixtures import CRAWLS
@@ -44,9 +41,9 @@ def build_corpus(spark, sf_dir: str):
     )
     rep = docs.select(
         "doc_id", "text", "lang", "source",
-        F.explode(F.sequence(F.lit(0), F.lit(PAGE_FACTOR - 1))).alias("_r"),
+        F.explode(F.sequence(F.lit(0), F.lit(page_factor - 1))).alias("_r"),
     ).select(
-        (F.col("doc_id") * PAGE_FACTOR + F.col("_r")).alias("id"),
+        (F.col("doc_id") * page_factor + F.col("_r")).alias("id"),
         "text", "lang", "source",
     )
     url = F.concat(
@@ -61,7 +58,7 @@ def build_corpus(spark, sf_dir: str):
               "2024-01-01T00:00:00+00:00</time>"),
         F.lit('<a rel="author" href="/p/a">Alice Carter</a>'),
         F.lit('<div itemprop="articleBody"><p>'),
-        F.concat_ws("</p><p>", F.array_repeat(F.col("text"), BODY_REPEAT)),
+        F.concat_ws("</p><p>", F.array_repeat(F.col("text"), body_repeat)),
         F.lit("</p></div></body></html>"),
     )
     warc = F.concat(

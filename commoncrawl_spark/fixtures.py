@@ -264,67 +264,6 @@ def gen_cdx(pages: pd.DataFrame, seed: int = 42, dup_rate: float = 0.2) -> pd.Da
     return pd.DataFrame(rows)
 
 
-def pages_from_documents(docs: pd.DataFrame, seed: int = 42
-                         ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Deterministically lift the driver's ``documents`` table into the
-    engine's input shape: (pages, cdx). Each document becomes one
-    Guardian-shaped WARC page whose articleBody paragraphs are the
-    document text, so the full crawl pipeline (dedup -> fetch -> extract)
-    can run over driver-provided data; cdx adds 1-3 captures per URL with
-    varying status/length/timestamp. Same docs + seed -> identical bytes."""
-    rng = random.Random(seed + 3)
-    pages_rows, cdx_rows = [], []
-    for rec in docs.sort_values("doc_id").itertuples(index=False):
-        i = int(rec.doc_id)
-        host = f"{rec.source}.news.test"
-        url = f"https://{host}/{rec.lang}/{i}/story"
-        if i % 17 == 0:
-            url = url.replace("https://", "https://www.")
-        elif i % 19 == 0:
-            url += "/"
-        ts = _EPOCH + timedelta(hours=i)
-        words = str(rec.text).split()
-        paras = "".join(
-            f"<p>{' '.join(words[j:j + 12])}</p>" for j in range(0, len(words), 12)
-        ) or "<p>empty</p>"
-        title = f"Doc {i} report"
-        pub = ts.strftime("%Y-%m-%dT%H:%M:%S+00:00")
-        html = (
-            "<!DOCTYPE html><html><body>"
-            f'<h1 class="content__headline">{title}</h1>'
-            f'<time itemprop="datePublished" datetime="{pub}">{pub}</time>'
-            f'<a rel="author" href="/profile/a{i}">{AUTHORS[i % len(AUTHORS)]}</a>'
-            f'<div itemprop="articleBody">{paras}</div>'
-            "</body></html>"
-        )
-        blob = _warc_wrap(html, url, f"{ts:%Y%m%d%H%M%S}",
-                          [None, "utf-8", "iso-8859-1"][i % 3], gzipped=i % 10 < 9)
-        oracle = extract_from_warc_bytes(blob)
-        pages_rows.append(
-            {"url": url, "warc_ts": ts.replace(tzinfo=None), "html": blob,
-             "text": oracle["text"], "lang": rec.lang}
-        )
-        for c in range(1 + i % 3):
-            cdx_rows.append(
-                {
-                    "urlkey": url.split("//", 1)[-1],
-                    "timestamp": f"{ts + timedelta(days=37 * c):%Y%m%d%H%M%S}",
-                    "url": url,
-                    "mime": "text/html",
-                    "mime_detected": "text/html" if (i + c) % 7 else "application/pdf",
-                    "status": "200" if (i + c) % 11 else "404",
-                    "digest": f"B32{(i * 2654435761 + c) % 10**12:012d}",
-                    "length": str(rng.randint(2_000, 80_000)),
-                    "offset": str(rng.randint(0, 10**9)),
-                    "filename": f"crawl-data/{CRAWLS[(i + c) % len(CRAWLS)]}/seg.warc.gz",
-                    "crawl": CRAWLS[(i + c) % len(CRAWLS)],
-                    "page": i // 100,
-                    "line_no": i * 3 + c,
-                }
-            )
-    return pd.DataFrame(pages_rows), pd.DataFrame(cdx_rows)
-
-
 def gen_robots(seed: int = 42) -> pd.DataFrame:
     """Per-host politeness rules (north-rule addition; FIXTURES.md section 4)."""
     rng = random.Random(seed + 2)

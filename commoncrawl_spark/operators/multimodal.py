@@ -2,10 +2,10 @@
 
 The Spark-side shape is real and tested — schemas, Arrow batch flow,
 mapInPandas signatures, partitioning — while the actual codec step is
-STUBBED: this container has no image/audio libraries, so ``decode=True``
-raises NotImplementedError and the default path computes deterministic
-fake features (md5-derived) that exercise the identical plumbing. Swap
-``_fake_decode`` for PIL/librosa/pyav in deployment; nothing else changes.
+STUBBED: no image/audio library is a dependency, so decoding computes
+deterministic fake features (md5-derived) that exercise the identical
+plumbing. Swap ``_fake_decode`` for PIL/librosa/pyav in deployment;
+nothing else changes.
 
 Batch-shape rules baked in here:
 - binary payloads ride ArrayType-free BinaryType columns; Arrow moves
@@ -14,9 +14,8 @@ Batch-shape rules baked in here:
   because payloads are fat);
 - metadata extraction that needs no codec (byte length, magic bytes,
   container sniff) stays JVM-side — never pay the Python hop for it;
-- frame sampling / feature extraction is mapInPandas (one in-out batch
-  stream per partition), not a scalar UDF, so one input row may emit
-  many output rows (frames) without an explode shuffle.
+- feature extraction and resizing are mapInPandas (one in-out batch
+  stream per partition), not scalar UDFs.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -90,16 +88,9 @@ DECODED_SCHEMA = T.StructType(
 
 
 def decode_media(df: DataFrame, bin_col: str = "media",
-                 id_col: str = "doc_id", decode: bool = False) -> DataFrame:
-    """Decode/feature-extract via mapInPandas. ``decode=True`` is the real
-    codec path — NotImplementedError here (no image/audio libs in this
-    environment); the default exercises identical plumbing with
-    deterministic fake features."""
-    if decode:
-        raise NotImplementedError(
-            "real media decoding needs PIL/librosa/pyav — not available in "
-            "this environment; deploy-time drop-in replaces _fake_decode"
-        )
+                 id_col: str = "doc_id") -> DataFrame:
+    """Decode/feature-extract via mapInPandas, with deterministic fake
+    features standing in for the codec (see ``_fake_decode``)."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -109,37 +100,6 @@ def decode_media(df: DataFrame, bin_col: str = "media",
             yield out
 
     return df.select(id_col, bin_col).mapInPandas(run, DECODED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_n: int = 4, bin_col: str = "media",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Frame sampling plumbing: one input row fans out to ceil(F/every_n)
-    frame rows inside the partition (no explode shuffle). Frames here are
-    byte-slices of the payload — the real codec slot is the same loop."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                payload = payload or b""
-                n = _fake_decode(payload)["n_frames"]
-                step = max(len(payload) // max(n, 1), 1)
-                for f in range(0, n, every_n):
-                    ids.append(doc_id)
-                    idxs.append(f)
-                    frames.append(payload[f * step:(f + 1) * step])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, bin_col).mapInPandas(run, FRAME_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -183,20 +143,6 @@ def resize_media(df: DataFrame, width: int, height: int,
                 out, columns=["doc_id", "width", "height", "media"])
 
     return df.select(id_col, bin_col).mapInPandas(run, RESIZED_SCHEMA)
-
-
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def embed_media_udf(payloads: pd.Series) -> pd.Series:
-    """Deterministic FAKE embedding (16-dim, md5-seeded) — the Arrow batch
-    path a real vision/audio encoder would use."""
-
-    def emb(payload):
-        h = hashlib.md5(payload or b"").digest()
-        rng = np.random.default_rng(int.from_bytes(h[:8], "big"))
-        v = rng.standard_normal(16).astype(np.float32)
-        return (v / np.linalg.norm(v)).tolist()
-
-    return payloads.map(emb)
 
 
 def ahash_col(bin_col: Column, bits: int = 32) -> Column:

@@ -70,6 +70,25 @@ FRONTIER_SCHEMA = T.StructType(
 PRIORITY = ("crawl_rank", "page", "line_no")
 
 
+def _frontier_rows(df: DataFrame, crawl_rank: Column | int,
+                  page: Column | int = 0, line_no: Column | int = 0
+                  ) -> DataFrame:
+    """``df`` (url, url_sha1, host) projected onto FRONTIER_SCHEMA's
+    columns: the given priority triple cast to int, a fresh row
+    (``attempt`` 0) eligible from round 0."""
+    def as_int(v: Column | int) -> Column:
+        return (v if isinstance(v, Column) else F.lit(v)).cast("int")
+
+    return df.select(
+        "url", "url_sha1", "host",
+        as_int(crawl_rank).alias("crawl_rank"),
+        as_int(page).alias("page"),
+        as_int(line_no).alias("line_no"),
+        F.lit(0).alias("attempt"),
+        F.lit(0).alias("not_before_round"),
+    )
+
+
 class CrawlJob:
     """Checkpoint-resumable crawl over a pages table.
 
@@ -177,22 +196,12 @@ class CrawlJob:
             )
             ranked = best.join(F.broadcast(ranks), "crawl")
 
-        frontier = (
-            with_host(with_url_key(ranked))
-            .select(
-                "url", "url_sha1", "host", "crawl_rank",
-                F.col("page").cast("int").alias("page"),
-                F.col("line_no").cast("int").alias("line_no"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).alias("not_before_round"),
-            )
-        )
+        frontier = _frontier_rows(
+            with_host(with_url_key(ranked)), F.col("crawl_rank"),
+            F.col("page"), F.col("line_no"))
         frontier = self._filter_unseen(frontier)
         self.frontier.overwrite(frontier, {"round": self.next_round()})
-        if not self.seen.exists():
-            self.seen.overwrite(
-                self.spark.createDataFrame([], SEEN_SCHEMA), {"round": -1}
-            )
+        self._ensure_seen()
         return self.frontier.read(self.spark).count()
 
     def seed_from_feeds(
@@ -228,15 +237,7 @@ class CrawlJob:
             F.datediff(F.lit(ref_date).cast("date"),
                        F.col("published").cast("date")),
             F.lit(99999)).cast("int")
-        rows = cand.select(
-            "url", "url_sha1", "host",
-            F.lit(0).alias("crawl_rank"),
-            staleness.alias("page"),
-            F.lit(0).alias("line_no"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).alias("not_before_round"),
-        )
-        rows = self._filter_unseen(rows)
+        rows = self._filter_unseen(_frontier_rows(cand, 0, staleness))
         existing = self.frontier.read_or_empty(self.spark, FRONTIER_SCHEMA)
         merged = dedup_first_seen(
             existing.unionByName(rows.select(
@@ -246,11 +247,15 @@ class CrawlJob:
         )
         self.frontier.overwrite(merged, {"round": self.next_round(),
                                          "seeded_from": "feeds"})
+        self._ensure_seen()
+        return self.frontier.read(self.spark).count()
+
+    def _ensure_seen(self) -> None:
+        """Create the seen table empty (round -1) if no seed made it yet."""
         if not self.seen.exists():
             self.seen.overwrite(
                 self.spark.createDataFrame([], SEEN_SCHEMA), {"round": -1}
             )
-        return self.frontier.read(self.spark).count()
 
     # -- seen-set membership -----------------------------------------------------
 
@@ -345,14 +350,8 @@ class CrawlJob:
         if requeue:
             rnd = self.next_round()
             frontier = self._read_frontier()
-            next_rank = (frontier.agg(F.max("crawl_rank")).first()[0] or 0) + 1
-            rows = with_host(evict).select(
-                "url", "url_sha1", "host",
-                F.lit(int(next_rank)).cast("int").alias("crawl_rank"),
-                F.lit(0).cast("int").alias("page"),
-                F.lit(0).cast("int").alias("line_no"),
-                F.lit(0).cast("int").alias("attempt"),
-                F.lit(0).cast("int").alias("not_before_round"),
+            rows = _frontier_rows(
+                with_host(evict), self._next_rank(frontier),
             ).join(frontier.select("url_sha1"), "url_sha1", "left_anti")
             self.frontier.overwrite(
                 frontier.unionByName(rows), {"round": rnd, "recrawl": n})
@@ -408,6 +407,11 @@ class CrawlJob:
         if "not_before_round" not in df.columns:
             df = df.withColumn("not_before_round", F.lit(0).cast("int"))
         return df
+
+    @staticmethod
+    def _next_rank(frontier: DataFrame) -> int:
+        """The crawl_rank below every queued row: max + 1 (1 if empty)."""
+        return (frontier.agg(F.max("crawl_rank")).first()[0] or 0) + 1
 
     # -- round bookkeeping -------------------------------------------------------
 
@@ -623,15 +627,8 @@ class CrawlJob:
                 self._filter_unseen(candidate_links(fetched))
                 .join(remaining.select("url_sha1"), "url_sha1", "left_anti")
             )
-            next_rank = (frontier.agg(F.max("crawl_rank")).first()[0] or 0) + 1
-            new_rows = with_host(cands).select(
-                "url", "url_sha1", "host",
-                F.lit(int(next_rank)).cast("int").alias("crawl_rank"),
-                F.lit(0).cast("int").alias("page"),
-                F.lit(0).cast("int").alias("line_no"),
-                F.lit(0).cast("int").alias("attempt"),
-                F.lit(0).cast("int").alias("not_before_round"),
-            ).persist()
+            new_rows = _frontier_rows(
+                with_host(cands), self._next_rank(frontier)).persist()
             n_discovered = new_rows.count()
             remaining = remaining.unionByName(new_rows)
         # one aggregate job per persisted frame instead of five count()

@@ -97,9 +97,3 @@ def get_spark(
     except Exception:  # already added in a reused session
         pass
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -43,10 +43,3 @@ def read_cdx_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("length_num", F.col("length").try_cast("long")).withColumn(
         "offset_num", F.col("offset").try_cast("long")
     )
-
-
-def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    if "mime-detected" in df.columns:
-        df = df.withColumnRenamed("mime-detected", "mime_detected")
-    return df

@@ -211,20 +211,29 @@ class SnapshotTable:
             delete_key = prev.get("delete_key")
         else:
             delete_files, delete_key = [], None
-        manifest = {
-            "id": new_id,
-            "parent": parent,
-            "operation": operation,
-            "files": files,
-            "partition_by": list(self.partition_by),
-            "stats_by": list(self.stats_by),
-            "file_stats": file_stats if self.stats_by else {},
-            "bloom_by": list(self.bloom_by),
-            "file_blooms": file_blooms if self.bloom_by else {},
-            "delete_files": delete_files,
-            "delete_key": delete_key,
-            "metadata": metadata or {},
-        }
+        return self._publish(
+            parent, operation, metadata,
+            files=files,
+            partition_by=list(self.partition_by),
+            stats_by=list(self.stats_by),
+            file_stats=file_stats if self.stats_by else {},
+            bloom_by=list(self.bloom_by),
+            file_blooms=file_blooms if self.bloom_by else {},
+            delete_files=delete_files,
+            delete_key=delete_key,
+        )
+
+    def _publish(self, parent: int | None, operation: str,
+                 metadata: dict[str, Any] | None, **fields: Any) -> int:
+        """Publish snapshot ``parent + 1``: write its manifest
+        ``v<N>.json``, then repoint ``LATEST`` at it, each through a tmp
+        file and an atomic ``os.replace``. Callers write the data files
+        first, so a crash at any point leaves ``LATEST`` on a complete
+        snapshot. ``fields`` are the manifest body between ``operation``
+        and ``metadata``, in manifest key order."""
+        new_id = 0 if parent is None else parent + 1
+        manifest = {"id": new_id, "parent": parent, "operation": operation,
+                    **fields, "metadata": metadata or {}}
         tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -235,6 +244,21 @@ class SnapshotTable:
             fh.write(str(new_id))
         os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
         return new_id
+
+    @staticmethod
+    def _carried(prev: dict[str, Any]) -> dict[str, Any]:
+        """The manifest body of snapshot ``prev``, carried unchanged into
+        a commit that writes no data files (delete, retag)."""
+        return {
+            "files": list(prev["files"]),
+            "partition_by": list(prev.get("partition_by", ())),
+            "stats_by": list(prev.get("stats_by", ())),
+            "file_stats": prev.get("file_stats") or {},
+            "bloom_by": list(prev.get("bloom_by", ())),
+            "file_blooms": prev.get("file_blooms") or {},
+            "delete_files": list(prev.get("delete_files", ())),
+            "delete_key": prev.get("delete_key"),
+        }
 
     def _collect_file_stats(self, spark: SparkSession,
                             commit_dir: str) -> dict[str, Any]:
@@ -516,29 +540,10 @@ class SnapshotTable:
         ddir = f"d{new_id}-{uuid.uuid4().hex[:8]}"
         keys.select(key_col).distinct().write.mode("overwrite").parquet(
             os.path.join(self._data_dir, ddir))
-        manifest = {
-            "id": new_id,
-            "parent": parent,
-            "operation": "delete",
-            "files": list(prev["files"]),
-            "partition_by": list(prev.get("partition_by", ())),
-            "stats_by": list(prev.get("stats_by", ())),
-            "file_stats": prev.get("file_stats") or {},
-            "bloom_by": list(prev.get("bloom_by", ())),
-            "file_blooms": prev.get("file_blooms") or {},
-            "delete_files": list(prev.get("delete_files", ())) + [ddir],
-            "delete_key": key_col,
-            "metadata": metadata or {},
-        }
-        tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snap_dir, f"v{new_id}.json"))
-        tmp_ptr = os.path.join(self._snap_dir, ".LATEST.tmp")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(str(new_id))
-        os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
-        return new_id
+        fields = self._carried(prev)
+        fields["delete_files"].append(ddir)
+        fields["delete_key"] = key_col
+        return self._publish(parent, "delete", metadata, **fields)
 
     def retag(self, metadata: dict[str, Any] | None = None) -> int:
         """Metadata-only commit: a new snapshot REFERENCING the current
@@ -550,31 +555,8 @@ class SnapshotTable:
         if parent is None:
             raise FileNotFoundError(
                 f"table {self.root} has no snapshot to retag")
-        prev = self.snapshot(parent)
-        new_id = parent + 1
-        manifest = {
-            "id": new_id,
-            "parent": parent,
-            "operation": "retag",
-            "files": list(prev["files"]),
-            "partition_by": list(prev.get("partition_by", ())),
-            "stats_by": list(prev.get("stats_by", ())),
-            "file_stats": prev.get("file_stats") or {},
-            "bloom_by": list(prev.get("bloom_by", ())),
-            "file_blooms": prev.get("file_blooms") or {},
-            "delete_files": list(prev.get("delete_files", ())),
-            "delete_key": prev.get("delete_key"),
-            "metadata": metadata or {},
-        }
-        tmp = os.path.join(self._snap_dir, f".v{new_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snap_dir, f"v{new_id}.json"))
-        tmp_ptr = os.path.join(self._snap_dir, ".LATEST.tmp")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(str(new_id))
-        os.replace(tmp_ptr, os.path.join(self._snap_dir, "LATEST"))
-        return new_id
+        return self._publish(parent, "retag", metadata,
+                             **self._carried(self.snapshot(parent)))
 
     # -- read ----------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
