@@ -24,7 +24,12 @@ single-JVM sandboxes.
   it uses reliable ``DataFrame.checkpoint``: blocks are written to the
   fault-tolerant store and survive executor loss. Pair it with
   ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
-  reference-collected checkpoints are deleted from the store.
+  reference-collected checkpoints are deleted from the store. A reliable
+  checkpoint writes its files in a job of its own, which recomputes the
+  plan from lineage; so the frame is persisted first, and that job reads
+  the cached blocks — every cut computes its subtree ONCE, and a
+  nondeterministic frame's checkpoint holds the same rows its first
+  consumer saw.
 - otherwise (the sandbox / ``local[*]`` case) it falls back to
   ``localCheckpoint`` — same semantics, no extra I/O, acceptable
   because a single-JVM "cluster" cannot lose an executor without
@@ -66,7 +71,17 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     else ``localCheckpoint``. ``eager=True`` (default, matching
     ``localCheckpoint``'s default) triggers the job immediately;
     ``eager=False`` defers materialization to the first action.
+
+    In reliable mode ``df`` is persisted before the checkpoint, so the
+    file-writing job reads cached blocks instead of recomputing. An
+    eager cut unpersists once the files are written; a lazy cut cannot
+    know when that happens, so its cached blocks stay until the caller
+    unpersists ``df`` (or the session ends).
     """
     if checkpoint_dir_configured(df):
-        return df.checkpoint(eager=eager)
+        df.persist()
+        out = df.checkpoint(eager=eager)
+        if eager:
+            df.unpersist()
+        return out
     return df.localCheckpoint(eager=eager)

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen_set import anti_join_seen
+from .seen_set import anti_join_seen, key_generation
 from ..materialize import materialize as _materialize
 
 _ASSOC = 4            # slots per cuckoo bucket (the 2014 paper's sweet spot)
@@ -328,7 +328,7 @@ class CuckooSeenSet:
         self.max_generations = max_generations
         spark = seen.sparkSession
         self._P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        self._gens = [self._new_generation(seen, checkpoint=False)]
+        self._gens = [key_generation(seen, key, self._P, stable=True)]
         self._n_keys = self._gens[0].count()
         self.cuckoos = build_cuckoo_table(
             self.seen, n_buckets, headroom, key).persist()
@@ -346,15 +346,6 @@ class CuckooSeenSet:
         row = self.cuckoos.agg(
             (F.sum("n_slots") * _ASSOC).alias("cap")).first()
         return int(row["cap"] or 0)
-
-    def _new_generation(self, keys_df: DataFrame,
-                        checkpoint: bool = True) -> DataFrame:
-        g = keys_df.select(self.key)
-        if checkpoint:
-            g = g.transform(_materialize)
-        g = g.repartition(self._P, self.key).persist()
-        g.count()
-        return g
 
     def _edit_blobs(self, delta: DataFrame, mode: str) -> DataFrame:
         """(delta x blobs) cogroup: per touched bucket, decode the blob,
@@ -422,13 +413,19 @@ class CuckooSeenSet:
             survivors = survivors.join(g, self.key, "left_anti")
         return definitely_new.unionByName(survivors)
 
-    def add(self, new_keys: DataFrame) -> None:
+    def add(self, new_keys: DataFrame, n_new: int | None = None) -> None:
         """Extend the set: the delta becomes a new generation and its
         fingerprints are inserted into the existing blobs in place —
-        only delta-sized data moves. Past ~85% load, rebuild resized."""
-        delta = self._new_generation(new_keys)
+        only delta-sized data moves. Past ~85% load, rebuild resized.
+        ``n_new`` declares ``new_keys`` a committed table's own files
+        holding that many keys (as ``BloomSeenSet.add``): no lineage
+        cut, no counting job, and an empty delta is a no-op."""
+        if n_new == 0:
+            return
+        delta = key_generation(new_keys, self.key, self._P,
+                               stable=n_new is not None)
         self._gens.append(delta)
-        self._n_keys += delta.count()
+        self._n_keys += n_new if n_new is not None else delta.count()
         if len(self._gens) > self.max_generations:
             self._compact()
         if self._n_keys > 0.85 * self._capacity:
@@ -467,7 +464,7 @@ class CuckooSeenSet:
         removed.unpersist()
 
     def _compact(self) -> None:
-        merged = self._new_generation(self.seen, checkpoint=True)
+        merged = key_generation(self.seen, self.key, self._P, stable=False)
         for g in self._gens:
             g.unpersist()
         self._gens = [merged]

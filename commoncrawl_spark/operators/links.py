@@ -66,37 +66,45 @@ def absolutize_col(href: Column, src: Column) -> Column:
     )
 
 
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """pages(url, html: binary) -> (src_url, href, abs_url) edge table.
+def page_hrefs(html: Column) -> Column:
+    """Every ``<a href>`` value in the page bytes, as one array.
 
     The html bytes are interpreted best-effort via cast-to-string (a
     tolerant UTF8String wrap — unlike ``decode``, it never throws on
     non-UTF-8 or gzipped payloads, which real WARC corpora contain; the
     regex simply finds no links in binary noise). Byte-exact charset
     handling stays in the extraction operator where it matters."""
-    text = F.col(html_col).cast("string")
+    text = html.cast("string")
     # three codegen regex passes (double-quoted, single-quoted, unquoted
     # values); discovery is set-shaped downstream, so pass order is
     # irrelevant. Known over-approximations, acceptable for discovery and
     # gated later by robots/seen: hrefs inside comments or <script> string
     # literals are extracted too, and a tag carrying several href
     # attributes yields each of them (browsers keep the first).
-    hrefs = F.concat(
+    return F.concat(
         F.regexp_extract_all(text, F.lit(_HREF_RE_DQ), F.lit(1)),
         F.regexp_extract_all(text, F.lit(_HREF_RE_SQ), F.lit(1)),
         F.regexp_extract_all(text, F.lit(_HREF_RE_UQ), F.lit(1)),
     )
-    exploded = pages.select(
-        F.col(url_col).alias("src_url"), F.explode(hrefs).alias("href")
-    )
+
+
+def _resolve_edges(pages: DataFrame, src: Column, hrefs: Column) -> DataFrame:
+    """(src_url, href, abs_url) per fetchable href of each page."""
+    exploded = pages.select(src.alias("src_url"), F.explode(hrefs).alias("href"))
     out = exploded.withColumn(
         "abs_url", absolutize_col(F.col("href"), F.col("src_url"))
     )
     return out.filter(F.col("abs_url").isNotNull())
+
+
+def extract_links(
+    pages: DataFrame,
+    html_col: str = "html",
+    url_col: str = "url",
+) -> DataFrame:
+    """pages(url, html: binary) -> (src_url, href, abs_url) edge table
+    (hrefs by :func:`page_hrefs`)."""
+    return _resolve_edges(pages, F.col(url_col), page_hrefs(F.col(html_col)))
 
 
 def discover_frontier_candidates(
@@ -127,9 +135,21 @@ def candidate_links(
     """Discovered links as canonical-key-deduped frontier candidates
     (url_sha1, url) — membership filtering is the caller's (so CrawlJob
     can route it through its cross-round Bloom state)."""
+    return _keyed_candidates(extract_links(pages, html_col, url_col))
+
+
+def href_candidates(pages: DataFrame, hrefs_col: str = "hrefs",
+                    url_col: str = "url") -> DataFrame:
+    """:func:`candidate_links` over href arrays already taken from the
+    html by :func:`page_hrefs` — for a round that extracts them in the
+    same pass as the articles and then drops the html."""
+    return _keyed_candidates(
+        _resolve_edges(pages, F.col(url_col), F.col(hrefs_col)))
+
+
+def _keyed_candidates(links: DataFrame) -> DataFrame:
     from .seen_set import with_url_key
 
-    links = extract_links(pages, html_col, url_col)
     return (
         with_url_key(links.select(F.col("abs_url").alias("url")))
         .groupBy("url_sha1")

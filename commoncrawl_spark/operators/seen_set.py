@@ -20,10 +20,11 @@ Python sets. The engine's key is ``sha1(canonical_punycode_url)``
   removed exactly; false negatives are impossible (property-tested), so
   the composition is exact while the anti-join shuffle shrinks ~100x.
 
-The blob table is a plain DataFrame, so a long-lived crawl keeps it as a
-snapshot table and rebuilds only buckets whose key count changed
-(``build_bloom_table`` over the delta's buckets) instead of re-scanning
-10^10 keys per round.
+A long-lived crawl keeps the blobs as executor-side state
+(``BloomSeenSet``) and extends them with delta-sized work: blobs are sized
+with headroom, each round's new keys are OR-ed into them, and a bucket is
+rebuilt from its key history only when it outgrows its capacity — never a
+re-scan of 10^10 keys per round.
 """
 
 from __future__ import annotations
@@ -91,12 +92,54 @@ def _key_indices(keys: pd.Series, m: int, k: int) -> np.ndarray:
     return out
 
 
+def _bloom_capacity(m_bits: int, fp_rate: float) -> int:
+    """Keys a blob of ``m_bits`` holds within ``fp_rate`` (the inverse of
+    :func:`_bloom_params`' sizing, before its power-of-two rounding)."""
+    return int(m_bits * math.log(2) ** 2 / -math.log(fp_rate))
+
+
+def _fold_keys(bits: np.ndarray, keys: pd.Series, m: int, k: int) -> None:
+    """OR the k bit positions of every key into ``bits`` in place."""
+    idx = _key_indices(keys, m, k).ravel()
+    np.bitwise_or.at(bits, idx // 8, (1 << (idx % 8)).astype(np.uint8))
+
+
+def _blob_row(bucket: int, m: int, k: int, n_keys: int,
+              bits: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"bucket": [bucket], "m_bits": [m], "k_hashes": [k],
+                         "n_keys": [n_keys], "bloom": [bits.tobytes()]})
+
+
+def _fresh_blob(bucket: int, keys: pd.Series, fp_rate: float,
+                headroom: float) -> pd.DataFrame:
+    """The blob of one bucket's keys, sized for ``headroom`` times as
+    many keys (1.0 = exactly these keys at ``fp_rate``)."""
+    m, k = _bloom_params(int(len(keys) * headroom), fp_rate)
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    _fold_keys(bits, keys, m, k)
+    return _blob_row(bucket, m, k, len(keys), bits)
+
+
+BLOOM_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("m_bits", T.LongType()),
+        T.StructField("k_hashes", T.IntegerType()),
+        T.StructField("n_keys", T.LongType()),
+        T.StructField("bloom", T.BinaryType()),
+    ]
+)
+
+
 def build_bloom_table(seen: DataFrame, n_buckets: int = 64,
                       fp_rate: float = 0.01,
                       key: str = "url_sha1",
-                      bucket_expr: Column | None = None) -> DataFrame:
+                      bucket_expr: Column | None = None,
+                      headroom: float = 1.0) -> DataFrame:
     """One Bloom blob per hash bucket. Bucketing by xxhash64 spreads even a
     single-host corpus uniformly (keys are sha1 hex — already uniform).
+    ``headroom`` > 1 sizes each blob for that many times its keys, so
+    later keys can be OR-ed in within ``fp_rate`` (``BloomSeenSet.add``).
 
     ``bucket_expr`` overrides the default ``pmod(xxhash64(key), P)``
     bucket assignment — for callers that already partition their seen
@@ -108,36 +151,15 @@ def build_bloom_table(seen: DataFrame, n_buckets: int = 64,
     agree."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        ks = pdf[key]
-        m, k = _bloom_params(len(ks), fp_rate)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        idx = _key_indices(ks, m, k).ravel()
-        np.bitwise_or.at(bits, idx // 8, (1 << (idx % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "m_bits": [m],
-                "k_hashes": [k],
-                "n_keys": [len(ks)],
-                "bloom": [bits.tobytes()],
-            }
-        )
+        return _fresh_blob(int(pdf["bucket"].iloc[0]), pdf[key], fp_rate,
+                           headroom)
 
     bucketed = seen.select(key).withColumn(
         "bucket",
         (bucket_expr if bucket_expr is not None
          else F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))).cast("int")
     )
-    schema = T.StructType(
-        [
-            T.StructField("bucket", T.IntegerType()),
-            T.StructField("m_bits", T.LongType()),
-            T.StructField("k_hashes", T.IntegerType()),
-            T.StructField("n_keys", T.LongType()),
-            T.StructField("bloom", T.BinaryType()),
-        ]
-    )
-    return bucketed.groupBy("bucket").applyInPandas(build, schema)
+    return bucketed.groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
 
 
 def bloom_prefilter(candidates: DataFrame, bloom_table: DataFrame,
@@ -227,32 +249,67 @@ def anti_join_seen_scalable(candidates: DataFrame, seen: DataFrame,
     return result
 
 
+def key_generation(keys: DataFrame, key: str, n_partitions: int,
+                   stable: bool) -> DataFrame:
+    """One generation of seen keys, hash-partitioned on the key and
+    pinned (persisted lazily: the first job that reads it caches it).
+
+    ``stable=True`` means ``keys`` reads stable storage — a committed
+    table's own files — so recomputing it gives the same keys and it
+    needs no lineage cut. Any other delta is cut first: its lineage
+    reaches back through the round's fetch (slow to recompute and, for a
+    live HTTP transport, nondeterministic). The repartition comes after
+    the cut, which erases outputPartitioning (Scan ExistingRDD); the
+    partitioned layout is what lets every later verify join reuse the
+    generation without an exchange."""
+    g = keys.select(key)
+    if not stable:
+        g = g.transform(_materialize)
+    return g.repartition(n_partitions, key).persist()
+
+
+# BloomSeenSet sizes blobs for this many times their keys: a bucket is
+# rebuilt from its history once its keys double, so each key is refolded
+# O(1) times over its life while blob memory stays within 2x
+_HEADROOM = 2.0
+
+
 class BloomSeenSet:
-    """Long-lived seen-set state: blobs built ONCE, probed every round.
+    """Long-lived seen-set state: blobs built ONCE, extended by deltas,
+    probed every round.
 
     A crawl probes the seen set thousands of times but extends it
     incrementally, so the steady-state cost that matters is the PROBE,
-    not the build. Two pieces of persisted executor-side state make a
-    round cheap:
+    not the build. Two pieces of executor-side state make a round cheap:
 
-    * the per-bucket Bloom blob table (rebuilt per-touched-bucket on
-      ``add``), which drops definitely-new candidates before any join;
+    * the per-bucket Bloom blob table, sized for ``_HEADROOM`` times the
+      keys it is built from, which drops definitely-new candidates before
+      any join. ``add`` OR-s only the DELTA's keys into it: a Bloom filter's
+      bits are a pure function of (m, k, key set), so folding keys into a
+      blob of fixed size gives exactly the bits a build of the union at
+      that size would. Only a bucket whose key count outgrows its
+      capacity (the keys its size holds within ``fp_rate``) is rebuilt
+      from its key history — at 2x headroom each key is refolded O(1)
+      times over its life. (Rebuilding every *touched* bucket would not
+      be delta-sized: a delta above roughly ``n_buckets * ln(n_buckets)``
+      keys touches every bucket.)
     * the seen KEYS, held as an LSM-style list of GENERATIONS, each
-      persisted pre-partitioned on the key. A hash-partitioned cached
-      frame satisfies the verify join's distribution requirement
-      as-is, so the per-round exact check exchanges ONLY the bloom
-      survivors — the 10^10-key history is never reshuffled (pinned by
+      persisted pre-partitioned on the key (:func:`key_generation`). A
+      hash-partitioned cached frame satisfies the verify join's
+      distribution requirement as-is, so the per-round exact check
+      exchanges ONLY the bloom survivors — the 10^10-key history is never
+      reshuffled (pinned by
       ``test_bloom_seen_set_verify_never_reshuffles_seen``). ``add``
       shuffles just the round's delta into a new generation; once
-      ``max_generations`` accumulate they compact into one (a full
-      reshuffle amortized over that many rounds). ``localCheckpoint``
-      would be the usual lineage cut here, but it erases
-      outputPartitioning (Scan ExistingRDD), which re-introduces the
-      full-history exchange — so generations cut lineage FIRST
-      (checkpoint the slim delta), then repartition + persist.
+      ``max_generations`` accumulate they compact into one, and the
+      blobs are rebuilt fresh from it (a full pass amortized over that
+      many rounds).
 
+    A delta read back from the seen table's own commit (``add(...,
+    n_new=...)``) is stable storage: no lineage cut and no counting job.
     Everything stays distributed (DataFrames, executor-side persist);
-    nothing is collected to the driver.
+    only per-bucket key counts and blob sizes (``n_buckets`` small rows)
+    reach the driver.
     """
 
     def __init__(self, seen: DataFrame, n_buckets: int = 64,
@@ -263,11 +320,10 @@ class BloomSeenSet:
         spark = seen.sparkSession
         self._P = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # the base generation usually comes from stable storage (a
-        # snapshot table) — deterministic lineage, no checkpoint needed
-        self._gens = [self._new_generation(seen, checkpoint=False)]
-        self.blooms = build_bloom_table(
-            self.seen, n_buckets, fp_rate, key).persist()
-        self.blooms.count()  # materialize so every probe reuses the cache
+        # snapshot table) — deterministic lineage, no checkpoint needed.
+        # Blobs and base are built by the first probe that reads them.
+        self._gens = [key_generation(seen, key, self._P, stable=True)]
+        self.blooms = self._build(self.seen).persist()
         self._last_probe: DataFrame | None = None
 
     @property
@@ -278,21 +334,9 @@ class BloomSeenSet:
             out = out.unionByName(g)
         return out
 
-    def _new_generation(self, keys_df: DataFrame,
-                        checkpoint: bool = True) -> DataFrame:
-        """Materialize keys hash-partitioned on the key and pin them.
-
-        Deltas are checkpointed first: their lineage reaches back through
-        the round's transport fetch (slow to recompute and, for a live
-        HTTP transport, nondeterministic). The repartition then restores
-        the outputPartitioning the checkpoint erased, and persist pins
-        the partitioned layout for every later verify join."""
-        g = keys_df.select(self.key)
-        if checkpoint:
-            g = g.transform(_materialize)
-        g = g.repartition(self._P, self.key).persist()
-        g.count()
-        return g
+    def _build(self, keys: DataFrame) -> DataFrame:
+        return build_bloom_table(keys, self.n_buckets, self.fp_rate,
+                                 self.key, headroom=_HEADROOM)
 
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -323,49 +367,84 @@ class BloomSeenSet:
             survivors = survivors.join(g, self.key, "left_anti")
         return definitely_new.unionByName(survivors)
 
-    def add(self, new_keys: DataFrame) -> None:
-        """Extend the set; only blobs of touched buckets are rebuilt
-        (delta buckets' keys re-folded, untouched blobs carried over by
-        anti-join), and only the DELTA keys are shuffled — they become a
-        new generation; the existing history stays where it sits."""
-        new_keys = new_keys.select(self.key)
-        self._gens.append(self._new_generation(new_keys))
-        # touched buckets derive from the CHECKPOINTED generation, not
-        # the raw new_keys plan: the raw lineage can be nondeterministic
-        # (live transport) or evicted-and-recomputed, and a key set that
-        # differs between this evaluation and the generation's stored
-        # one would skip rebuilding a bucket whose blob then lacks a
-        # stored key — a Bloom false negative, the one error class the
-        # exactness contract forbids (the cuckoo twin already reads its
-        # checkpointed delta)
-        touched = self._bucket(self._gens[-1]).select("bucket").distinct()
+    def add(self, new_keys: DataFrame, n_new: int | None = None) -> None:
+        """Extend the set with delta-sized work: the delta becomes a new
+        generation (only its keys are shuffled) and its keys are OR-ed
+        into the blobs; a bucket past its capacity is rebuilt from its
+        history. ``n_new`` declares ``new_keys`` a committed table's own
+        files holding that many keys (``SnapshotTable.read_added``):
+        stable storage, so no lineage cut, and an empty delta is a
+        no-op."""
+        if n_new == 0:
+            return
+        gen = key_generation(new_keys, self.key, self._P,
+                             stable=n_new is not None)
+        self._gens.append(gen)
         if len(self._gens) > self.max_generations:
             self._compact()
-        rebuilt = build_bloom_table(
-            self._bucket(self.seen)
-            .join(F.broadcast(touched), "bucket", "left_semi")
-            .drop("bucket"),
-            self.n_buckets, self.fp_rate, self.key,
+            return
+        # fold the keys the GENERATION holds, not the raw new_keys plan:
+        # a key set that differed between the fold and the stored
+        # generation would leave a stored key out of its blob — a Bloom
+        # false negative, the one error class the exactness contract
+        # forbids
+        folded = self._fold(gen).transform(_materialize, eager=False)
+        # the materializing action: per-bucket sizes, n_buckets rows
+        full = [r["bucket"] for r in
+                folded.select("bucket", "m_bits", "n_keys").collect()
+                if r["n_keys"] > _bloom_capacity(r["m_bits"], self.fp_rate)]
+        if full:
+            rebuilt = self._build(
+                self._bucket(self.seen)
+                .filter(F.col("bucket").isin(full)).drop("bucket"))
+            folded = (folded.filter(~F.col("bucket").isin(full))
+                      .unionByName(rebuilt).transform(_materialize))
+        self._swap_blobs(folded)
+
+    def _fold(self, delta: DataFrame) -> DataFrame:
+        """(delta x blobs) cogroup: each bucket's delta keys OR-ed into
+        its blob at the blob's (m, k); a bucket without a blob gets a
+        fresh one. Buckets without delta keys pass through unchanged."""
+        keycol, fp_rate = self.key, self.fp_rate
+
+        def fold(dk: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
+            if len(dk) == 0:
+                return blob
+            bucket = int(dk["bucket"].iloc[0])
+            if len(blob) == 0:
+                return _fresh_blob(bucket, dk[keycol], fp_rate, _HEADROOM)
+            m, k = int(blob["m_bits"].iloc[0]), int(blob["k_hashes"].iloc[0])
+            bits = np.frombuffer(blob["bloom"].iloc[0], np.uint8).copy()
+            _fold_keys(bits, dk[keycol], m, k)
+            return _blob_row(bucket, m, k,
+                             int(blob["n_keys"].iloc[0]) + len(dk), bits)
+
+        return (
+            self._bucket(delta).groupBy("bucket")
+            .cogroup(self.blooms.groupBy("bucket"))
+            .applyInPandas(fold, BLOOM_SCHEMA)
         )
-        untouched = self.blooms.join(F.broadcast(touched), "bucket", "left_anti")
-        # blooms stay checkpointed, not partition-pinned: the probe
-        # cogroups them by BUCKET (n_buckets rows — that exchange is
-        # noise), and checkpointing stops plan depth and cache-loss
-        # recompute growing by one rebuild-join per round
-        blooms2 = rebuilt.unionByName(untouched).transform(_materialize)
-        old_blooms = self.blooms
-        self.blooms = blooms2
-        old_blooms.unpersist()
+
+    def _swap_blobs(self, blobs: DataFrame) -> None:
+        """Adopt ``blobs``, releasing the previous table. Folded blobs
+        stay cut, not partition-pinned: the probe cogroups them by
+        BUCKET (n_buckets rows — that exchange is noise), and the cut
+        stops plan depth and cache-loss recompute growing by one fold
+        per round."""
+        old, self.blooms = self.blooms, blobs
+        old.unpersist()
 
     def _compact(self) -> None:
         """Merge all generations into one (one full reshuffle, amortized
-        over ``max_generations`` rounds of delta-only adds). The union is
-        checkpointed so the merged generation's lineage is self-contained
-        — its ancestors' checkpoint RDDs are about to be released."""
-        merged = self._new_generation(self.seen, checkpoint=True)
+        over ``max_generations`` rounds of delta-only adds) and rebuild
+        the blobs fresh from it, which resets their headroom. The union
+        is cut so the merged generation's lineage is self-contained —
+        its ancestors' cached blocks are about to be released."""
+        merged = key_generation(self.seen, self.key, self._P, stable=False)
         for g in self._gens:
             g.unpersist()
         self._gens = [merged]
+        self._swap_blobs(self._build(merged).persist())
 
     def release(self) -> None:
         for g in self._gens:

@@ -7,8 +7,17 @@ logs (ST4: download_and_merge.py:167-171, download_warc_segments.py:73-81).
 
 One **round** =
     frontier ──robots gate──▶ polite batch (per-host budget, salted)
-            ──fetch (lookup join vs pages)──▶ extract (Arrow UDF)
-            ──commit: articles / failures / trace / metrics / seen / frontier
+            ──fetch (lookup join vs pages) + extract (Arrow UDF)──▶
+    outcome: one slim row per batch row (batch columns, _fetch_error,
+             article struct, hrefs when discovering; never html),
+             persisted, counted in ONE aggregate (the round's counters)
+            ──commit, each derived from outcome:
+              articles / failures / trace / metrics / lineage
+              / seen ──▶ seen-state add (delta read back from the commit)
+              / frontier (+ discovered links, probed against the seen set)
+
+Row counts and the frontier's max ``crawl_rank`` come from the snapshot
+manifests (recorded from the Parquet footers at commit), not Spark jobs.
 
 State lives in snapshot tables (tables.SnapshotTable — Iceberg-style
 atomic commits), so a crash at any point resumes from the last committed
@@ -89,6 +98,24 @@ def _frontier_rows(df: DataFrame, crawl_rank: Column | int,
     )
 
 
+def _outcome(fetched: DataFrame, batch_cols: Sequence[str],
+             discover_links: bool) -> DataFrame:
+    """The round's outcome from the transport's output: one row per
+    batch row with the batch columns, ``_fetch_error``, the extracted
+    ``article`` (null when the fetch failed) and, when discovering, the
+    page's ``hrefs`` — taken from the html in the same pass, since the
+    html is dropped by the extraction."""
+    from ..operators.links import page_hrefs
+
+    cols = [*batch_cols, "_fetch_error", "html"]
+    if discover_links:
+        cols.append(page_hrefs(F.col("html")).alias("hrefs"))
+    extracted = extract_articles(fetched.select(*cols))
+    return extracted.withColumn(
+        "article",
+        F.when(F.col("_fetch_error").isNull(), F.col("article")))
+
+
 class CrawlJob:
     """Checkpoint-resumable crawl over a pages table.
 
@@ -148,8 +175,11 @@ class CrawlJob:
         # — the politeness rate the reference enforced with time.sleep(0.2)
         # (fetch_guardian_fulltext.py:130), generalized per host
         self.round_seconds = round_seconds
-        t = lambda name: SnapshotTable(os.path.join(checkpoint_dir, name))  # noqa: E731
-        self.frontier = t("frontier")
+        t = lambda name, **kw: SnapshotTable(  # noqa: E731
+            os.path.join(checkpoint_dir, name), **kw)
+        # the manifest's crawl_rank bound places discovered and requeued
+        # rows below every queued one without an aggregate job
+        self.frontier = t("frontier", bounds_by=("crawl_rank",))
         self.seen = t("seen")
         self.articles = t("articles")
         self.failures = t("failures")
@@ -170,39 +200,42 @@ class CrawlJob:
 
         ``crawl_order`` fixes crawl_rank = position in the INDEXES list
         (create_tasks.py:12); default = lexicographic (CC-MAIN-YYYY-WW names
-        sort chronologically, matching the list's order).
+        sort chronologically, matching the list's order). Returns the
+        frontier size.
         """
         best = best_capture_per_url(cdx, arrival_cols=arrival_cols)
         best = best.filter(F.col("status") == "200")
-        if crawl_order is not None:
-            rank_map = F.create_map(
-                *[x for i, c in enumerate(crawl_order) for x in (F.lit(c), F.lit(i))]
-            )
+        if crawl_order is None:
+            # the handful of distinct crawls is ranked on the driver
+            # (dense rank, NULL first as Spark sorts ascending) — a
+            # window over them would have no partition. Persisted: the
+            # frontier write reuses the dedup instead of redoing it.
+            best = best.persist()
+            crawls = {r[0] for r in best.select("crawl").distinct().collect()}
+            nulls = int(None in crawls)
+            order, unlisted = sorted(crawls - {None}), 0
+        else:
             # crawls ABSENT from crawl_order rank LAST (len(order)), not
             # NULL: Spark's ascending sort puts NULLs FIRST, which would
             # silently schedule unlisted crawls ahead of every crawl the
             # caller explicitly prioritized
-            ranked = best.withColumn(
-                "crawl_rank",
-                F.coalesce(rank_map[F.col("crawl")],
-                           F.lit(len(crawl_order))).cast("int"))
-        else:
-            from pyspark.sql import Window
-
-            w = Window.orderBy("crawl")
-            ranks = (
-                best.select("crawl").distinct()
-                .withColumn("crawl_rank", (F.dense_rank().over(w) - 1).cast("int"))
-            )
-            ranked = best.join(F.broadcast(ranks), "crawl")
+            nulls, order, unlisted = 0, list(crawl_order), len(crawl_order)
+        rank = F.lit(unlisted)
+        if order:
+            rank_map = F.create_map(*[
+                x for i, c in enumerate(order)
+                for x in (F.lit(c), F.lit(i + nulls))])
+            rank = F.coalesce(rank_map[F.col("crawl")], rank)
+        ranked = best.withColumn("crawl_rank", rank.cast("int"))
 
         frontier = _frontier_rows(
             with_host(with_url_key(ranked)), F.col("crawl_rank"),
             F.col("page"), F.col("line_no"))
         frontier = self._filter_unseen(frontier)
         self.frontier.overwrite(frontier, {"round": self.next_round()})
+        best.unpersist()
         self._ensure_seen()
-        return self.frontier.read(self.spark).count()
+        return self.frontier.count(self.spark)
 
     def seed_from_feeds(
         self,
@@ -248,7 +281,7 @@ class CrawlJob:
         self.frontier.overwrite(merged, {"round": self.next_round(),
                                          "seeded_from": "feeds"})
         self._ensure_seen()
-        return self.frontier.read(self.spark).count()
+        return self.frontier.count(self.spark)
 
     def _ensure_seen(self) -> None:
         """Create the seen table empty (round -1) if no seed made it yet."""
@@ -268,17 +301,16 @@ class CrawlJob:
         join on the ~1% survivors, and ``_note_seen_keys`` extends the
         blobs incrementally instead of rebuilding from 10^10 keys."""
         if self._bloom is not None:
-            # steady state: never re-read or re-count the (10^10-row)
-            # seen table once the cross-round Bloom state exists —
-            # _note_seen_keys keeps it in sync with every commit
+            # steady state: never re-read the (10^10-row) seen table once
+            # the cross-round Bloom state exists — _note_seen_keys keeps
+            # it in sync with every commit
             return self._bloom.unseen(candidates)
-        seen = self.seen.read_or_empty(self.spark, SEEN_SCHEMA)
-        n_seen = seen.count()
+        n_seen = self.seen.count(self.spark)  # from the manifest
         if n_seen > self.bloom_threshold:
-            self._bloom = self._make_state(seen)
+            self._bloom = self._make_state(self.seen.read(self.spark))
             return self._bloom.unseen(candidates)
         if n_seen:
-            return anti_join_seen(candidates, seen)
+            return anti_join_seen(candidates, self.seen.read(self.spark))
         return candidates
 
     def _make_state(self, seen: DataFrame):
@@ -290,10 +322,14 @@ class CrawlJob:
 
         return BloomSeenSet(seen)
 
-    def _note_seen_keys(self, done_keys: DataFrame) -> None:
-        """Keep the cross-round Bloom state in sync with the seen table."""
+    def _note_seen_keys(self) -> None:
+        """Keep the cross-round filter state in sync with the seen table:
+        the round's keys are read back from the seen commit's own files —
+        stable storage, so the state's new generation needs no lineage
+        cut, and the manifest says how many keys it holds."""
         if self._bloom is not None:
-            self._bloom.add(done_keys)
+            self._bloom.add(self.seen.read_added(self.spark),
+                            n_new=self.seen.snapshot()["added_count"])
 
     def evict_for_recrawl(self, urls: DataFrame, requeue: bool = True) -> int:
         """Recrawl scheduling: make previously-fetched URLs fetchable again.
@@ -351,7 +387,7 @@ class CrawlJob:
             rnd = self.next_round()
             frontier = self._read_frontier()
             rows = _frontier_rows(
-                with_host(evict), self._next_rank(frontier),
+                with_host(evict), self._next_rank(),
             ).join(frontier.select("url_sha1"), "url_sha1", "left_anti")
             self.frontier.overwrite(
                 frontier.unionByName(rows), {"round": rnd, "recrawl": n})
@@ -408,10 +444,10 @@ class CrawlJob:
             df = df.withColumn("not_before_round", F.lit(0).cast("int"))
         return df
 
-    @staticmethod
-    def _next_rank(frontier: DataFrame) -> int:
-        """The crawl_rank below every queued row: max + 1 (1 if empty)."""
-        return (frontier.agg(F.max("crawl_rank")).first()[0] or 0) + 1
+    def _next_rank(self) -> int:
+        """The crawl_rank below every row of the committed frontier:
+        max + 1 (1 if empty), from its manifest."""
+        return (self.frontier.column_max(self.spark, "crawl_rank") or 0) + 1
 
     # -- round bookkeeping -------------------------------------------------------
 
@@ -450,6 +486,9 @@ class CrawlJob:
         crawl-ordering trace (SURVEY.md §3) is only comparable without
         discovered URLs."""
         rnd = self.next_round()
+        n_frontier = self.frontier.count(self.spark)  # from the manifest
+        if n_frontier == 0:
+            return {}  # drained
         frontier = self._read_frontier()
 
         # retry backoff (ST3): rows still backing off are not eligible
@@ -471,10 +510,39 @@ class CrawlJob:
         batch = select_polite_batch(
             gated, self.budget, self.salt_buckets, PRIORITY + ("url_sha1",),
             budget_col=budget_col,
-        ).drop("crawl_delay_s", "_budget").persist()
-        n_selected = batch.count()
+        ).drop("crawl_delay_s", "_budget")
+
+        # fetch stage (J2/S6) through the injectable transport seam; the
+        # default lookup join broadcasts the batch only under
+        # broadcast_batch_limit (size-aware — see sources.transport). The
+        # frontier's row count bounds the batch, so the join strategy is
+        # chosen without counting it first.
+        from ..sources.transport import LookupJoinTransport
+
+        transport = self.transport or LookupJoinTransport(
+            pages, self.broadcast_batch_limit, transient_fail
+        )
+        fetched = transport.fetch(batch, n_rows_hint=n_frontier)
+        # fetch and extraction as ONE pass: the html never outlives it, so
+        # the persisted outcome every commit below reads is slim. One
+        # aggregate over it materializes it and yields every counter.
+        outcome = _outcome(fetched, batch.columns, discover_links).persist()
+        ok_fetch = F.col("_fetch_error").isNull()
+        retryable = ~ok_fetch & (F.col("attempt") < self.max_retries)
+        exhausted = ~ok_fetch & (F.col("attempt") >= self.max_retries)
+        ok_text = F.col("article.error").isNull()
+        c = outcome.agg(
+            F.count(F.lit(1)).alias("selected"),
+            F.count(F.when(ok_fetch, 1)).alias("fetched"),
+            F.count(F.when(ok_fetch & ok_text, 1)).alias("extract_ok"),
+            F.count(F.when(ok_fetch & ~ok_text, 1)).alias("extract_failed"),
+            F.count(F.when(retryable, 1)).alias("retried"),
+            F.count(F.when(exhausted, 1)).alias("exhausted"),
+        ).first()
+        counters = {"round": rnd, **{k: int(v) for k, v in c.asDict().items()}}
+        n_selected = counters["selected"]
         if n_selected == 0:
-            batch.unpersist()
+            outcome.unpersist()
             # look only at rows still BACKING OFF (not_before > rnd): a
             # permanently-gated row (robots, zero budget) with
             # not_before_round = 0 must not mask waiting retries — min
@@ -491,38 +559,16 @@ class CrawlJob:
             # retag re-references the committed files instead of
             # rewriting a potentially 10^9-row table per idle round
             self.frontier.retag({"round": int(nxt)})
-            return {
-                "round": rnd, "selected": 0, "fetched": 0, "extract_ok": 0,
-                "extract_failed": 0, "retried": 0, "exhausted": 0,
-                "discovered": 0, "fast_forward_to": int(nxt),
-            }
-
-        # fetch stage (J2/S6) through the injectable transport seam; the
-        # default lookup join broadcasts the batch only under
-        # broadcast_batch_limit (size-aware — see sources.transport).
-        # persisted: consumed by the ok/fail splits, the failures commit,
-        # the per-host metrics, and counters.
-        from ..sources.transport import LookupJoinTransport
-
-        transport = self.transport or LookupJoinTransport(
-            pages, self.broadcast_batch_limit, transient_fail
-        )
-        result = transport.fetch(batch, n_rows_hint=n_selected).persist()
-        fetched = result.filter(F.col("_fetch_error").isNull()).drop("_fetch_error")
-        missing = result.filter(F.col("_fetch_error").isNotNull()).drop("html")
-
-        extracted = extract_articles(fetched).persist()
-        ok, extract_failed = split_articles(extracted)
+            return {**counters, "discovered": 0, "fast_forward_to": int(nxt)}
 
         # ---- commits (deterministic; _append_once makes replay idempotent) ----
+        ok, extract_failed = split_articles(outcome.filter(ok_fetch))
         self._append_once(
             self.articles, ok.withColumn("round", F.lit(rnd)), rnd
         )
-        retryable = missing.filter(F.col("attempt") < self.max_retries)
-        exhausted = missing.filter(F.col("attempt") >= self.max_retries)
         perm_failures = (
             extract_failed.select("url", "reason")
-            .unionByName(exhausted.select(
+            .unionByName(outcome.filter(exhausted).select(
                 "url",
                 F.coalesce(F.col("_fetch_error"), F.lit("fetch_failed"))
                 .alias("reason"),
@@ -532,32 +578,21 @@ class CrawlJob:
         self._append_once(self.failures, perm_failures, rnd)
         self._append_once(
             self.trace,
-            batch.select(
+            outcome.select(
                 F.lit(rnd).alias("round"), "host", "host_rank",
                 "crawl_rank", "page", "line_no", "url",
             ),
             rnd,
         )
-        done_keys = (
-            fetched.select("url_sha1")
-            .unionByName(exhausted.select("url_sha1"))
-        )
         per_host = (
-            batch.groupBy("host")
-            .agg(F.count("*").alias("n_selected"))
-            .join(
-                fetched.groupBy("host").agg(F.count("*").alias("n_fetched")),
-                "host", "left",
+            outcome.groupBy("host")
+            .agg(
+                F.count(F.lit(1)).alias("n_selected"),
+                F.count(F.when(ok_fetch, 1)).alias("n_fetched"),
+                F.count(F.when(~ok_fetch, 1)).alias("n_fetch_failed"),
             )
-            .join(
-                missing.groupBy("host").agg(F.count("*").alias("n_fetch_failed")),
-                "host", "left",
-            )
-            .select(
-                F.lit(rnd).alias("round"), "host", "n_selected",
-                F.coalesce("n_fetched", F.lit(0)).alias("n_fetched"),
-                F.coalesce("n_fetch_failed", F.lit(0)).alias("n_fetch_failed"),
-            )
+            .select(F.lit(rnd).alias("round"), "host", "n_selected",
+                    "n_fetched", "n_fetch_failed")
         )
         self._append_once(self.metrics, per_host, rnd)
         # per-partition lineage: which physical partition produced how many
@@ -565,7 +600,8 @@ class CrawlJob:
         # trail for a 1000-executor run; partition ids are physical, so
         # this table is observability, not part of the deterministic state)
         per_part = (
-            fetched.groupBy(F.spark_partition_id().alias("part_id"))
+            outcome.filter(ok_fetch)
+            .groupBy(F.spark_partition_id().alias("part_id"))
             .agg(
                 F.count("*").alias("n_rows"),
                 F.min("url_sha1").alias("min_key"),
@@ -575,11 +611,13 @@ class CrawlJob:
                     "min_key", "max_key")
         )
         self._append_once(self.lineage, per_part, rnd)
-        new_seen = done_keys.distinct()
-        if self._append_once(self.seen, new_seen, rnd):
+        # fetched and exhausted rows are done; retryable ones requeue
+        done = outcome.filter(ok_fetch | exhausted)
+        if self._append_once(self.seen, done.select("url_sha1").distinct(),
+                             rnd):
             # extend the cross-round Bloom state only when the table
             # actually advanced
-            self._note_seen_keys(new_seen)
+            self._note_seen_keys()
         elif self._bloom is not None:
             # replay of a round whose seen commit landed: the crash may
             # have hit BETWEEN that commit and the in-memory state
@@ -602,7 +640,7 @@ class CrawlJob:
             if self.retry_backoff else F.lit(1)
         )
         requeued = (
-            retryable
+            outcome.filter(retryable)
             .withColumn("not_before_round", (F.lit(rnd) + backoff).cast("int"))
             .withColumn("attempt", F.col("attempt") + 1)
             .select(*[f.name for f in FRONTIER_SCHEMA.fields])
@@ -612,59 +650,33 @@ class CrawlJob:
             else (lambda df: df)
         )
         remaining = (
-            frontier.join(hint(batch.select("url_sha1")), "url_sha1", "left_anti")
+            frontier.join(hint(outcome.select("url_sha1")), "url_sha1",
+                          "left_anti")
             .unionByName(requeued)
         )
         n_discovered = 0
         new_rows = None
         if discover_links:
-            from ..operators.links import candidate_links
+            from ..operators.links import href_candidates
 
             # membership through _filter_unseen so a long discovery crawl
             # pays the Bloom probe, not a per-round exact anti-join
             # against the ever-growing seen table
             cands = (
-                self._filter_unseen(candidate_links(fetched))
+                self._filter_unseen(href_candidates(outcome.filter(ok_fetch)))
                 .join(remaining.select("url_sha1"), "url_sha1", "left_anti")
             )
             new_rows = _frontier_rows(
-                with_host(cands), self._next_rank(frontier)).persist()
+                with_host(cands), self._next_rank()).persist()
             n_discovered = new_rows.count()
             remaining = remaining.unionByName(new_rows)
-        # one aggregate job per persisted frame instead of five count()
-        # jobs: at steady state a round is dominated by fixed per-job
-        # scheduling latency, so collapsing actions is the lever
-        fail = F.col("_fetch_error").isNotNull()
-        rc = result.agg(
-            F.count(F.when(~fail, 1)).alias("fetched"),
-            F.count(F.when(fail & (F.col("attempt") < self.max_retries), 1))
-            .alias("retried"),
-            F.count(F.when(fail & (F.col("attempt") >= self.max_retries), 1))
-            .alias("exhausted"),
-        ).first()
-        ec = extracted.agg(
-            F.count(F.when(F.col("article.error").isNull(), 1)).alias("ok"),
-            F.count(F.when(F.col("article.error").isNotNull(), 1))
-            .alias("failed"),
-        ).first()
-        counters = {
-            "round": rnd,
-            "selected": n_selected,
-            "fetched": int(rc["fetched"]),
-            "extract_ok": int(ec["ok"]),
-            "extract_failed": int(ec["failed"]),
-            "retried": int(rc["retried"]),
-            "exhausted": int(rc["exhausted"]),
-            "discovered": n_discovered,
-        }
+        counters["discovered"] = n_discovered
         # frontier commit LAST: it is the resume authority. Crash before this
         # line -> the whole round replays; _append_once skips re-commits.
         self.frontier.overwrite(remaining, {"round": rnd + 1, **{
             k: v for k, v in counters.items() if k != "round"
         }})
-        batch.unpersist()
-        result.unpersist()
-        extracted.unpersist()
+        outcome.unpersist()
         if new_rows is not None:  # unconditional: zero-discovery rounds too
             new_rows.unpersist()
         return counters

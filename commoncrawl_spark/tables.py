@@ -11,6 +11,13 @@ Layout:
     <root>/_snapshots/v<N>.json                        manifest: file list + metadata
     <root>/_snapshots/LATEST                           pointer file (atomic rename)
 
+Like an Iceberg manifest, each manifest also carries the rows its commit
+wrote (``added_count``), the snapshot's ``record_count`` and, for the
+``bounds_by`` columns, its ``column_bounds`` ([min, max]), summed and
+merged from the Parquet footers each commit just wrote — so row counts
+and column maxima are answered without a Spark job
+(:meth:`SnapshotTable.count`, :meth:`SnapshotTable.column_max`).
+
 Commit protocol (crash-safe, mirrors the reference's append-only logs +
 "scan outputs to rebuild state" resume at download_and_merge.py:83-102):
 data dirs are written first, then the manifest, then the LATEST pointer is
@@ -109,11 +116,29 @@ def _spark_cast_string(value: Any) -> str | None:
     return None
 
 
+def _merge_bounds(a: list, b: list) -> list:
+    """[min, max] covering both ranges; None ends are empty sides."""
+    lo = [x for x in (a[0], b[0]) if x is not None]
+    hi = [x for x in (a[1], b[1]) if x is not None]
+    return [min(lo) if lo else None, max(hi) if hi else None]
+
+
+def _merge_summaries(prev: tuple, new: tuple) -> tuple:
+    """Manifest (record_count, column_bounds) of an append: the parent
+    snapshot's summary plus the new commit's. A count or a column the
+    parent did not record (a manifest from before these fields, or a
+    merge-on-read delete since) stays unknown."""
+    (n0, b0), (n1, b1) = prev, new
+    n = n0 + n1 if n0 is not None else None
+    return n, {c: _merge_bounds(b0[c], b1[c]) for c in b1 if c in b0}
+
+
 class SnapshotTable:
     def __init__(self, root: str, partition_by: tuple[str, ...] = (),
                  stats_by: tuple[str, ...] = (),
                  bloom_by: tuple[str, ...] = (),
-                 bloom_fp_rate: float = 0.01):
+                 bloom_fp_rate: float = 0.01,
+                 bounds_by: tuple[str, ...] = ()):
         """``partition_by`` is the table's partition spec (Iceberg's
         identity-transform case): commits lay data out hive-style
         (``col=value/`` directories) so reads that filter on a
@@ -122,12 +147,17 @@ class SnapshotTable:
         touch 1/Nth of a 100 TB table. The spec is a TABLE property:
         it is recorded in every manifest and must not change between
         commits (validated), matching Iceberg's spec-per-snapshot
-        model in the single-spec case."""
+        model in the single-spec case.
+
+        ``bounds_by`` names numeric or string data columns whose
+        snapshot-wide [min, max] the manifest records from the Parquet
+        footers (no Spark job), for :meth:`column_max`."""
         self.root = root
         self.partition_by = tuple(partition_by)
         self.stats_by = tuple(stats_by)
         self.bloom_by = tuple(bloom_by)
         self.bloom_fp_rate = bloom_fp_rate
+        self.bounds_by = tuple(bounds_by)
         if self.partition_by and (self.stats_by or self.bloom_by):
             raise ValueError(
                 "stats_by/bloom_by currently require an unpartitioned "
@@ -181,6 +211,8 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(os.path.join(self._data_dir, commit_dir))
+        record_count, column_bounds = self._footer_summary(commit_dir)
+        added_count = record_count
         file_stats = (
             self._collect_file_stats(df.sparkSession, commit_dir)
             if self.stats_by else {})
@@ -209,6 +241,9 @@ class SnapshotTable:
             # the carried-over ancestor files
             delete_files = list(prev.get("delete_files", ()))
             delete_key = prev.get("delete_key")
+            record_count, column_bounds = _merge_summaries(
+                (prev.get("record_count"), prev.get("column_bounds") or {}),
+                (record_count, column_bounds))
         else:
             delete_files, delete_key = [], None
         return self._publish(
@@ -221,7 +256,52 @@ class SnapshotTable:
             file_blooms=file_blooms if self.bloom_by else {},
             delete_files=delete_files,
             delete_key=delete_key,
+            added_count=added_count,
+            record_count=record_count,
+            column_bounds=column_bounds,
         )
+
+    def _footer_summary(self, commit_dir: str
+                        ) -> tuple[int, dict[str, list]]:
+        """(rows, {col: [min, max]}) of one commit's data files, read
+        from their Parquet footers on the driver — no Spark job, the
+        way an Iceberg writer reports record counts and column bounds
+        into its manifest. A ``bounds_by`` column is left out when any
+        row group holding values lacks min/max statistics (or they are
+        not JSON numbers/strings); [None, None] means no non-null
+        values."""
+        import glob as _glob
+
+        import pyarrow.parquet as pq
+
+        rows = 0
+        bounds: dict[str, list | None] = {c: [None, None]
+                                          for c in self.bounds_by}
+        for path in _glob.glob(os.path.join(self._data_dir, commit_dir,
+                                            "**", "*.parquet"),
+                               recursive=True):
+            md = pq.read_metadata(path)
+            rows += md.num_rows
+            names = [md.schema.column(i).name
+                     for i in range(md.num_columns)]
+            for c, b in bounds.items():
+                if b is None:
+                    continue
+                if c not in names:
+                    bounds[c] = None
+                    continue
+                j = names.index(c)
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(j).statistics
+                    if st is not None and st.null_count == \
+                            md.row_group(g).num_rows:
+                        continue  # all null: nothing to bound
+                    if (st is None or not st.has_min_max
+                            or not isinstance(st.min, (int, float, str))):
+                        bounds[c] = None
+                        break
+                    b[:] = _merge_bounds(b, [st.min, st.max])
+        return rows, {c: b for c, b in bounds.items() if b is not None}
 
     def _publish(self, parent: int | None, operation: str,
                  metadata: dict[str, Any] | None, **fields: Any) -> int:
@@ -258,6 +338,9 @@ class SnapshotTable:
             "file_blooms": prev.get("file_blooms") or {},
             "delete_files": list(prev.get("delete_files", ())),
             "delete_key": prev.get("delete_key"),
+            "added_count": 0,
+            "record_count": prev.get("record_count"),
+            "column_bounds": prev.get("column_bounds") or {},
         }
 
     def _collect_file_stats(self, spark: SparkSession,
@@ -310,7 +393,7 @@ class SnapshotTable:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        from .operators.seen_set import _bloom_params, _key_indices
+        from .operators.seen_set import _bloom_params, _fold_keys
 
         base = os.path.join(self._data_dir, commit_dir)
         fp = self.bloom_fp_rate
@@ -335,9 +418,7 @@ class SnapshotTable:
                 k = min(k, 4)
                 bits = np.zeros(m // 8, dtype=np.uint8)
                 if len(ks):
-                    idx = _key_indices(ks, m, k).ravel()
-                    np.bitwise_or.at(bits, idx // 8,
-                                     (1 << (idx % 8)).astype(np.uint8))
+                    _fold_keys(bits, ks, m, k)
                 return pd.DataFrame({
                     "_f": [pdf["_f"].iloc[0]], "m_bits": [m],
                     "k_hashes": [k], "n_keys": [len(ks)],
@@ -446,14 +527,7 @@ class SnapshotTable:
                .filter(F.col(col) == F.lit(value)))
         # accumulated equality deletes still apply (merge-on-read):
         # a tombstoned row must not resurface through the point path
-        snap = self.snapshot(snapshot_id)
-        dels = snap.get("delete_files") or []
-        if dels:
-            key = snap["delete_key"]
-            dkeys = spark.read.parquet(
-                *[os.path.join(self._data_dir, d) for d in dels])
-            out = out.join(dkeys.select(key).distinct(), key, "left_anti")
-        return out
+        return self._apply_deletes(spark, out, self.snapshot(snapshot_id))
 
     def matching_files(self, prune: dict[str, tuple],
                        snapshot_id: int | None = None) -> list[str]:
@@ -543,6 +617,9 @@ class SnapshotTable:
         fields = self._carried(prev)
         fields["delete_files"].append(ddir)
         fields["delete_key"] = key_col
+        # the deleted keys' rows are not known without a scan: the
+        # count and the bounds become unknown (readers fall back to Spark)
+        fields["record_count"], fields["column_bounds"] = None, {}
         return self._publish(parent, "delete", metadata, **fields)
 
     def retag(self, metadata: dict[str, Any] | None = None) -> int:
@@ -587,13 +664,53 @@ class SnapshotTable:
             # is the safe default.
             out = (spark.read.option("mergeSchema", "true")
                    .parquet(*paths))
+        return self._apply_deletes(spark, out, snap)
+
+    def _apply_deletes(self, spark: SparkSession, out: DataFrame,
+                       snap: dict[str, Any]) -> DataFrame:
+        """``out`` minus every key in the snapshot's accumulated
+        equality-delete files (merge-on-read)."""
         dels = snap.get("delete_files") or []
-        if dels:
-            key = snap["delete_key"]
-            dkeys = spark.read.parquet(
-                *[os.path.join(self._data_dir, d) for d in dels])
-            out = out.join(dkeys.select(key).distinct(), key, "left_anti")
-        return out
+        if not dels:
+            return out
+        key = snap["delete_key"]
+        dkeys = spark.read.parquet(
+            *[os.path.join(self._data_dir, d) for d in dels])
+        return out.join(dkeys.select(key).distinct(), key, "left_anti")
+
+    def read_added(self, spark: SparkSession) -> DataFrame:
+        """The rows the current snapshot's own commit wrote: its data
+        dir only, not the files carried over from its parent (the
+        snapshot must be an append or an overwrite). Deletes apply as
+        in :meth:`read`. A delta read this way comes from stable
+        storage, so it needs no lineage cut to be re-read identically."""
+        snap = self.snapshot()
+        if snap is None or snap["operation"] not in ("append", "overwrite"):
+            raise ValueError(f"table {self.root}: the current snapshot "
+                             "wrote no data files")
+        path = os.path.join(self._data_dir, snap["files"][-1])
+        return self._apply_deletes(spark, spark.read.parquet(path), snap)
+
+    def count(self, spark: SparkSession) -> int:
+        """Rows in the current snapshot, 0 for a table without one: the
+        manifest's ``record_count`` when it recorded one, else a Spark
+        count of :meth:`read`."""
+        snap = self.snapshot()
+        if snap is None:
+            return 0
+        n = snap.get("record_count")
+        return int(n) if n is not None else self.read(spark).count()
+
+    def column_max(self, spark: SparkSession, col: str) -> Any:
+        """Max of ``col`` in the current snapshot (None when it holds no
+        value): the manifest's ``column_bounds`` when it recorded them
+        (``bounds_by``), else a Spark aggregate of :meth:`read`."""
+        from pyspark.sql import functions as F
+
+        bounds = (self.snapshot() or {}).get("column_bounds") or {}
+        if col in bounds:
+            return bounds[col][1]
+        return self.read(spark).agg(F.max(col)).first()[0]
 
     def read_or_empty(self, spark: SparkSession, schema) -> DataFrame:
         if not self.exists():

@@ -251,61 +251,150 @@ def test_robots_gating(spark, tables, tmp_path_factory):
     assert left.filter(F.col("url").rlike("/sport/")).count() > 0
 
 
+# a round's commits, in the order run_round makes them (the frontier,
+# the resume authority, is last)
+ROUND_COMMITS = ("articles", "failures", "trace", "metrics", "lineage",
+                 "seen", "frontier")
+# discovery crawl with the Bloom membership path on from round 0, one
+# attempt per URL (discovered fixture links mostly point at pages the
+# corpus lacks), and a budget that drains the fixture in a few rounds
+CRASH_JOB = dict(budget_per_host=200, bloom_threshold=0, max_retries=0)
+
+
+class _Crash(Exception):
+    pass
+
+
+def _discovery_state(job):
+    spark = job.spark
+    return {
+        "articles": {tuple(r) for r in
+                     job.articles_df().select("url", "text").collect()},
+        "failures": {tuple(r) for r in
+                     job.failures.read(spark).collect()},
+        "trace": {tuple(r) for r in job.trace_df().collect()},
+        "seen": {tuple(r) for r in job.seen_df().collect()},
+        "frontier": {tuple(r) for r in job.frontier.read(spark).collect()},
+    }
+
+
+@pytest.fixture(scope="module")
+def discovery_ref(spark, tables, tmp_path_factory):
+    pages, cdx, _ = tables
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("crawl_disc_ref")),
+                   **CRASH_JOB)
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+    rounds = job.run(pages, discover_links=True)
+    assert len(rounds) >= 3 and sum(r["discovered"] for r in rounds) > 0
+    return _discovery_state(job)
+
+
 @pytest.mark.spark
+@pytest.mark.parametrize("landed", ROUND_COMMITS[:-1])
 def test_mid_round_crash_between_commits_replays_idempotently(
-        spark, tables, full_run, tmp_path_factory):
-    """_append_once's replay-skip path, exercised at the crash point it
-    exists for: the process dies AFTER some of a round's table commits
-    but BEFORE the frontier commit (the resume authority, committed
-    last). Rolling the later tables back to their pre-round snapshot
-    simulates that crash; the resumed job must replay the round,
-    re-commit exactly the missing tables (skipping the committed ones),
-    and converge to the uninterrupted run's state."""
+        spark, tables, discovery_ref, tmp_path_factory, monkeypatch, landed):
+    """_append_once's replay-skip path, exercised at every crash point it
+    exists for: the process dies right AFTER the ``landed`` commit of a
+    round and BEFORE the next one, so the frontier (the resume
+    authority, committed last) never moves. The resumed job must replay
+    the round, re-commit exactly the missing tables (skipping the
+    committed ones) and converge to the uninterrupted run's state. The
+    crawl follows links through the Bloom seen state, whose new
+    generation each round is read back from the seen commit's own
+    files — so a crash on either side of that commit must not leave a
+    key out of the rebuilt state."""
     import os
 
     from commoncrawl_spark.tables import SnapshotTable
 
     pages, cdx, _ = tables
-    ref_job, _, _ = full_run
-    d = str(tmp_path_factory.mktemp("crawl_crash"))
-    job1 = CrawlJob(spark, d, budget_per_host=BUDGET)
+    d = str(tmp_path_factory.mktemp(f"crawl_crash_{landed}"))
+    job1 = CrawlJob(spark, d, **CRASH_JOB)
     job1.seed_from_cdx(cdx, crawl_order=CRAWLS)
-    job1.run(pages, max_rounds=1)  # round 0 commits all tables
+    job1.run_round(pages, discover_links=True)  # round 0 commits all
+    assert job1._bloom is not None  # the Bloom path is on
 
-    def rollback(name):
-        t = SnapshotTable(os.path.join(d, name))
-        cur = t.snapshot()
-        assert cur is not None, name
-        latest = os.path.join(d, name, "_snapshots", "LATEST")
-        if cur["parent"] is None:
-            os.remove(latest)  # round 0 was the first commit ever
-        else:
-            with open(latest, "w") as fh:
-                fh.write(str(cur["parent"]))
+    # round 1 dies after the `landed` commit
+    n_landed = ROUND_COMMITS.index(landed) + 1
+    done = []
+    commit = SnapshotTable._commit
 
-    # crash point: articles/failures/trace landed, then the process died
-    # — metrics/lineage/seen/frontier never committed round 0
-    for name in ("metrics", "lineage", "seen", "frontier"):
-        rollback(name)
+    def crashing_commit(self, *args, **kwargs):
+        if len(done) == n_landed:
+            raise _Crash(os.path.basename(self.root))
+        done.append(os.path.basename(self.root))
+        return commit(self, *args, **kwargs)
 
-    job2 = CrawlJob(spark, d, budget_per_host=BUDGET)  # fresh process
-    job2.run(pages)
+    monkeypatch.setattr(SnapshotTable, "_commit", crashing_commit)
+    with pytest.raises(_Crash):
+        job1.run_round(pages, discover_links=True)
+    monkeypatch.undo()
+    assert tuple(done) == ROUND_COMMITS[:n_landed]
 
-    for name, a, b in [
-        ("seen", ref_job.seen_df(), job2.seen_df()),
-        ("articles", ref_job.articles_df().select("url", "text"),
-         job2.articles_df().select("url", "text")),
-        ("trace", ref_job.trace_df(), job2.trace_df()),
-    ]:
-        ra = {tuple(r) for r in a.collect()}
-        rb = {tuple(r) for r in b.collect()}
-        assert ra == rb, f"{name} diverged after mid-round crash replay"
+    job2 = CrawlJob(spark, d, **CRASH_JOB)  # fresh process
+    assert job2.next_round() == 1  # the frontier never moved
+    job2.run(pages, discover_links=True)
+
+    got = _discovery_state(job2)
+    for name, want in discovery_ref.items():
+        assert got[name] == want, f"{name} diverged after crash replay"
     # the replay did NOT double-commit the already-landed tables: one
-    # round-0 commit each
-    arts = SnapshotTable(os.path.join(d, "articles"))
-    r0 = [s for s in arts.snapshots()
-          if s["metadata"].get("round") == 0]
-    assert len(r0) == 1
+    # round-1 commit each
+    for name in ROUND_COMMITS:
+        t = SnapshotTable(os.path.join(d, name))
+        meta = [s["metadata"] for s in t.snapshots()]
+        if name == "frontier":  # its metadata carries the NEXT round
+            assert sum(m.get("round") == 2 for m in meta) == 1, name
+        else:
+            assert sum(m.get("round") == 1 for m in meta) == 1, name
+
+
+# Spark jobs a round may launch under its caller's job group, measured
+# on this fixture (8 shuffle partitions): a slim outcome frame counted in
+# one aggregate, an O(delta) Bloom add, counts and the frontier's max
+# crawl_rank from manifests
+ROUND_JOB_BUDGET = 43
+
+
+@pytest.mark.spark
+def test_round_job_budget_and_job_group_hygiene(spark, tables,
+                                                tmp_path_factory,
+                                                monkeypatch):
+    """Each round of a link-following crawl through the Bloom seen state
+    stays within its job budget, counted the way a caller counts it (by
+    the job group it set); the round leaves that job group as it found
+    it; and no frame the round caches holds page html."""
+    pages, cdx, _ = tables
+    sc = spark.sparkContext
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("crawl_jobs")),
+                   budget_per_host=BUDGET, bloom_threshold=10)
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+
+    cached = []
+    frame_cls = type(pages)  # the session's concrete DataFrame class
+    persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        cached.append(self.columns)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    jobs = []
+    try:
+        for r in range(3):
+            group = f"caller-round-{r}"
+            sc.setJobGroup(group, "a caller's round")
+            assert job.run_round(pages, discover_links=True)
+            assert sc.getLocalProperty("spark.jobGroup.id") == group
+            assert sc.getLocalProperty("spark.job.description") == \
+                "a caller's round"
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert job._bloom is not None  # rounds 1-2 add to the Bloom state
+    assert cached and not [c for c in cached if "html" in c], cached
+    assert max(jobs) <= ROUND_JOB_BUDGET, jobs
 
 
 @pytest.mark.spark
@@ -328,6 +417,52 @@ def test_unlisted_crawls_rank_last_not_first(spark, tables,
     assert ranks == {0, 1}
     # the listed crawl is the minority of the fixture's captures
     assert fr.filter(F.col("crawl_rank") == 1).count() > 0
+
+
+def _window_crawl_ranks(best):
+    """crawl -> dense rank of the crawl name over the deduped captures,
+    NULL first: the ranking seed_from_cdx's default order must give."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy("crawl")
+    return {r["crawl"]: r["rank"] for r in
+            best.select("crawl").distinct()
+            .withColumn("rank", F.dense_rank().over(w) - 1).collect()}
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("with_null_crawl", [False, True])
+def test_default_crawl_order_ranks_like_a_window(spark, tables,
+                                                tmp_path_factory,
+                                                with_null_crawl):
+    """crawl_order=None ranks the distinct crawls lexicographically,
+    NULL first — the same crawl_rank per row as a dense-rank window over
+    them — now ranked on the driver instead of in a partition-less
+    window."""
+    from commoncrawl_spark.operators.dedup import best_capture_per_url
+    from commoncrawl_spark.operators.seen_set import with_url_key
+
+    _, cdx, _ = tables
+    if with_null_crawl:
+        # a few 200 captures of URLs of their own with no crawl id
+        cdx = cdx.unionByName(
+            cdx.filter((F.col("status") == "200")
+                       & (F.crc32("url") % 20 == 0))
+            .withColumn("url", F.concat(F.lit("https://null-crawl.test/"),
+                                        F.sha1("url")))
+            .withColumn("crawl", F.lit(None).cast("string")))
+    best = best_capture_per_url(cdx).filter(F.col("status") == "200")
+    ranks = _window_crawl_ranks(best)
+    assert (None in ranks) == with_null_crawl and len(ranks) > 1
+    want = {r["url_sha1"]: ranks[r["crawl"]]
+            for r in with_url_key(best).collect()}
+
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("crawl_rank_default")),
+                   budget_per_host=BUDGET)
+    assert job.seed_from_cdx(cdx) == len(want)
+    got = {r["url_sha1"]: r["crawl_rank"]
+           for r in job.frontier.read(spark).collect()}
+    assert got == want
 
 
 @pytest.mark.spark

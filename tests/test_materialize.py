@@ -90,3 +90,25 @@ def test_operator_results_identical_across_modes(spark, tmp_path):
     finally:
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
     assert local == reliable
+
+
+@pytest.mark.parametrize("eager", [True, False])
+def test_reliable_cut_computes_subtree_once(spark, ckpt_dir, eager):
+    """Reliable mode persists the frame before checkpointing it, so the
+    checkpoint's file-writing job reads cached blocks instead of
+    recomputing the plan: each row of the cut's subtree is computed
+    ONCE, eager or lazy — which is also what makes a nondeterministic
+    frame's checkpoint hold the rows its first consumer saw."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    df = spark.range(0, 200, numPartitions=4).select(
+        F.udf(tick, "long")("id").alias("id"))
+    out = materialize(df, eager=eager)
+    assert out.count() == 200
+    assert out.agg(F.sum("id")).first()[0] == sum(range(200))
+    assert acc.value == 200
+    df.unpersist()

@@ -100,27 +100,111 @@ def test_scalable_anti_join_equals_exact(spark, keyed):
     assert scalable == exact
 
 
+def _blob_rows(blooms, buckets=None):
+    return sorted(
+        (r["bucket"], r["m_bits"], r["k_hashes"], r["n_keys"],
+         bytes(r["bloom"]))
+        for r in blooms.collect()
+        if buckets is None or r["bucket"] in buckets)
+
+
+def _sha_keys(spark, prefix, n):
+    return spark.range(n).select(
+        F.sha1(F.concat(F.lit(prefix), F.col("id").cast("string")))
+        .alias("url_sha1"))
+
+
 @pytest.mark.spark
-def test_bloom_seen_set_incremental_add_equals_fresh_build(spark, keyed):
-    """BloomSeenSet.add rebuilds ONLY touched buckets, yet the resulting
-    blob table is byte-identical to a from-scratch build over the union
-    (per-bucket blobs are deterministic functions of the bucket's keys)."""
+def test_bloom_seen_set_adds_stay_exact_and_within_fpr(spark):
+    """After several delta-sized adds (keys OR-ed into blobs sized with
+    headroom; the first delta fits every bucket, the later ones push
+    some past capacity), ``unseen`` over every key still equals the
+    exact anti-join — no false negatives — and the measured FPR on fresh
+    probes stays within test_bloom_fpr_within_budget's budget."""
     from commoncrawl_spark.operators.seen_set import BloomSeenSet
 
-    a = keyed.filter(F.crc32("url") % 2 == 0).select("url_sha1")
-    b = keyed.filter(F.crc32("url") % 2 == 1).select("url_sha1")
-    s = BloomSeenSet(a, n_buckets=8)
-    s.add(b)
-    got = sorted(
-        (r["bucket"], r["m_bits"], r["k_hashes"], r["n_keys"], bytes(r["bloom"]))
-        for r in s.blooms.collect()
-    )
-    fresh = build_bloom_table(a.unionByName(b), n_buckets=8)
-    want = sorted(
-        (r["bucket"], r["m_bits"], r["k_hashes"], r["n_keys"], bytes(r["bloom"]))
-        for r in fresh.collect()
-    )
+    parts = [_sha_keys(spark, f"p{i}-", n)
+             for i, n in enumerate((3000, 500, 1500, 3000))]
+    s = BloomSeenSet(parts[0], n_buckets=16)
+    sizes = {r["bucket"]: r["m_bits"] for r in s.blooms.collect()}
+    s.add(parts[1])
+    # a delta within every bucket's headroom is folded, never rebuilt
+    assert {r["bucket"]: r["m_bits"] for r in s.blooms.collect()} == sizes
+    for p in parts[2:]:
+        s.add(p)
+    assert len(s._gens) == 4
+    rows = s.blooms.collect()
+    assert sum(r["n_keys"] for r in rows) == 8000
+    assert any(r["m_bits"] != sizes[r["bucket"]] for r in rows)
+
+    everything = parts[0]
+    for p in parts[1:]:
+        everything = everything.unionByName(p)
+    fresh = _sha_keys(spark, "f-", 5000)
+    probe = everything.unionByName(fresh)
+    got = {r["url_sha1"] for r in s.unseen(probe).collect()}
+    want = {r["url_sha1"] for r in anti_join_seen(probe, everything).collect()}
     assert got == want
+    fp = (bloom_prefilter(fresh, s.blooms, 16)
+          .filter(F.col("_maybe_seen")).count())
+    assert fp / 5000 < 0.02
+    s.release()
+
+
+@pytest.mark.spark
+def test_bloom_seen_set_capacity_rebuild_and_compaction_equal_fresh_build(
+        spark):
+    """The two points where BloomSeenSet rebuilds blobs from key history
+    give exactly a fresh build of the same keys (blobs are pure
+    functions of a bucket's keys and the headroom): a delta that pushes
+    buckets past capacity rebuilds those buckets, and a compaction
+    rebuilds every blob."""
+    from commoncrawl_spark.operators.seen_set import BloomSeenSet
+
+    a, b = _sha_keys(spark, "a-", 1000), _sha_keys(spark, "b-", 4000)
+    s = BloomSeenSet(a, n_buckets=8, max_generations=3)
+    before = {r["bucket"]: r["m_bits"] for r in s.blooms.collect()}
+    s.add(b)  # 5x the keys: past every bucket's 2x headroom
+    rows = s.blooms.collect()
+    rebuilt = {r["bucket"] for r in rows if r["m_bits"] != before[r["bucket"]]}
+    assert rebuilt == set(before)
+    fresh = build_bloom_table(a.unionByName(b), n_buckets=8, headroom=2.0)
+    assert _blob_rows(s.blooms, rebuilt) == _blob_rows(fresh, rebuilt)
+
+    c, d = _sha_keys(spark, "c-", 100), _sha_keys(spark, "d-", 100)
+    s.add(c)
+    s.add(d)  # 4 generations > 3: compacted
+    assert len(s._gens) == 1
+    fresh = build_bloom_table(
+        a.unionByName(b).unionByName(c).unionByName(d), n_buckets=8,
+        headroom=2.0)
+    assert _blob_rows(s.blooms) == _blob_rows(fresh)
+    s.release()
+
+
+@pytest.mark.spark
+def test_bloom_seen_set_add_from_committed_files(spark, tmp_path):
+    """A delta read back from a snapshot commit's own files (stable
+    storage) joins the state with no lineage cut, and an empty one is a
+    no-op."""
+    from commoncrawl_spark.operators.seen_set import BloomSeenSet
+    from commoncrawl_spark.tables import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "seen"))
+    t.append(_sha_keys(spark, "a-", 800))
+    s = BloomSeenSet(t.read(spark), n_buckets=8)
+    t.append(_sha_keys(spark, "b-", 300))
+    assert t.snapshot()["added_count"] == 300
+    s.add(t.read_added(spark), n_new=t.snapshot()["added_count"])
+    s.add(spark.createDataFrame([], "url_sha1 string"), n_new=0)
+    assert len(s._gens) == 2
+    # the new generation scans the commit's files, not a checkpoint
+    plan = s._gens[1]._jdf.queryExecution().optimizedPlan().toString()
+    assert "ExistingRDD" not in plan and "parquet" in plan.lower()
+    probe = t.read(spark).unionByName(_sha_keys(spark, "f-", 500))
+    got = {r["url_sha1"] for r in s.unseen(probe).collect()}
+    assert got == {r["url_sha1"] for r in
+                   _sha_keys(spark, "f-", 500).collect()}
     s.release()
 
 

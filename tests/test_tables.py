@@ -606,3 +606,58 @@ def test_stats_conservative_keep_for_uncovered_commits(spark, tmp_path):
            t.read_pruned(spark, {"v": (40, 60)}).filter(
                "v BETWEEN 40 AND 60").collect()}
     assert got == set(range(40, 61))
+
+
+@pytest.mark.spark
+def test_manifest_counts_and_bounds_from_footers(spark, tmp_path):
+    """Each manifest records the rows its commit wrote, the snapshot's
+    row count and its bounds_by columns' [min, max], read from the
+    Parquet footers at commit: count() and column_max() then need no
+    Spark job. A delete makes them unknown (Spark fallback), and so
+    does a manifest written before these fields existed."""
+    import json
+
+    def rows(lo, hi, v="cast(id * 2 as int)"):
+        return spark.range(lo, hi).selectExpr("id", f"{v} as v")
+
+    t = SnapshotTable(str(tmp_path / "t"), bounds_by=("v",))
+    assert t.count(spark) == 0
+    t.append(rows(0, 10))
+    t.append(rows(10, 15))
+    snap = t.snapshot()
+    assert (snap["added_count"], snap["record_count"]) == (5, 15)
+    assert snap["column_bounds"] == {"v": [0, 28]}
+    assert snap["metadata"] == {}
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-probe", "manifest-probe")
+    try:
+        assert t.count(spark) == 15 and t.column_max(spark, "v") == 28
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "manifest-probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["id"] for r in t.read_added(spark).collect()} == \
+        set(range(10, 15))
+
+    t.overwrite(rows(0, 3, v="cast(null as int)"))
+    assert t.count(spark) == 3 and t.column_max(spark, "v") is None
+    t.retag({"round": 1})
+    assert t.snapshot()["added_count"] == 0 and t.count(spark) == 3
+    with pytest.raises(ValueError):
+        t.read_added(spark)  # a retag writes no data files
+    t.delete_where(spark.range(1).toDF("id"), "id")
+    assert t.snapshot()["record_count"] is None and t.count(spark) == 2
+
+    t.overwrite(rows(0, 4))
+    path = os.path.join(str(tmp_path / "t"), "_snapshots",
+                        f"v{t.current_snapshot_id()}.json")
+    with open(path) as fh:
+        old = json.load(fh)
+    for field in ("added_count", "record_count", "column_bounds"):
+        del old[field]
+    with open(path, "w") as fh:
+        json.dump(old, fh)
+    assert t.count(spark) == 4 and t.column_max(spark, "v") == 6
+    t.append(rows(4, 6))  # an append onto it stays unknown
+    assert t.snapshot()["record_count"] is None and t.count(spark) == 6
