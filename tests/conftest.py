@@ -18,7 +18,14 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("cc-spark-tests", cores=8, shuffle_partitions=8)
+    # the engine's 16g default heap suits one large job, not a session
+    # that runs hundreds of small ones: ParallelGC grows the heap toward
+    # its cap and never returns it, so the test JVM's resident memory
+    # would climb past what a 16 GB host can give it. The fixtures are
+    # small; the benchmark runs full-size crawls in a 2g driver.
+    mem = os.environ.get("SPARK_DRIVER_MEM", "4g")
+    s = get_spark("cc-spark-tests", cores=8, shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": mem})
     yield s
 
 
