@@ -1,30 +1,27 @@
-"""Partitioned cuckoo-filter URL-seen set: the Bloom prefilter's twin
-with DELETION support and in-place delta inserts.
+"""Partitioned cuckoo-filter URL-seen set: a second per-bucket kernel
+for ``seen_set``'s scaffold, one that can DELETE.
 
-The north rule names a "bloom/cuckoo URL-seen set"; ``seen_set.py`` is
-the Bloom half. The cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher
-— "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014) stores
-16-bit fingerprints in 4-way-associative buckets with two candidate
-positions per key (``i2 = i1 XOR mix(fp)``), which buys two things a
-crawler wants and Bloom structurally cannot give:
+The north rule names a "bloom/cuckoo URL-seen set"; ``seen_set.py``
+holds the scaffold (bucketing, build, probe cogroup, (delta x blobs)
+edit cogroup, exact verify) and the generational state
+(``seen_set.SeenSet``), and this module only the cuckoo kernel. The
+cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher — "Cuckoo Filter:
+Practically Better Than Bloom", CoNEXT 2014) stores 16-bit fingerprints
+in 4-way-associative buckets with two candidate positions per key
+(``i2 = i1 XOR mix(fp)``), which buys what a crawler wants and Bloom
+structurally cannot give:
 
 * **deletion** — recrawl eviction: a URL whose TTL lapses is removed
   from the filter IN PLACE (clear one fingerprint slot) instead of
-  rebuilding a bitmap from the full key history;
-* **in-place delta inserts** — ``CuckooSeenSet.add`` edits only the
-  touched buckets' blobs with just the delta keys; the 10^10-key
-  history is never rescanned (Bloom's per-bucket rebuild refolds every
-  key of a touched bucket).
+  rebuilding a bitmap from the bucket's key history;
+* **fewer false positives** — ~0.03% against Bloom's 1%, so the
+  survivors' exact-join shuffle shrinks another ~30x.
 
-Distribution shape is identical to the Bloom path (and shares its
-tests' invariants): one blob per ``pmod(xxhash64(key), P)`` bucket,
-built/edited/probed with ``applyInPandas`` / cogroup — each task holds
-exactly ONE bucket's blob, nothing is collected to or broadcast from
-the driver. Membership is made EXACT the same way: the filter only
-prefilters (false positives fall to an exact anti-join on survivors),
-and false negatives are impossible by construction — every inserted
-fingerprint lives in one of its two buckets or in the bucket's spill
-list (kick chains that exceed ``_MAX_KICKS`` spill the homeless
+Membership is made EXACT the same way as with Bloom blobs: the filter
+only prefilters (false positives fall to an exact anti-join on
+survivors), and false negatives are impossible by construction — every
+inserted fingerprint lives in one of its two buckets or in the bucket's
+spill list (kick chains that exceed ``_MAX_KICKS`` spill the homeless
 fingerprint rather than dropping it), and deletion clears exactly one
 occurrence of a fingerprint that is actually present (duplicate keys
 occupy duplicate slots, multiset-style, so deleting one key never
@@ -32,9 +29,7 @@ erases another's copy — the 2014 paper's deletion-safety argument).
 
 Sizing: 4-slot buckets at 16-bit fingerprints cost ~2.5 bytes/key at
 95% load — ~25 GB for 10^10 keys across 1024 buckets (~24 MB/bucket),
-executor-resident like the Bloom blobs, with ~0.03% false positives
-(vs Bloom's 1% at 1.2 bytes/key): the survivors' exact-join shuffle
-shrinks another ~30x.
+executor-resident like the Bloom blobs (1.2 bytes/key).
 
 Keys are 40-char lowercase sha1 hex (``with_url_key``); fingerprint and
 primary index are fixed hex slices of the key itself — no second hash
@@ -50,18 +45,19 @@ re-queues them (download_warc_segments.py:163-171 existence check).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen_set import anti_join_seen, key_generation
-from ..materialize import materialize as _materialize
+from .seen_set import SeenSet, anti_join_filtered, build_table, prefilter
 
 _ASSOC = 4            # slots per cuckoo bucket (the 2014 paper's sweet spot)
 _FP_MIX = 0x5BD1E995  # odd multiplier: i2 = i1 XOR ((fp * mix) & mask)
 _MAX_KICKS = 500      # eviction-chain bound; beyond it the fp spills
+_MAX_LOAD = 0.85      # a blob past this share of its slots is rebuilt
 
 CUCKOO_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
@@ -229,62 +225,68 @@ def _blob_row(bucket: int, n_slots: int, n_keys: int, table: np.ndarray,
     })
 
 
-def _with_bucket(df: DataFrame, n_buckets: int, key: str,
-                 out: str = "bucket") -> DataFrame:
-    return df.withColumn(
-        out, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+def _decode(blob: pd.DataFrame) -> tuple[int, np.ndarray, np.ndarray]:
+    """(n_slots, table, spill) of a one-row blob frame, read-only."""
+    return (int(blob["n_slots"].iloc[0]),
+            np.frombuffer(blob["table"].iloc[0], np.uint16),
+            np.frombuffer(blob["spill"].iloc[0], np.uint64))
+
+
+@dataclass(frozen=True)
+class CuckooKernel:
+    """One bucket's cuckoo filter, sized for ``headroom`` times the keys
+    it is built from (1.6 ~ 62% load). Fingerprints fold in and clear
+    out in place; the blob counts as full past ``_MAX_LOAD`` of its
+    slots, where kick chains grow long."""
+
+    headroom: float = 1.6
+    schema = CUCKOO_SCHEMA
+    size_col = "n_slots"
+
+    def fresh(self, bucket: int, keys: pd.Series) -> pd.DataFrame:
+        n_slots = _n_slots_for(len(keys), self.headroom)
+        table = np.zeros(n_slots * _ASSOC, dtype=np.uint16)
+        fp, i1 = _fp_index(keys, n_slots)
+        spill = _insert(table, fp, i1, n_slots)
+        return _blob_row(bucket, n_slots, len(keys), table, spill)
+
+    def fold(self, blob: pd.DataFrame, keys: pd.Series) -> pd.DataFrame:
+        n_slots, table, spill = _decode(blob)
+        table = table.copy()
+        fp, i1 = _fp_index(keys, n_slots)
+        spill = np.concatenate(
+            [spill, np.asarray(_insert(table, fp, i1, n_slots), np.uint64)])
+        return _blob_row(int(blob["bucket"].iloc[0]), n_slots,
+                         int(blob["n_keys"].iloc[0]) + len(keys), table, spill)
+
+    def remove(self, blob: pd.DataFrame, keys: pd.Series) -> pd.DataFrame:
+        n_slots, table, spill = _decode(blob)
+        table = table.copy()
+        spill = _remove(table, n_slots, spill, keys)
+        return _blob_row(int(blob["bucket"].iloc[0]), n_slots,
+                         int(blob["n_keys"].iloc[0]) - len(keys), table, spill)
+
+    def probe(self, blob: pd.DataFrame, keys: pd.Series) -> np.ndarray:
+        n_slots, table, spill = _decode(blob)
+        return _probe(table, n_slots, spill, keys)
+
+    def capacity(self, n_slots: int) -> int:
+        return int(_MAX_LOAD * n_slots * _ASSOC)
 
 
 def build_cuckoo_table(seen: DataFrame, n_buckets: int = 64,
                        headroom: float = 1.6,
                        key: str = "url_sha1") -> DataFrame:
-    """One cuckoo-filter blob per hash bucket (executor-side build, same
-    shape as ``build_bloom_table``)."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        ks = pdf[key]
-        n_slots = _n_slots_for(len(ks), headroom)
-        table = np.zeros(n_slots * _ASSOC, dtype=np.uint16)
-        fp, i1 = _fp_index(ks, n_slots)
-        spill = _insert(table, fp, i1, n_slots)
-        return _blob_row(int(pdf["bucket"].iloc[0]), n_slots, len(ks),
-                         table, spill)
-
-    bucketed = _with_bucket(seen.select(key), n_buckets, key)
-    return bucketed.groupBy("bucket").applyInPandas(build, CUCKOO_SCHEMA)
+    """One cuckoo-filter blob per hash bucket (``seen_set.build_table``)."""
+    return build_table(seen, CuckooKernel(headroom), n_buckets, key)
 
 
 def cuckoo_prefilter(candidates: DataFrame, cuckoo_table: DataFrame,
                      n_buckets: int = 64, key: str = "url_sha1") -> DataFrame:
-    """Flag candidates that MAY be in the seen set (``_maybe_seen``).
-    Distribution identical to ``bloom_prefilter``: candidates shuffle by
-    the blob bucketing and CO-GROUP with the one-row-per-bucket blob
-    table — the blob table never leaves the executors."""
-    out_schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("_maybe_seen", T.BooleanType())]
-    )
-
-    def probe(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        out = cand.drop(columns=["_bucket"])
-        if len(out) == 0:
-            out["_maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        if len(blob) == 0:
-            out["_maybe_seen"] = False
-            return out
-        n_slots = int(blob["n_slots"].iloc[0])
-        table = np.frombuffer(blob["table"].iloc[0], np.uint16)
-        spill = np.frombuffer(blob["spill"].iloc[0], np.uint64)
-        out["_maybe_seen"] = _probe(table, n_slots, spill, out[key])
-        return out
-
-    with_b = _with_bucket(candidates, n_buckets, key, "_bucket")
-    return (
-        with_b.groupBy("_bucket")
-        .cogroup(cuckoo_table.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
+    """Flag candidates that MAY be in the seen set (``_maybe_seen``):
+    ``seen_set.prefilter`` over cuckoo blobs — the blob table never
+    leaves the executors."""
+    return prefilter(candidates, cuckoo_table, CuckooKernel(), n_buckets, key)
 
 
 def anti_join_seen_cuckoo(candidates: DataFrame, seen: DataFrame,
@@ -294,186 +296,16 @@ def anti_join_seen_cuckoo(candidates: DataFrame, seen: DataFrame,
     """Cuckoo prefilter + exact anti-join on survivors: exact overall
     (false positives are verified away; false negatives are impossible
     — property-tested like the Bloom path)."""
-    if cuckoos is None:
-        cuckoos = build_cuckoo_table(seen, n_buckets, headroom, key)
-    flagged = cuckoo_prefilter(candidates, cuckoos, n_buckets, key).persist()
-    definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    survivors = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    return definitely_new.unionByName(anti_join_seen(survivors, seen, key))
+    return anti_join_filtered(candidates, seen, CuckooKernel(headroom),
+                              n_buckets, key, cuckoos)
 
 
-class CuckooSeenSet:
-    """Long-lived seen-set state with DELETION (recrawl eviction).
-
-    Same LSM layout as ``BloomSeenSet`` — key history as hash-partitioned
-    persisted GENERATIONS (the verify fold never reshuffles history),
-    blobs persisted executor-side — plus the cuckoo capabilities:
-
-    * ``add(delta)`` edits blobs IN PLACE via a (delta x blobs) cogroup:
-      only the delta's fingerprints move; history keys are not rescanned
-      (Bloom must refold every key of a touched bucket). When cumulative
-      inserts push the filter past ~85% of capacity it rebuilds once,
-      resized.
-    * ``remove(keys)`` evicts URLs so they become crawlable again:
-      fingerprints cleared in place (delta-sized cogroup) and the keys
-      anti-joined out of each generation — both sides of that join are
-      hash-partitioned on the key, so no exchange; membership stays
-      exact immediately.
-    """
+class CuckooSeenSet(SeenSet):
+    """``seen_set.SeenSet`` over cuckoo blobs: ``remove`` (recrawl
+    eviction) clears fingerprints in place."""
 
     def __init__(self, seen: DataFrame, n_buckets: int = 64,
                  headroom: float = 1.6, key: str = "url_sha1",
                  max_generations: int = 8):
-        self.key, self.n_buckets, self.headroom = key, n_buckets, headroom
-        self.max_generations = max_generations
-        spark = seen.sparkSession
-        self._P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        self._gens = [key_generation(seen, key, self._P, stable=True)]
-        self._n_keys = self._gens[0].count()
-        self.cuckoos = build_cuckoo_table(
-            self.seen, n_buckets, headroom, key).persist()
-        self._capacity = self._blob_capacity()
-        self._last_probe: DataFrame | None = None
-
-    @property
-    def seen(self) -> DataFrame:
-        out = self._gens[0]
-        for g in self._gens[1:]:
-            out = out.unionByName(g)
-        return out
-
-    def _blob_capacity(self) -> int:
-        row = self.cuckoos.agg(
-            (F.sum("n_slots") * _ASSOC).alias("cap")).first()
-        return int(row["cap"] or 0)
-
-    def _edit_blobs(self, delta: DataFrame, mode: str) -> DataFrame:
-        """(delta x blobs) cogroup: per touched bucket, decode the blob,
-        insert or clear the delta's fingerprints, re-encode. Buckets
-        without delta rows pass through byte-identical."""
-        keycol, headroom = self.key, self.headroom
-        cols = [f.name for f in CUCKOO_SCHEMA.fields]
-
-        def edit(dk: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-            if len(dk) == 0:
-                return blob[cols]
-            ks = dk[keycol]
-            if len(blob) == 0:
-                if mode == "remove":
-                    return blob.reindex(columns=cols)
-                n_slots = _n_slots_for(len(ks), headroom)
-                table = np.zeros(n_slots * _ASSOC, dtype=np.uint16)
-                spill = np.empty(0, dtype=np.uint64)
-                n_keys, bucket = 0, int(dk["bucket"].iloc[0])
-            else:
-                n_slots = int(blob["n_slots"].iloc[0])
-                table = np.frombuffer(blob["table"].iloc[0], np.uint16).copy()
-                spill = np.frombuffer(blob["spill"].iloc[0], np.uint64).copy()
-                n_keys = int(blob["n_keys"].iloc[0])
-                bucket = int(blob["bucket"].iloc[0])
-            fp, i1 = _fp_index(ks, n_slots)
-            if mode == "insert":
-                new_spill = _insert(table, fp, i1, n_slots)
-                if new_spill:
-                    spill = np.concatenate(
-                        [spill, np.asarray(new_spill, dtype=np.uint64)])
-                n_keys += len(ks)
-            else:
-                spill = _remove(table, n_slots, spill, ks)
-                n_keys -= len(ks)
-            return _blob_row(bucket, n_slots, n_keys, table, spill)
-
-        bucketed = _with_bucket(
-            delta.select(self.key), self.n_buckets, self.key)
-        return (
-            bucketed.groupBy("bucket")
-            .cogroup(self.cuckoos.groupBy("bucket"))
-            .applyInPandas(edit, CUCKOO_SCHEMA)
-        )
-
-    def _swap_blobs(self, new_blobs: DataFrame) -> None:
-        blobs2 = new_blobs.transform(_materialize)
-        old = self.cuckoos
-        self.cuckoos = blobs2
-        old.unpersist()
-
-    def unseen(self, candidates: DataFrame) -> DataFrame:
-        """Exact anti-join, cuckoo-accelerated (same fold as
-        ``BloomSeenSet.unseen``: survivors exchange once, generations
-        join from cache with zero additional exchanges)."""
-        if self._last_probe is not None:
-            self._last_probe.unpersist()
-        flagged = cuckoo_prefilter(
-            candidates, self.cuckoos, self.n_buckets, self.key).persist()
-        self._last_probe = flagged
-        definitely_new = flagged.filter(
-            ~F.col("_maybe_seen")).drop("_maybe_seen")
-        survivors = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        for g in self._gens:
-            survivors = survivors.join(g, self.key, "left_anti")
-        return definitely_new.unionByName(survivors)
-
-    def add(self, new_keys: DataFrame, n_new: int | None = None) -> None:
-        """Extend the set: the delta becomes a new generation and its
-        fingerprints are inserted into the existing blobs in place —
-        only delta-sized data moves. Past ~85% load, rebuild resized.
-        ``n_new`` declares ``new_keys`` a committed table's own files
-        holding that many keys (as ``BloomSeenSet.add``): no lineage
-        cut, no counting job, and an empty delta is a no-op."""
-        if n_new == 0:
-            return
-        delta = key_generation(new_keys, self.key, self._P,
-                               stable=n_new is not None)
-        self._gens.append(delta)
-        self._n_keys += n_new if n_new is not None else delta.count()
-        if len(self._gens) > self.max_generations:
-            self._compact()
-        if self._n_keys > 0.85 * self._capacity:
-            fresh = build_cuckoo_table(
-                self.seen, self.n_buckets, self.headroom, self.key)
-            self._swap_blobs(fresh)
-            self._capacity = self._blob_capacity()
-        else:
-            self._swap_blobs(self._edit_blobs(delta, "insert"))
-
-    def remove(self, keys: DataFrame) -> None:
-        """Recrawl eviction: make ``keys`` crawlable again. Only keys
-        actually present are touched (semi-join — multiset deletion
-        safety); blobs are edited in place and the generations drop the
-        keys via partition-aligned anti-joins (no exchange)."""
-        removed = (
-            keys.select(self.key).distinct()
-            .join(self.seen, self.key, "left_semi")
-            .transform(_materialize)
-            .repartition(self._P, self.key)
-            .persist()
-        )
-        n_removed = removed.count()
-        if n_removed == 0:
-            removed.unpersist()
-            return
-        new_gens = []
-        for g in self._gens:
-            ng = g.join(removed, self.key, "left_anti").persist()
-            ng.count()
-            g.unpersist()
-            new_gens.append(ng)
-        self._gens = new_gens
-        self._n_keys -= n_removed
-        self._swap_blobs(self._edit_blobs(removed, "remove"))
-        removed.unpersist()
-
-    def _compact(self) -> None:
-        merged = key_generation(self.seen, self.key, self._P, stable=False)
-        for g in self._gens:
-            g.unpersist()
-        self._gens = [merged]
-
-    def release(self) -> None:
-        for g in self._gens:
-            g.unpersist()
-        self._gens = []
-        self.cuckoos.unpersist()
-        if self._last_probe is not None:
-            self._last_probe.unpersist()
-            self._last_probe = None
+        super().__init__(seen, CuckooKernel(headroom), n_buckets, key,
+                         max_generations)

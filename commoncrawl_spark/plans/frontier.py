@@ -161,12 +161,12 @@ class CrawlJob:
         # 300 s ceiling). retry_backoff=False restores retry-next-round.
         self.retry_backoff = retry_backoff
         self.backoff_cap_rounds = backoff_cap_rounds
-        # cross-round filter state (BloomSeenSet or CuckooSeenSet per
-        # seen_state): built lazily the first time the seen table crosses
-        # bloom_threshold, then extended incrementally per round
-        # (_note_seen_keys). In-memory only — a resumed job rebuilds it
-        # from the seen table on first use. 'cuckoo' costs ~2x the blob
-        # bytes but supports in-place DELETION, which makes
+        # cross-round filter state (a SeenSet over the Bloom or cuckoo
+        # kernel per seen_state): built lazily the first time the seen
+        # table crosses bloom_threshold, then extended incrementally per
+        # round (_note_seen_keys). In-memory only — a resumed job
+        # rebuilds it from the seen table on first use. 'cuckoo' costs
+        # ~2x the blob bytes but supports in-place DELETION, which makes
         # evict_for_recrawl cheap at 10^10 keys.
         self.seen_state = seen_state
         self._bloom = None
@@ -314,13 +314,11 @@ class CrawlJob:
         return candidates
 
     def _make_state(self, seen: DataFrame):
-        if self.seen_state == "cuckoo":
-            from ..operators.cuckoo import CuckooSeenSet
-
-            return CuckooSeenSet(seen)
+        from ..operators.cuckoo import CuckooSeenSet
         from ..operators.seen_set import BloomSeenSet
 
-        return BloomSeenSet(seen)
+        return (CuckooSeenSet if self.seen_state == "cuckoo"
+                else BloomSeenSet)(seen)
 
     def _note_seen_keys(self) -> None:
         """Keep the cross-round filter state in sync with the seen table:
@@ -339,10 +337,11 @@ class CrawlJob:
 
         * the persistent seen table loses the keys — via a NEW snapshot,
           so the pre-eviction membership stays time-travelable;
-        * the cross-round filter state follows: in-place fingerprint
-          deletion when ``seen_state='cuckoo'`` (delta-sized work — the
-          reason the cuckoo variant exists); the Bloom state, which
-          cannot delete, is released and lazily rebuilt on next use;
+        * the cross-round filter state follows in place: in-place
+          fingerprint deletion when ``seen_state='cuckoo'`` (delta-sized
+          work — the reason the cuckoo kernel exists); the Bloom state,
+          which cannot delete, rebuilds the touched buckets from its
+          remaining key history;
         * with ``requeue=True``, the URLs re-enter the frontier BELOW
           every queued row (crawl_rank = max + 1, url_sha1 tie-break —
           the same deterministic placement as discovered links), so a
@@ -378,11 +377,7 @@ class CrawlJob:
             {"round": prev_round, "evicted": n},
         )
         if self._bloom is not None:
-            if hasattr(self._bloom, "remove"):
-                self._bloom.remove(evict.select("url_sha1"))
-            else:
-                self._bloom.release()
-                self._bloom = None  # rebuilt from the table on next use
+            self._bloom.remove(evict.select("url_sha1"))
         if requeue:
             rnd = self.next_round()
             frontier = self._read_frontier()

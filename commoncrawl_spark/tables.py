@@ -123,6 +123,26 @@ def _merge_bounds(a: list, b: list) -> list:
     return [min(lo) if lo else None, max(hi) if hi else None]
 
 
+def _footer_bounds(md, c: str) -> list | None:
+    """[min, max] of column ``c`` in one Parquet file, from its footer
+    ([None, None] when it holds no non-null value); None when the file
+    lacks the column, or a row group holding values lacks min/max
+    statistics or they are not JSON numbers/strings."""
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    if c not in names:
+        return None
+    j, out = names.index(c), [None, None]
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(j).statistics
+        if st is not None and st.null_count == md.row_group(g).num_rows:
+            continue  # all null: nothing to bound
+        if (st is None or not st.has_min_max
+                or not isinstance(st.min, (int, float, str))):
+            return None
+        out = _merge_bounds(out, [st.min, st.max])
+    return out
+
+
 def _merge_summaries(prev: tuple, new: tuple) -> tuple:
     """Manifest (record_count, column_bounds) of an append: the parent
     snapshot's summary plus the new commit's. A count or a column the
@@ -211,11 +231,9 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(os.path.join(self._data_dir, commit_dir))
-        record_count, column_bounds = self._footer_summary(commit_dir)
+        record_count, column_bounds, file_stats = self._footer_summary(
+            commit_dir)
         added_count = record_count
-        file_stats = (
-            self._collect_file_stats(df.sparkSession, commit_dir)
-            if self.stats_by else {})
         file_blooms = (
             self._collect_file_blooms(df.sparkSession, commit_dir)
             if self.bloom_by else {})
@@ -262,14 +280,12 @@ class SnapshotTable:
         )
 
     def _footer_summary(self, commit_dir: str
-                        ) -> tuple[int, dict[str, list]]:
-        """(rows, {col: [min, max]}) of one commit's data files, read
-        from their Parquet footers on the driver — no Spark job, the
-        way an Iceberg writer reports record counts and column bounds
-        into its manifest. A ``bounds_by`` column is left out when any
-        row group holding values lacks min/max statistics (or they are
-        not JSON numbers/strings); [None, None] means no non-null
-        values."""
+                        ) -> tuple[int, dict[str, list], dict[str, Any]]:
+        """(rows, {col: [min, max]}, {file: {col: [min, max]}}) of one
+        commit: its row count, the ``bounds_by`` columns' bounds and each
+        non-empty file's ``stats_by`` bounds (keyed relative to the data
+        dir), read from the Parquet footers on the driver with no Spark
+        job. A column :func:`_footer_bounds` cannot bound is left out."""
         import glob as _glob
 
         import pyarrow.parquet as pq
@@ -277,31 +293,21 @@ class SnapshotTable:
         rows = 0
         bounds: dict[str, list | None] = {c: [None, None]
                                           for c in self.bounds_by}
+        file_stats: dict[str, Any] = {}
         for path in _glob.glob(os.path.join(self._data_dir, commit_dir,
                                             "**", "*.parquet"),
                                recursive=True):
             md = pq.read_metadata(path)
             rows += md.num_rows
-            names = [md.schema.column(i).name
-                     for i in range(md.num_columns)]
             for c, b in bounds.items():
-                if b is None:
-                    continue
-                if c not in names:
-                    bounds[c] = None
-                    continue
-                j = names.index(c)
-                for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(j).statistics
-                    if st is not None and st.null_count == \
-                            md.row_group(g).num_rows:
-                        continue  # all null: nothing to bound
-                    if (st is None or not st.has_min_max
-                            or not isinstance(st.min, (int, float, str))):
-                        bounds[c] = None
-                        break
-                    b[:] = _merge_bounds(b, [st.min, st.max])
-        return rows, {c: b for c, b in bounds.items() if b is not None}
+                fb = None if b is None else _footer_bounds(md, c)
+                bounds[c] = None if fb is None else _merge_bounds(b, fb)
+            if self.stats_by and md.num_rows:
+                per_file = {c: _footer_bounds(md, c) for c in self.stats_by}
+                file_stats[os.path.relpath(path, self._data_dir)] = {
+                    c: b for c, b in per_file.items() if b is not None}
+        return (rows, {c: b for c, b in bounds.items() if b is not None},
+                file_stats)
 
     def _publish(self, parent: int | None, operation: str,
                  metadata: dict[str, Any] | None, **fields: Any) -> int:
@@ -342,34 +348,6 @@ class SnapshotTable:
             "record_count": prev.get("record_count"),
             "column_bounds": prev.get("column_bounds") or {},
         }
-
-    def _collect_file_stats(self, spark: SparkSession,
-                            commit_dir: str) -> dict[str, Any]:
-        """Per-data-file min/max for the ``stats_by`` columns — the
-        Iceberg manifest-stats analog: one grouped aggregate over the
-        just-written commit keyed by ``input_file_name()``. Keys are
-        paths relative to the table's data dir so the manifest stays
-        relocatable."""
-        from pyspark.sql import functions as F
-
-        base = os.path.join(self._data_dir, commit_dir)
-        aggs = []
-        for c in self.stats_by:
-            aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-        rows = (
-            spark.read.parquet(base)
-            .groupBy(F.input_file_name().alias("_f"))
-            .agg(*aggs)
-            .collect()
-        )
-        out: dict[str, Any] = {}
-        for r in rows:
-            p = r["_f"]
-            p = p[len("file:"):] if p.startswith("file:") else p
-            rel = os.path.relpath(p, self._data_dir)
-            out[rel] = {c: [r[f"_mn_{c}"], r[f"_mx_{c}"]]
-                        for c in self.stats_by}
-        return out
 
     def _collect_file_blooms(self, spark: SparkSession,
                              commit_dir: str) -> dict[str, Any]:

@@ -186,7 +186,7 @@ def main() -> None:
     p = plan_of(cuckoo_prefilter(keyed, ctab, n_buckets=8))
     cs = CuckooSeenSet(keyed.select("url_sha1"), n_buckets=8)
     delta = keyed.select("url_sha1").limit(20)
-    edit_plan = plan_of(cs._edit_blobs(delta, "remove"))
+    edit_plan = plan_of(cs._edit(delta, cs.kernel.remove))
     cs.release()
     sections.append((
         "Seen-set cuckoo filter (A5): deletion without history rescan",

@@ -1,17 +1,26 @@
 """spark-submit entry point for the crawl engine.
 
 Deployment shape per the project brief: ship the package with
-``--py-files`` and drive the round loop from this script:
+``--py-files`` and drive the round loop from this script. From the
+repository root:
 
-    cd /root/repo && python -c "from commoncrawl_spark.session import \
-_package_zip; print(_package_zip())"   # build the zip
+    python -c "from commoncrawl_spark.session import _package_zip; \
+print(_package_zip())"   # build the zip
     spark-submit --py-files .commoncrawl_spark.zip \
+        --conf spark.checkpoint.dir=hdfs:///crawl/lineage \
         scripts/run_crawl.py --pages pages.parquet --cdx cdx.parquet \
         --checkpoint /data/crawl_ckpt --budget 200 --max-rounds 10
 
 On a cluster, add --master / executor confs as usual; the engine only
 assumes a SparkSession and table paths. Re-running with the same
 --checkpoint resumes from the last committed frontier snapshot.
+
+``spark.checkpoint.dir`` must name a fault-tolerant store (HDFS, S3, a
+shared mount). Spark sets the context's checkpoint directory from it at
+start-up, so every lineage cut (``commoncrawl_spark.materialize``) is a
+reliable ``checkpoint`` that survives executor loss. Without it the
+cuts fall back to ``localCheckpoint``, whose blocks live only on the
+executors that computed them.
 """
 
 from __future__ import annotations

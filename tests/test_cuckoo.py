@@ -223,15 +223,36 @@ def test_cuckoo_seen_set_readd_after_remove(spark, keyed):
 
 @pytest.mark.spark
 def test_cuckoo_seen_set_auto_rebuild_on_load(spark, keyed):
-    """Past ~85% load, add() rebuilds resized instead of spilling —
-    capacity grows and membership stays exact."""
+    """A bucket pushed past ~85% load by add() is rebuilt resized
+    instead of spilling — the blob table's summed capacity grows and
+    membership stays exact."""
+    def capacity(s):
+        return sum(r["n_slots"] for r in s.blobs.collect()) * _ASSOC
+
     half = keyed.filter(F.crc32("url") % 10 < 1).select("url_sha1")
     rest = keyed.filter(F.crc32("url") % 10 >= 1).select("url_sha1")
     s = CuckooSeenSet(half, n_buckets=4, headroom=1.1)
-    cap0 = s._capacity
+    cap0 = capacity(s)
     s.add(rest)  # 10x the keys: must trip the rebuild
-    assert s._capacity > cap0
+    assert capacity(s) > cap0
     assert {r["url_sha1"] for r in s.unseen(keyed).collect()} == set()
+    s.release()
+
+
+@pytest.mark.spark
+def test_cuckoo_seen_set_construction_runs_no_job(spark, keyed):
+    """The state is lazy: the base generation and the blobs are built by
+    the first probe that reads them, not by the constructor."""
+    seen = keyed.select("url_sha1")
+    sc = spark.sparkContext
+    sc.setJobGroup("cuckoo-init", "cuckoo-init")
+    try:
+        s = CuckooSeenSet(seen, n_buckets=8)
+        assert list(sc.statusTracker().getJobIdsForGroup("cuckoo-init")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s.unseen(keyed).count() == 0
     s.release()
 
 

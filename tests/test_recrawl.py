@@ -62,9 +62,10 @@ def test_evict_unknown_urls_is_noop(spark, tables, tmp_path_factory):
 @pytest.mark.spark
 @pytest.mark.parametrize("state", ["cuckoo", "bloom"])
 def test_evict_updates_filter_state(spark, tables, tmp_path_factory, state):
-    """cuckoo: the live state object is edited IN PLACE (same instance
-    survives the eviction). bloom: the state cannot delete, so it is
-    released and lazily rebuilt. Both stay membership-exact."""
+    """The live state object is edited IN PLACE (the same instance
+    survives the eviction): cuckoo clears fingerprints, Bloom rebuilds
+    the touched buckets from its remaining key history. Both stay
+    membership-exact."""
     pages, cdx = tables
     job = CrawlJob(spark, str(tmp_path_factory.mktemp(f"recrawl_{state}")),
                    budget_per_host=BUDGET, bloom_threshold=10,
@@ -79,10 +80,7 @@ def test_evict_updates_filter_state(spark, tables, tmp_path_factory, state):
 
     evict = job.articles_df().select("url").orderBy("url").limit(15)
     assert job.evict_for_recrawl(evict, requeue=False) == 15
-    if state == "cuckoo":
-        assert job._bloom is st  # in-place fingerprint deletion
-    else:
-        assert job._bloom is None  # released; rebuilt on next use
+    assert job._bloom is st
     # evicted keys now pass the membership filter; the rest stay caught
     unseen = job._filter_unseen(probe)
     from commoncrawl_spark.operators.seen_set import with_url_key
@@ -90,8 +88,7 @@ def test_evict_updates_filter_state(spark, tables, tmp_path_factory, state):
     want = {r["url_sha1"]
             for r in with_url_key(evict).select("url_sha1").collect()}
     assert {r["url_sha1"] for r in unseen.collect()} == want
-    if job._bloom is not None:
-        job._bloom.release()
+    job._bloom.release()
 
 
 @pytest.mark.spark

@@ -3,16 +3,25 @@ negatives, bounded false positives), composed scalable path exactness."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from commoncrawl_spark.operators.cuckoo import CuckooSeenSet
 from commoncrawl_spark.operators.seen_set import (
+    BloomSeenSet,
     anti_join_seen,
     anti_join_seen_scalable,
     bloom_prefilter,
     build_bloom_table,
+    build_table,
+    prefilter,
     with_url_key,
 )
+
+# the generational state tests run over both filter kernels
+STATES = pytest.mark.parametrize(
+    "state", [BloomSeenSet, CuckooSeenSet], ids=["bloom", "cuckoo"])
 
 
 @pytest.fixture(scope="module")
@@ -100,12 +109,25 @@ def test_scalable_anti_join_equals_exact(spark, keyed):
     assert scalable == exact
 
 
-def _blob_rows(blooms, buckets=None):
-    return sorted(
-        (r["bucket"], r["m_bits"], r["k_hashes"], r["n_keys"],
-         bytes(r["bloom"]))
-        for r in blooms.collect()
-        if buckets is None or r["bucket"] in buckets)
+def _blob_rows(blobs, buckets=None):
+    """(bucket, size, n_keys, content) per blob. Bloom bits are a pure
+    function of a bucket's keys; a cuckoo table's slot layout depends on
+    insert order, so its content is the multiset of fingerprints it
+    stores (table slots and spill)."""
+    out = []
+    for r in blobs.collect():
+        if buckets is not None and r["bucket"] not in buckets:
+            continue
+        d = r.asDict()
+        if "bloom" in d:
+            out.append((d["bucket"], d["m_bits"], d["n_keys"],
+                        (d["k_hashes"], bytes(d["bloom"]))))
+        else:
+            table = np.frombuffer(d["table"], np.uint16)
+            spill = np.frombuffer(d["spill"], np.uint64) & 0xFFFF
+            fps = sorted(table[table != 0].tolist() + spill.tolist())
+            out.append((d["bucket"], d["n_slots"], d["n_keys"], fps))
+    return sorted(out)
 
 
 def _sha_keys(spark, prefix, n):
@@ -115,27 +137,27 @@ def _sha_keys(spark, prefix, n):
 
 
 @pytest.mark.spark
-def test_bloom_seen_set_adds_stay_exact_and_within_fpr(spark):
-    """After several delta-sized adds (keys OR-ed into blobs sized with
+@STATES
+def test_seen_set_adds_stay_exact_and_within_fpr(spark, state):
+    """After several delta-sized adds (keys folded into blobs sized with
     headroom; the first delta fits every bucket, the later ones push
     some past capacity), ``unseen`` over every key still equals the
     exact anti-join — no false negatives — and the measured FPR on fresh
     probes stays within test_bloom_fpr_within_budget's budget."""
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
-
     parts = [_sha_keys(spark, f"p{i}-", n)
              for i, n in enumerate((3000, 500, 1500, 3000))]
-    s = BloomSeenSet(parts[0], n_buckets=16)
-    sizes = {r["bucket"]: r["m_bits"] for r in s.blooms.collect()}
+    s = state(parts[0], n_buckets=16)
+    size = s.kernel.size_col
+    sizes = {r["bucket"]: r[size] for r in s.blobs.collect()}
     s.add(parts[1])
     # a delta within every bucket's headroom is folded, never rebuilt
-    assert {r["bucket"]: r["m_bits"] for r in s.blooms.collect()} == sizes
+    assert {r["bucket"]: r[size] for r in s.blobs.collect()} == sizes
     for p in parts[2:]:
         s.add(p)
     assert len(s._gens) == 4
-    rows = s.blooms.collect()
+    rows = s.blobs.collect()
     assert sum(r["n_keys"] for r in rows) == 8000
-    assert any(r["m_bits"] != sizes[r["bucket"]] for r in rows)
+    assert any(r[size] != sizes[r["bucket"]] for r in rows)
 
     everything = parts[0]
     for p in parts[1:]:
@@ -145,54 +167,54 @@ def test_bloom_seen_set_adds_stay_exact_and_within_fpr(spark):
     got = {r["url_sha1"] for r in s.unseen(probe).collect()}
     want = {r["url_sha1"] for r in anti_join_seen(probe, everything).collect()}
     assert got == want
-    fp = (bloom_prefilter(fresh, s.blooms, 16)
+    fp = (prefilter(fresh, s.blobs, s.kernel, 16)
           .filter(F.col("_maybe_seen")).count())
     assert fp / 5000 < 0.02
     s.release()
 
 
 @pytest.mark.spark
-def test_bloom_seen_set_capacity_rebuild_and_compaction_equal_fresh_build(
-        spark):
-    """The two points where BloomSeenSet rebuilds blobs from key history
-    give exactly a fresh build of the same keys (blobs are pure
-    functions of a bucket's keys and the headroom): a delta that pushes
-    buckets past capacity rebuilds those buckets, and a compaction
-    rebuilds every blob."""
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
-
+@STATES
+def test_seen_set_capacity_rebuild_and_compaction_equal_fresh_build(
+        spark, state):
+    """The two points where the state rebuilds blobs from key history
+    give a fresh build of the same keys (blobs are functions of a
+    bucket's keys and the headroom): a delta that pushes buckets past
+    capacity rebuilds those buckets, and a compaction rebuilds every
+    blob."""
     a, b = _sha_keys(spark, "a-", 1000), _sha_keys(spark, "b-", 4000)
-    s = BloomSeenSet(a, n_buckets=8, max_generations=3)
-    before = {r["bucket"]: r["m_bits"] for r in s.blooms.collect()}
-    s.add(b)  # 5x the keys: past every bucket's 2x headroom
-    rows = s.blooms.collect()
-    rebuilt = {r["bucket"] for r in rows if r["m_bits"] != before[r["bucket"]]}
+    s = state(a, n_buckets=8, max_generations=3)
+    size = s.kernel.size_col
+    before = {r["bucket"]: r[size] for r in s.blobs.collect()}
+    s.add(b)  # 5x the keys: past every bucket's headroom
+    rows = s.blobs.collect()
+    rebuilt = {r["bucket"] for r in rows if r[size] != before[r["bucket"]]}
     assert rebuilt == set(before)
-    fresh = build_bloom_table(a.unionByName(b), n_buckets=8, headroom=2.0)
-    assert _blob_rows(s.blooms, rebuilt) == _blob_rows(fresh, rebuilt)
+    fresh = build_table(a.unionByName(b), s.kernel, n_buckets=8)
+    assert _blob_rows(s.blobs, rebuilt) == _blob_rows(fresh, rebuilt)
 
     c, d = _sha_keys(spark, "c-", 100), _sha_keys(spark, "d-", 100)
     s.add(c)
     s.add(d)  # 4 generations > 3: compacted
     assert len(s._gens) == 1
-    fresh = build_bloom_table(
-        a.unionByName(b).unionByName(c).unionByName(d), n_buckets=8,
-        headroom=2.0)
-    assert _blob_rows(s.blooms) == _blob_rows(fresh)
+    fresh = build_table(
+        a.unionByName(b).unionByName(c).unionByName(d), s.kernel,
+        n_buckets=8)
+    assert _blob_rows(s.blobs) == _blob_rows(fresh)
     s.release()
 
 
 @pytest.mark.spark
-def test_bloom_seen_set_add_from_committed_files(spark, tmp_path):
+@STATES
+def test_seen_set_add_from_committed_files(spark, tmp_path, state):
     """A delta read back from a snapshot commit's own files (stable
     storage) joins the state with no lineage cut, and an empty one is a
     no-op."""
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
     from commoncrawl_spark.tables import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "seen"))
     t.append(_sha_keys(spark, "a-", 800))
-    s = BloomSeenSet(t.read(spark), n_buckets=8)
+    s = state(t.read(spark), n_buckets=8)
     t.append(_sha_keys(spark, "b-", 300))
     assert t.snapshot()["added_count"] == 300
     s.add(t.read_added(spark), n_new=t.snapshot()["added_count"])
@@ -210,8 +232,6 @@ def test_bloom_seen_set_add_from_committed_files(spark, tmp_path):
 
 @pytest.mark.spark
 def test_bloom_seen_set_unseen_is_exact(spark, keyed):
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
-
     seen = keyed.filter(F.crc32("url") % 3 == 0).select("url_sha1")
     s = BloomSeenSet(seen, n_buckets=8)
     got = {r["url_sha1"] for r in s.unseen(keyed).collect()}
@@ -221,14 +241,13 @@ def test_bloom_seen_set_unseen_is_exact(spark, keyed):
 
 
 @pytest.mark.spark
-def test_bloom_seen_set_verify_never_reshuffles_seen(spark, keyed):
+@STATES
+def test_seen_set_verify_never_reshuffles_seen(spark, keyed, state):
     """The steady-state scale property: generations are persisted
     hash-partitioned on the key, so the verify fold adds ZERO exchanges
     per generation — the plan's exchange count is identical with 1 and
     with 4 generations (only the survivors and the bucket cogroup
     shuffle), and the cached generations feed the joins directly."""
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
-
     def exchanges(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
         # exclude exchanges stored INSIDE cached relations (executed once
@@ -247,9 +266,9 @@ def test_bloom_seen_set_verify_never_reshuffles_seen(spark, keyed):
 
     quarters = [keyed.filter(F.crc32("url") % 4 == i).select("url_sha1")
                 for i in range(4)]
-    s1 = BloomSeenSet(quarters[0], n_buckets=8)
+    s1 = state(quarters[0], n_buckets=8)
     one_gen = exchanges(s1.unseen(keyed))
-    s4 = BloomSeenSet(quarters[0], n_buckets=8, max_generations=10)
+    s4 = state(quarters[0], n_buckets=8, max_generations=10)
     for q in quarters[1:]:
         s4.add(q)
     assert len(s4._gens) == 4
@@ -266,14 +285,13 @@ def test_bloom_seen_set_verify_never_reshuffles_seen(spark, keyed):
 
 
 @pytest.mark.spark
-def test_bloom_seen_set_compaction_preserves_membership(spark, keyed):
+@STATES
+def test_seen_set_compaction_preserves_membership(spark, keyed, state):
     """Adds past max_generations trigger compaction; membership answers
     are unchanged before/after and generation count collapses to one."""
-    from commoncrawl_spark.operators.seen_set import BloomSeenSet
-
     parts = [keyed.filter(F.crc32("url") % 3 == i).select("url_sha1")
              for i in range(3)]
-    s = BloomSeenSet(parts[0], n_buckets=8, max_generations=2)
+    s = state(parts[0], n_buckets=8, max_generations=2)
     s.add(parts[1])
     s.add(parts[2])  # 3 gens > 2 -> compacted
     assert len(s._gens) == 1

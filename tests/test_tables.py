@@ -614,19 +614,35 @@ def test_manifest_counts_and_bounds_from_footers(spark, tmp_path):
     row count and its bounds_by columns' [min, max], read from the
     Parquet footers at commit: count() and column_max() then need no
     Spark job. A delete makes them unknown (Spark fallback), and so
-    does a manifest written before these fields existed."""
+    does a manifest written before these fields existed. The stats_by
+    columns' per-file [min, max] come from the same footers and equal a
+    Spark min/max per input file."""
     import json
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
 
     def rows(lo, hi, v="cast(id * 2 as int)"):
-        return spark.range(lo, hi).selectExpr("id", f"{v} as v")
+        return spark.range(lo, hi).selectExpr(
+            "id", f"{v} as v", "concat('k', id) as s")
 
-    t = SnapshotTable(str(tmp_path / "t"), bounds_by=("v",))
+    def spark_file_stats():
+        aggs = [f(c) for c in ("id", "v", "s") for f in (F.min, F.max)]
+        out = t.read(spark).groupBy(F.input_file_name()).agg(*aggs).collect()
+        return {os.path.relpath(urlparse(r[0]).path, t._data_dir):
+                {"id": [r[1], r[2]], "v": [r[3], r[4]], "s": [r[5], r[6]]}
+                for r in out}
+
+    t = SnapshotTable(str(tmp_path / "t"), bounds_by=("v",),
+                      stats_by=("id", "v", "s"))
     assert t.count(spark) == 0
     t.append(rows(0, 10))
     t.append(rows(10, 15))
     snap = t.snapshot()
     assert (snap["added_count"], snap["record_count"]) == (5, 15)
     assert snap["column_bounds"] == {"v": [0, 28]}
+    assert snap["file_stats"] == spark_file_stats()
+    assert len(snap["file_stats"]) > 2
     assert snap["metadata"] == {}
     sc = spark.sparkContext
     sc.setJobGroup("manifest-probe", "manifest-probe")
@@ -642,6 +658,7 @@ def test_manifest_counts_and_bounds_from_footers(spark, tmp_path):
 
     t.overwrite(rows(0, 3, v="cast(null as int)"))
     assert t.count(spark) == 3 and t.column_max(spark, "v") is None
+    assert t.snapshot()["file_stats"] == spark_file_stats()
     t.retag({"round": 1})
     assert t.snapshot()["added_count"] == 0 and t.count(spark) == 3
     with pytest.raises(ValueError):
