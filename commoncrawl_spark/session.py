@@ -1,7 +1,8 @@
 """SparkSession factory with the engine's standard configuration.
 
 Single-JVM ``local[N]`` in this sandbox; on a real cluster the same
-builder options apply (AQE, Arrow, UTC, shuffle partitions ~ cores).
+builder options apply (AQE, Arrow, UTC, shuffle partitions ~ cores, a
+codegen cache that holds a crawl round's classes).
 """
 
 from __future__ import annotations
@@ -79,6 +80,14 @@ def get_spark(
         # measurement — ParallelGC is the right collector for this
         # throughput-batch workload (2x on the extraction stage at 32 cores)
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # a crawl round's generated classes overflow Spark's default
+        # 100-entry codegen cache: each round evicted its own classes
+        # before reuse, so Janino recompiled 90-110 sources per benchmark
+        # fat_single_round round and 170-180 per discovery_restart round
+        # (4-core host), and the JIT compiled every new class again. 1024
+        # holds a crawl's working set: an identical repeated round
+        # compiles none. A static conf, read once at JVM start.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the reliable-materialization seam (materialize.py) switches

@@ -16,7 +16,10 @@ wrote (``added_count``), the snapshot's ``record_count`` and, for the
 ``bounds_by`` columns, its ``column_bounds`` ([min, max]), summed and
 merged from the Parquet footers each commit just wrote — so row counts
 and column maxima are answered without a Spark job
-(:meth:`SnapshotTable.count`, :meth:`SnapshotTable.column_max`).
+(:meth:`SnapshotTable.count`, :meth:`SnapshotTable.column_max`). An
+unpartitioned table's manifest also carries the snapshot's Spark
+``schema``, from the same footers, so reading it runs no
+schema-inference job.
 
 Commit protocol (crash-safe, mirrors the reference's append-only logs +
 "scan outputs to rebuild state" resume at download_and_merge.py:83-102):
@@ -28,6 +31,7 @@ snapshot fully intact or orphan data dirs that no manifest references
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -48,13 +52,13 @@ def _spark_cast_string(value: Any) -> str | None:
     ``true`` not ``True``; 1.0e7 renders ``1.0E7`` not ``10000000.0``;
     timestamps trim trailing fraction zeros). Returns None for values
     whose rendering is not replicated here (bytes — UTF-8 lossy decode;
-    Decimal — needs the column's scale, which the manifest does not
-    record; tz-aware datetimes — Spark renders the instant in the
-    session timezone; doubles outside [1e-290, 9e15) — JDK 17's legacy
+    Decimal — needs the column's scale, which the probe is not given;
+    tz-aware datetimes — Spark renders the instant in the session
+    timezone; doubles outside [1e-290, 9e15) — JDK 17's legacy
     Double.toString emits non-shortest digits there); callers must then
-    fall back to keeping all files, never guess. Pass the probe value with the Python type matching the
-    column type (int for bigint, float for double): the manifest stores
-    no schema, so the probe cannot coerce for you, and hashing 5
+    fall back to keeping all files, never guess. Pass the probe value
+    with the Python type matching the column type (int for bigint, float
+    for double): the probe does not coerce it for you, and hashing 5
     against a double column (built as "5.0") would miss.
     """
     import datetime
@@ -141,6 +145,47 @@ def _footer_bounds(md, c: str) -> list | None:
             return None
         out = _merge_bounds(out, [st.min, st.max])
     return out
+
+
+#: the footer key under which Spark's parquet writer stores the Spark
+#: schema (JSON) of the rows it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _merge_types(a: Any, b: Any, where: str = "schema") -> Any:
+    """Spark's parquet schema merge (``mergeSchema``) over the JSON form
+    of two data types: a struct keeps ``a``'s fields in order, merges
+    the ones ``b`` shares and appends the rest of ``b``'s; arrays and
+    maps merge their element types; nullability is ORed. Any other
+    difference is a type change and raises."""
+    if isinstance(a, dict) and isinstance(b, dict) and a["type"] == b["type"]:
+        if a["type"] == "struct":
+            theirs = {f["name"]: f for f in b["fields"]}
+            ours = {f["name"] for f in a["fields"]}
+            fields = [
+                {**f, "type": _merge_types(f["type"], g["type"],
+                                           f"{where}.{f['name']}"),
+                 "nullable": f["nullable"] or g["nullable"]}
+                if (g := theirs.get(f["name"])) else f
+                for f in a["fields"]]
+            return {**a, "fields": fields + [f for f in b["fields"]
+                                             if f["name"] not in ours]}
+        if a["type"] == "array":
+            return {**a, "elementType": _merge_types(
+                        a["elementType"], b["elementType"], f"{where}[]"),
+                    "containsNull": a["containsNull"] or b["containsNull"]}
+        if a["type"] == "map":
+            return {**a,
+                    "keyType": _merge_types(a["keyType"], b["keyType"],
+                                            f"{where}.key"),
+                    "valueType": _merge_types(a["valueType"], b["valueType"],
+                                              f"{where}.value"),
+                    "valueContainsNull": (a["valueContainsNull"]
+                                          or b["valueContainsNull"])}
+    if a != b:
+        raise ValueError(f"type of {where} changed: {json.dumps(a)} -> "
+                         f"{json.dumps(b)}")
+    return a
 
 
 def _merge_summaries(prev: tuple, new: tuple) -> tuple:
@@ -231,8 +276,8 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(os.path.join(self._data_dir, commit_dir))
-        record_count, column_bounds, file_stats = self._footer_summary(
-            commit_dir)
+        record_count, column_bounds, file_stats, schema = \
+            self._footer_summary(commit_dir)
         added_count = record_count
         file_blooms = (
             self._collect_file_blooms(df.sparkSession, commit_dir)
@@ -262,6 +307,10 @@ class SnapshotTable:
             record_count, column_bounds = _merge_summaries(
                 (prev.get("record_count"), prev.get("column_bounds") or {}),
                 (record_count, column_bounds))
+            # a parent without a recorded schema leaves the files it
+            # carries over unknown: the snapshot's schema stays unknown
+            schema = (_merge_types(prev["schema"], schema)
+                      if prev.get("schema") and schema else None)
         else:
             delete_files, delete_key = [], None
         return self._publish(
@@ -277,15 +326,19 @@ class SnapshotTable:
             added_count=added_count,
             record_count=record_count,
             column_bounds=column_bounds,
+            schema=schema,
         )
 
-    def _footer_summary(self, commit_dir: str
-                        ) -> tuple[int, dict[str, list], dict[str, Any]]:
-        """(rows, {col: [min, max]}, {file: {col: [min, max]}}) of one
-        commit: its row count, the ``bounds_by`` columns' bounds and each
-        non-empty file's ``stats_by`` bounds (keyed relative to the data
-        dir), read from the Parquet footers on the driver with no Spark
-        job. A column :func:`_footer_bounds` cannot bound is left out."""
+    def _footer_summary(self, commit_dir: str) -> tuple[
+            int, dict[str, list], dict[str, Any], dict[str, Any] | None]:
+        """(rows, {col: [min, max]}, {file: {col: [min, max]}}, schema)
+        of one commit: its row count, the ``bounds_by`` columns' bounds,
+        each non-empty file's ``stats_by`` bounds (keyed relative to the
+        data dir) and the Spark schema (JSON) of the rows it wrote, read
+        from the Parquet footers on the driver with no Spark job. A
+        column :func:`_footer_bounds` cannot bound is left out; the
+        schema is None for a partitioned table (its footers lack the
+        partition columns) or when a file does not record one."""
         import glob as _glob
 
         import pyarrow.parquet as pq
@@ -294,11 +347,13 @@ class SnapshotTable:
         bounds: dict[str, list | None] = {c: [None, None]
                                           for c in self.bounds_by}
         file_stats: dict[str, Any] = {}
+        schemas: set[bytes | None] = set()
         for path in _glob.glob(os.path.join(self._data_dir, commit_dir,
                                             "**", "*.parquet"),
                                recursive=True):
             md = pq.read_metadata(path)
             rows += md.num_rows
+            schemas.add((md.metadata or {}).get(_SPARK_SCHEMA_KEY))
             for c, b in bounds.items():
                 fb = None if b is None else _footer_bounds(md, c)
                 bounds[c] = None if fb is None else _merge_bounds(b, fb)
@@ -306,8 +361,12 @@ class SnapshotTable:
                 per_file = {c: _footer_bounds(md, c) for c in self.stats_by}
                 file_stats[os.path.relpath(path, self._data_dir)] = {
                     c: b for c, b in per_file.items() if b is not None}
+        schema = None
+        if schemas and None not in schemas and not self.partition_by:
+            schema = functools.reduce(_merge_types,
+                                      map(json.loads, sorted(schemas)))
         return (rows, {c: b for c, b in bounds.items() if b is not None},
-                file_stats)
+                file_stats, schema)
 
     def _publish(self, parent: int | None, operation: str,
                  metadata: dict[str, Any] | None, **fields: Any) -> int:
@@ -347,6 +406,7 @@ class SnapshotTable:
             "added_count": 0,
             "record_count": prev.get("record_count"),
             "column_bounds": prev.get("column_bounds") or {},
+            "schema": prev.get("schema"),
         }
 
     def _collect_file_blooms(self, spark: SparkSession,
@@ -635,14 +695,23 @@ class SnapshotTable:
                 out = out.unionByName(spark.read.parquet(p),
                                       allowMissingColumns=True)
         else:
-            # mergeSchema reconciles per-commit schemas by union —
-            # Iceberg's add-column evolution: appends may carry new
-            # columns; rows from older commits read them as null. Type
-            # CHANGES still fail loudly (parquet merge refuses), which
-            # is the safe default.
-            out = (spark.read.option("mergeSchema", "true")
-                   .parquet(*paths))
+            out = self._reader(spark, snap).parquet(*paths)
         return self._apply_deletes(spark, out, snap)
+
+    @staticmethod
+    def _reader(spark: SparkSession, snap: dict[str, Any]):
+        """A parquet reader for a snapshot's files. It takes the schema
+        the manifest recorded (``schema``: the commits' footer schemas,
+        merged at commit as Spark's ``mergeSchema`` merges them —
+        Iceberg's add-column evolution, so rows from older commits read
+        a newer column as null), which spares the read a schema-inference
+        job. A manifest without one infers with ``mergeSchema``; a type
+        CHANGE fails loudly either way (at commit, or in the merge)."""
+        from pyspark.sql import types as T
+
+        if snap.get("schema"):
+            return spark.read.schema(T.StructType.fromJson(snap["schema"]))
+        return spark.read.option("mergeSchema", "true")
 
     def _apply_deletes(self, spark: SparkSession, out: DataFrame,
                        snap: dict[str, Any]) -> DataFrame:
@@ -659,15 +728,17 @@ class SnapshotTable:
     def read_added(self, spark: SparkSession) -> DataFrame:
         """The rows the current snapshot's own commit wrote: its data
         dir only, not the files carried over from its parent (the
-        snapshot must be an append or an overwrite). Deletes apply as
-        in :meth:`read`. A delta read this way comes from stable
-        storage, so it needs no lineage cut to be re-read identically."""
+        snapshot must be an append or an overwrite), in the snapshot's
+        schema. Deletes apply as in :meth:`read`. A delta read this way
+        comes from stable storage, so it needs no lineage cut to be
+        re-read identically."""
         snap = self.snapshot()
         if snap is None or snap["operation"] not in ("append", "overwrite"):
             raise ValueError(f"table {self.root}: the current snapshot "
                              "wrote no data files")
         path = os.path.join(self._data_dir, snap["files"][-1])
-        return self._apply_deletes(spark, spark.read.parquet(path), snap)
+        return self._apply_deletes(
+            spark, self._reader(spark, snap).parquet(path), snap)
 
     def count(self, spark: SparkSession) -> int:
         """Rows in the current snapshot, 0 for a table without one: the

@@ -8,6 +8,7 @@ repository root:
 print(_package_zip())"   # build the zip
     spark-submit --py-files .commoncrawl_spark.zip \
         --conf spark.checkpoint.dir=hdfs:///crawl/lineage \
+        --conf spark.sql.codegen.cache.maxEntries=1024 \
         scripts/run_crawl.py --pages pages.parquet --cdx cdx.parquet \
         --checkpoint /data/crawl_ckpt --budget 200 --max-rounds 10
 
@@ -21,6 +22,14 @@ start-up, so every lineage cut (``commoncrawl_spark.materialize``) is a
 reliable ``checkpoint`` that survives executor loss. Without it the
 cuts fall back to ``localCheckpoint``, whose blocks live only on the
 executors that computed them.
+
+Under spark-submit the script builds on the submitted conf verbatim, so
+the settings ``commoncrawl_spark.session.get_spark`` adds do not apply
+there. Pass ``spark.sql.codegen.cache.maxEntries=1024``: it is a static
+conf, and at Spark's default of 100 entries a crawl round evicts its own
+compiled classes before the next round reuses them, so every round
+recompiles its whole-stage-codegen sources (and the JIT recompiles the
+new classes).
 """
 
 from __future__ import annotations

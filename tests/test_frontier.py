@@ -352,8 +352,9 @@ def test_mid_round_crash_between_commits_replays_idempotently(
 # Spark jobs a round may launch under its caller's job group, measured
 # on this fixture (8 shuffle partitions): a slim outcome frame counted in
 # one aggregate, an O(delta) Bloom add, counts and the frontier's max
-# crawl_rank from manifests
-ROUND_JOB_BUDGET = 43
+# crawl_rank from manifests, table schemas from manifests (no
+# schema-inference job per read)
+ROUND_JOB_BUDGET = 41
 
 
 @pytest.mark.spark
@@ -395,6 +396,28 @@ def test_round_job_budget_and_job_group_hygiene(spark, tables,
     assert job._bloom is not None  # rounds 1-2 add to the Bloom state
     assert cached and not [c for c in cached if "html" in c], cached
     assert max(jobs) <= ROUND_JOB_BUDGET, jobs
+
+
+@pytest.mark.spark
+def test_repeated_round_compiles_no_new_code(spark, tables,
+                                             tmp_path_factory):
+    """An identical second crawl round reuses every class the first one
+    compiled: the session's codegen cache holds a round's working set.
+    At Spark's 100-entry default the round evicted its own classes
+    before reuse, so every round recompiled them all."""
+    pages, cdx, _ = tables
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    compiles = []
+    for _ in range(2):
+        job = CrawlJob(spark, str(tmp_path_factory.mktemp("recompile")),
+                       budget_per_host=BUDGET)
+        job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+        before = compiled.getCount()
+        assert job.run_round(pages)
+        compiles.append(compiled.getCount() - before)
+    assert compiles[1] == 0, compiles
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
 
 
 @pytest.mark.spark

@@ -555,21 +555,56 @@ def test_bloom_requires_unpartitioned(tmp_path):
 # schema evolution (Iceberg add-column semantics)
 # ---------------------------------------------------------------------------
 
+def _assert_reads_manifest_schema(spark, t, snapshot_id=None):
+    """read (and, at the current snapshot, read_added) of ``t`` launch no
+    Spark job and return the schema a merging parquet read of the
+    snapshot's files infers: names, types, order and nullability,
+    nested fields included."""
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-probe", "schema-probe")
+    try:
+        reads = [t.read(spark, snapshot_id)]
+        if snapshot_id is None:
+            reads.append(t.read_added(spark))
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "schema-probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    files = [os.path.join(t._data_dir, f)
+             for f in t.snapshot(snapshot_id)["files"]]
+    want = spark.read.option("mergeSchema", "true").parquet(*files).schema
+    for df in reads:
+        assert df.schema.jsonValue() == want.jsonValue()
+
+
 def test_schema_evolution_add_column(spark, tmp_path):
     from pyspark.sql import functions as F
 
     t = SnapshotTable(str(tmp_path / "se"))
-    t.append(spark.range(3).select(F.col("id").alias("url_id")))
-    # later commit carries a NEW column
+    t.append(spark.range(3).select(
+        F.col("id").alias("url_id"),
+        F.struct(F.col("id").alias("a")).alias("meta")))
+    # later commit carries NEW columns, one of them nested in a struct
     t.append(spark.range(3, 6).select(
         F.col("id").alias("url_id"),
-        F.lit("en").alias("lang")))
+        F.lit("en").alias("lang"),
+        F.struct(F.col("id").alias("a"), F.lit(0.5).alias("q")).alias("meta"),
+        F.array(F.struct(F.lit("x").alias("k"))).alias("tags")))
+    _assert_reads_manifest_schema(spark, t)
     cur = t.read(spark)
-    assert set(cur.columns) == {"url_id", "lang"}
-    rows = {r["url_id"]: r["lang"] for r in cur.collect()}
-    assert rows[1] is None and rows[4] == "en"  # old rows read null
+    assert cur.columns == ["url_id", "meta", "lang", "tags"]
+    rows = {r["url_id"]: (r["lang"], r["meta"]["q"]) for r in cur.collect()}
+    assert rows[1] == (None, None)  # old rows read null
+    assert rows[4] == ("en", 0.5)
     # time travel to the pre-evolution snapshot shows the old schema
-    assert t.read(spark, snapshot_id=0).columns == ["url_id"]
+    _assert_reads_manifest_schema(spark, t, snapshot_id=0)
+    assert t.read(spark, snapshot_id=0).columns == ["url_id", "meta"]
+    # a type change is refused at commit, before the manifest is published
+    with pytest.raises(ValueError, match="url_id"):
+        t.append(spark.range(2).select(
+            F.col("id").cast("int").alias("url_id")))
+    assert t.current_snapshot_id() == 1
 
 
 def test_schema_evolution_partitioned_branch(spark, tmp_path):
@@ -671,10 +706,13 @@ def test_manifest_counts_and_bounds_from_footers(spark, tmp_path):
                         f"v{t.current_snapshot_id()}.json")
     with open(path) as fh:
         old = json.load(fh)
-    for field in ("added_count", "record_count", "column_bounds"):
+    for field in ("added_count", "record_count", "column_bounds", "schema"):
         del old[field]
     with open(path, "w") as fh:
         json.dump(old, fh)
     assert t.count(spark) == 4 and t.column_max(spark, "v") == 6
+    assert t.read(spark).columns == ["id", "v", "s"]  # schema inferred
     t.append(rows(4, 6))  # an append onto it stays unknown
     assert t.snapshot()["record_count"] is None and t.count(spark) == 6
+    assert t.snapshot()["schema"] is None
+    assert {r["id"] for r in t.read_added(spark).collect()} == {4, 5}
