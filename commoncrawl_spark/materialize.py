@@ -5,8 +5,13 @@ package needs to cut lineage and pin a small intermediate result:
 graph fixpoint loops (:mod:`operators.graph`), the LM broadcast-gate
 model tables (:mod:`operators.lm`), SemDeDup's slim assignment
 (:mod:`operators.similarity`), the Block-Max posting slice
-(:mod:`operators.index`), the BPE merge loop, the cuckoo kick rounds,
-and the slim-output checkpoints in :mod:`operators.text_dedup`.
+(:mod:`operators.index`), the BPE merge loop, the seen-set blob edits
+and generations (:mod:`operators.seen_set`), the slim-output
+checkpoints in :mod:`operators.text_dedup`, and the crawl round's
+multi-consumer frames (:mod:`plans.frontier`: the polite batch, the
+outcome, the discovered links), which every later commit then plans
+over as one ``Scan ExistingRDD`` leaf instead of re-planning (and
+re-scanning) a cached deep plan.
 
 ``DataFrame.localCheckpoint`` is the cheap way to do that — but it
 stores blocks ONLY on executors with no lineage left to recompute
@@ -41,12 +46,15 @@ pins result-identity across modes). Call sites keep the chained style
 via ``df.transform(materialize)`` /
 ``df.transform(materialize, eager=False)``.
 
-Lifecycle note (applies to both modes): materialization is permanent
-for the life of the DataFrame object — blocks are freed when the
-Python object is garbage-collected (non-eager local checkpoints also
-free on unpersist). Long-lived sessions that build many scorers should
-drop references to released models; see ``operators/lm.py``'s
-retention note.
+Lifecycle note (applies to both modes): ``unpersist()`` on a cut frees
+nothing — the blocks belong to the RDD behind the cut's ``LogicalRDD``
+leaf, not to the cache manager, so they stay pinned until the JVM
+garbage-collects that RDD (and, in reliable mode, the persisted source
+stays cached until the session ends). :func:`release` frees a cut
+deterministically; a loop that cuts every round must call it once the
+cut's last consumer has run. Long-lived sessions that build many
+scorers should drop references to released models; see
+``operators/lm.py``'s retention note.
 """
 
 from __future__ import annotations
@@ -75,13 +83,31 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     In reliable mode ``df`` is persisted before the checkpoint, so the
     file-writing job reads cached blocks instead of recomputing. An
     eager cut unpersists once the files are written; a lazy cut cannot
-    know when that happens, so its cached blocks stay until the caller
-    unpersists ``df`` (or the session ends).
+    know when that happens, so its cached blocks stay until
+    :func:`release` frees the cut (or the session ends).
     """
     if checkpoint_dir_configured(df):
         df.persist()
         out = df.checkpoint(eager=eager)
         if eager:
             df.unpersist()
+        else:
+            out._pins = df  # freed by release(out)
         return out
     return df.localCheckpoint(eager=eager)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks that pin ``df``: its cache entry; when it is a cut
+    (a ``LogicalRDD`` leaf), the blocks of the RDD behind the cut; and
+    the frame pinned on its behalf (``_pins``: the source a lazy reliable
+    cut persisted, or a cut a persisted frame was built from), released
+    the same way. A released cut must not be read again — in local mode
+    its blocks ARE its rows. Safe on any frame, and idempotent."""
+    df.unpersist()
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    pinned = getattr(df, "_pins", None)
+    if pinned is not None:
+        release(pinned)

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 
 from ..functions.urls import url_key_col
 from ..materialize import materialize as _materialize
+from ..materialize import release as _release
 
 SEEN_SCHEMA = T.StructType([T.StructField("url_sha1", T.StringType(), False)])
 
@@ -305,9 +306,12 @@ def key_generation(keys: DataFrame, key: str, n_partitions: int,
     partitioned layout is what lets every later verify join reuse the
     generation without an exchange."""
     g = keys.select(key)
-    if not stable:
-        g = g.transform(_materialize)
-    return g.repartition(n_partitions, key).persist()
+    if stable:
+        return g.repartition(n_partitions, key).persist()
+    cut = g.transform(_materialize)
+    g = cut.repartition(n_partitions, key).persist()
+    g._pins = cut  # releasing the generation frees its cut too
+    return g
 
 
 class SeenSet:
@@ -381,7 +385,7 @@ class SeenSet:
         probing thousands of times holds at most ONE probe frame in
         storage, instead of leaking one per round."""
         if self._last_probe is not None:
-            self._last_probe.unpersist()
+            _release(self._last_probe)
         self._last_probe = prefilter(
             candidates, self.blobs, self.kernel, self.n_buckets,
             self.key).persist()
@@ -415,7 +419,9 @@ class SeenSet:
         full = [r["bucket"] for r in
                 folded.select("bucket", size, "n_keys").collect()
                 if r["n_keys"] > self.kernel.capacity(r[size])]
-        self._swap_blobs(self._rebuild(folded, full) if full else folded)
+        self._swap_blobs(folded)
+        if full:
+            self._swap_blobs(self._rebuild(folded, full))
 
     def remove(self, keys: DataFrame) -> None:
         """Recrawl eviction: make ``keys`` crawlable again. Only present
@@ -424,22 +430,19 @@ class SeenSet:
         anti-joins. A kernel that can delete clears them from their
         blobs in place; Bloom rebuilds the touched buckets from the
         remaining history."""
-        removed = (
+        removed = key_generation(
             keys.select(self.key).distinct()
-            .join(self.seen, self.key, "left_semi")
-            .transform(_materialize)
-            .repartition(self._P, self.key)
-            .persist()
-        )
+            .join(self.seen, self.key, "left_semi"),
+            self.key, self._P, stable=False)
         if removed.count() == 0:
-            removed.unpersist()
+            _release(removed)
             return
         old, self._gens = self._gens, [
             g.join(removed, self.key, "left_anti").persist()
             for g in self._gens]
         for g, o in zip(self._gens, old):
             g.count()
-            o.unpersist()
+            _release(o)
         if self.kernel.remove is not None:
             blobs = self._edit(removed, self.kernel.remove).transform(
                 _materialize)
@@ -449,7 +452,7 @@ class SeenSet:
                        .select("bucket").distinct().collect()]
             blobs = self._rebuild(self.blobs, touched)
         self._swap_blobs(blobs)
-        removed.unpersist()
+        _release(removed)
 
     def _edit(self, delta: DataFrame, op) -> DataFrame:
         """(delta x blobs) cogroup: each bucket's delta keys go through
@@ -487,7 +490,7 @@ class SeenSet:
         stops plan depth and cache-loss recompute growing by one edit
         per round."""
         old, self.blobs = self.blobs, blobs
-        old.unpersist()
+        _release(old)
 
     def _compact(self) -> None:
         """Merge all generations into one (one full reshuffle, amortized
@@ -497,17 +500,17 @@ class SeenSet:
         its ancestors' cached blocks are about to be released."""
         merged = key_generation(self.seen, self.key, self._P, stable=False)
         for g in self._gens:
-            g.unpersist()
+            _release(g)
         self._gens = [merged]
         self._swap_blobs(self._build(merged).persist())
 
     def release(self) -> None:
         for g in self._gens:
-            g.unpersist()
+            _release(g)
         self._gens = []
-        self.blobs.unpersist()
+        _release(self.blobs)
         if self._last_probe is not None:
-            self._last_probe.unpersist()
+            _release(self._last_probe)
             self._last_probe = None
 
 

@@ -10,14 +10,20 @@ One **round** =
             ──fetch (lookup join vs pages) + extract (Arrow UDF)──▶
     outcome: one slim row per batch row (batch columns, _fetch_error,
              article struct, hrefs when discovering; never html),
-             persisted, counted in ONE aggregate (the round's counters)
+             cut, counted in ONE aggregate (the round's counters)
             ──commit, each derived from outcome:
               articles / failures / trace / metrics / lineage
               / seen ──▶ seen-state add (delta read back from the commit)
               / frontier (+ discovered links, probed against the seen set)
 
-Row counts and the frontier's max ``crawl_rank`` come from the snapshot
-manifests (recorded from the Parquet footers at commit), not Spark jobs.
+The round's multi-consumer frames — the polite batch, the outcome and
+the discovered links — are lineage CUTS (``materialize``), not cached
+frames: each is computed once, and every later commit and anti-join
+plans over a ``Scan ExistingRDD`` leaf instead of re-planning (and
+re-scanning) a cached deep plan. The round releases its cuts when it
+ends. Row counts and the frontier's max ``crawl_rank`` come from the
+snapshot manifests (recorded from the Parquet footers at commit), not
+Spark jobs.
 
 State lives in snapshot tables (tables.SnapshotTable — Iceberg-style
 atomic commits), so a crash at any point resumes from the last committed
@@ -51,6 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import materialize, release
 from ..operators.dedup import best_capture_per_url, dedup_first_seen
 from ..operators.extraction import extract_articles, split_articles
 from ..operators.schedule import apply_robots, select_polite_batch, with_host
@@ -502,10 +509,12 @@ class CrawlJob:
         # never tie (arrival seq is unique), but discovered rows share
         # (crawl_rank, page, line_no) and must still schedule
         # deterministically.
+        # cut: a transport may read the batch more than once (the lookup
+        # join's hits and misses), and each read would redo the windows
         batch = select_polite_batch(
             gated, self.budget, self.salt_buckets, PRIORITY + ("url_sha1",),
             budget_col=budget_col,
-        ).drop("crawl_delay_s", "_budget")
+        ).drop("crawl_delay_s", "_budget").transform(materialize, eager=False)
 
         # fetch stage (J2/S6) through the injectable transport seam; the
         # default lookup join broadcasts the batch only under
@@ -519,9 +528,11 @@ class CrawlJob:
         )
         fetched = transport.fetch(batch, n_rows_hint=n_frontier)
         # fetch and extraction as ONE pass: the html never outlives it, so
-        # the persisted outcome every commit below reads is slim. One
-        # aggregate over it materializes it and yields every counter.
-        outcome = _outcome(fetched, batch.columns, discover_links).persist()
+        # the outcome cut every commit below reads is slim. One aggregate
+        # over it materializes it and yields every counter.
+        outcome = _outcome(fetched, batch.columns, discover_links).transform(
+            materialize, eager=False)
+        cuts = [batch, outcome]
         ok_fetch = F.col("_fetch_error").isNull()
         retryable = ~ok_fetch & (F.col("attempt") < self.max_retries)
         exhausted = ~ok_fetch & (F.col("attempt") >= self.max_retries)
@@ -537,7 +548,8 @@ class CrawlJob:
         counters = {"round": rnd, **{k: int(v) for k, v in c.asDict().items()}}
         n_selected = counters["selected"]
         if n_selected == 0:
-            outcome.unpersist()
+            for cut in cuts:
+                release(cut)
             # look only at rows still BACKING OFF (not_before > rnd): a
             # permanently-gated row (robots, zero budget) with
             # not_before_round = 0 must not mask waiting retries — min
@@ -650,7 +662,6 @@ class CrawlJob:
             .unionByName(requeued)
         )
         n_discovered = 0
-        new_rows = None
         if discover_links:
             from ..operators.links import href_candidates
 
@@ -662,7 +673,9 @@ class CrawlJob:
                 .join(remaining.select("url_sha1"), "url_sha1", "left_anti")
             )
             new_rows = _frontier_rows(
-                with_host(cands), self._next_rank()).persist()
+                with_host(cands), self._next_rank()).transform(
+                    materialize, eager=False)
+            cuts.append(new_rows)
             n_discovered = new_rows.count()
             remaining = remaining.unionByName(new_rows)
         counters["discovered"] = n_discovered
@@ -671,9 +684,8 @@ class CrawlJob:
         self.frontier.overwrite(remaining, {"round": rnd + 1, **{
             k: v for k, v in counters.items() if k != "round"
         }})
-        outcome.unpersist()
-        if new_rows is not None:  # unconditional: zero-discovery rounds too
-            new_rows.unpersist()
+        for cut in cuts:
+            release(cut)
         return counters
 
     def run(

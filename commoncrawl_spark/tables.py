@@ -40,6 +40,7 @@ import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 from .materialize import materialize as _materialize
 
 
@@ -150,6 +151,15 @@ def _footer_bounds(md, c: str) -> list | None:
 #: the footer key under which Spark's parquet writer stores the Spark
 #: schema (JSON) of the rows it wrote
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _schema_field(snap: dict[str, Any], name: str) -> T.StructField | None:
+    """Column ``name`` of the schema a snapshot's manifest recorded, or
+    None (no recorded schema, or no such column)."""
+    if not snap.get("schema"):
+        return None
+    schema = T.StructType.fromJson(snap["schema"])
+    return schema[name] if name in schema.fieldNames() else None
 
 
 def _merge_types(a: Any, b: Any, where: str = "schema") -> Any:
@@ -429,7 +439,6 @@ class SnapshotTable:
         import numpy as np
         import pandas as pd
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         from .operators.seen_set import _bloom_params, _fold_keys
 
@@ -560,12 +569,14 @@ class SnapshotTable:
         paths = self.bloom_matching_files(col, value, snapshot_id)
         if not paths:
             return self.read(spark, snapshot_id).filter("1 = 0")
-        # mergeSchema: admitted files may span schema-evolution commits
-        out = (spark.read.option("mergeSchema", "true").parquet(*paths)
+        # the snapshot's schema: admitted files may span
+        # schema-evolution commits
+        snap = self.snapshot(snapshot_id)
+        out = (self._reader(spark, snap).parquet(*paths)
                .filter(F.col(col) == F.lit(value)))
         # accumulated equality deletes still apply (merge-on-read):
         # a tombstoned row must not resurface through the point path
-        return self._apply_deletes(spark, out, self.snapshot(snapshot_id))
+        return self._apply_deletes(spark, out, snap)
 
     def matching_files(self, prune: dict[str, tuple],
                        snapshot_id: int | None = None) -> list[str]:
@@ -616,8 +627,9 @@ class SnapshotTable:
         if not paths:
             full = self.read(spark, snapshot_id)
             return full.filter("1 = 0")
-        # mergeSchema: admitted files may span schema-evolution commits
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        # the snapshot's schema: admitted files may span
+        # schema-evolution commits
+        return self._reader(spark, self.snapshot(snapshot_id)).parquet(*paths)
 
     def append(self, df: DataFrame, metadata: dict[str, Any] | None = None) -> int:
         """ST4: incremental checkpoint commit per round."""
@@ -650,7 +662,12 @@ class SnapshotTable:
                 f"delete uses {key_col!r}")
         new_id = parent + 1
         ddir = f"d{new_id}-{uuid.uuid4().hex[:8]}"
-        keys.select(key_col).distinct().write.mode("overwrite").parquet(
+        field = _schema_field(prev, key_col)
+        # in the table's key type: reads take the delete files' schema
+        # from the manifest (_apply_deletes)
+        key = (keys[key_col] if field is None
+               else keys[key_col].cast(field.dataType).alias(key_col))
+        keys.select(key).distinct().write.mode("overwrite").parquet(
             os.path.join(self._data_dir, ddir))
         fields = self._carried(prev)
         fields["delete_files"].append(ddir)
@@ -707,8 +724,6 @@ class SnapshotTable:
         a newer column as null), which spares the read a schema-inference
         job. A manifest without one infers with ``mergeSchema``; a type
         CHANGE fails loudly either way (at commit, or in the merge)."""
-        from pyspark.sql import types as T
-
         if snap.get("schema"):
             return spark.read.schema(T.StructType.fromJson(snap["schema"]))
         return spark.read.option("mergeSchema", "true")
@@ -721,7 +736,12 @@ class SnapshotTable:
         if not dels:
             return out
         key = snap["delete_key"]
-        dkeys = spark.read.parquet(
+        field = _schema_field(snap, key)
+        # delete files hold the key in the snapshot's type (delete_where
+        # casts it), so the read takes it instead of inferring it
+        reader = (spark.read if field is None
+                  else spark.read.schema(T.StructType([field])))
+        dkeys = reader.parquet(
             *[os.path.join(self._data_dir, d) for d in dels])
         return out.join(dkeys.select(key).distinct(), key, "left_anti")
 
@@ -853,7 +873,6 @@ def write_shards(
     manifest dict (also written to ``<out_dir>/manifest.json``).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     if size_cols is None:
         size_cols = [f.name for f in df.schema.fields

@@ -29,6 +29,20 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def ckpt_dir(spark, tmp_path):
+    """Temporarily configure a reliable checkpoint dir, restore after."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    d = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(d)
+    yield d
+    # there is no unsetCheckpointDir in the public API; clear via the
+    # underlying scala option so other tests keep sandbox behavior
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
 @pytest.fixture(scope="session")
 def fixture_dir(tmp_path_factory) -> str:
     out = str(tmp_path_factory.mktemp("cc_fixtures"))

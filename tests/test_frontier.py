@@ -5,6 +5,7 @@ transient-failure retry, robots gating."""
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,8 @@ from commoncrawl_spark.fixtures import CRAWLS
 from commoncrawl_spark.functions.urls import canonicalize_url_py
 from commoncrawl_spark.operators.dedup import deduplicate_records_py
 from commoncrawl_spark.plans.frontier import CrawlJob
+from commoncrawl_spark.sources.transport import LookupJoinTransport
+from commoncrawl_spark.tables import SnapshotTable
 
 BUDGET = 40
 
@@ -303,10 +306,6 @@ def test_mid_round_crash_between_commits_replays_idempotently(
     generation each round is read back from the seen commit's own
     files — so a crash on either side of that commit must not leave a
     key out of the rebuilt state."""
-    import os
-
-    from commoncrawl_spark.tables import SnapshotTable
-
     pages, cdx, _ = tables
     d = str(tmp_path_factory.mktemp(f"crawl_crash_{landed}"))
     job1 = CrawlJob(spark, d, **CRASH_JOB)
@@ -349,12 +348,14 @@ def test_mid_round_crash_between_commits_replays_idempotently(
             assert sum(m.get("round") == 1 for m in meta) == 1, name
 
 
-# Spark jobs a round may launch under its caller's job group, measured
-# on this fixture (8 shuffle partitions): a slim outcome frame counted in
-# one aggregate, an O(delta) Bloom add, counts and the frontier's max
+# Spark jobs a round may launch under its caller's job group: the most
+# measured on this fixture (8 shuffle partitions) over six three-round
+# crawls, 33-38 per round (AQE varies a round's count by a few jobs). A
+# slim outcome cut counted in one aggregate, commits planned over the
+# round's cuts, an O(delta) Bloom add, counts and the frontier's max
 # crawl_rank from manifests, table schemas from manifests (no
 # schema-inference job per read)
-ROUND_JOB_BUDGET = 41
+ROUND_JOB_BUDGET = 38
 
 
 @pytest.mark.spark
@@ -364,7 +365,8 @@ def test_round_job_budget_and_job_group_hygiene(spark, tables,
     """Each round of a link-following crawl through the Bloom seen state
     stays within its job budget, counted the way a caller counts it (by
     the job group it set); the round leaves that job group as it found
-    it; and no frame the round caches holds page html."""
+    it; and no frame the round pins — cached or cut — holds page
+    html."""
     pages, cdx, _ = tables
     sc = spark.sparkContext
     job = CrawlJob(spark, str(tmp_path_factory.mktemp("crawl_jobs")),
@@ -373,13 +375,18 @@ def test_round_job_budget_and_job_group_hygiene(spark, tables,
 
     cached = []
     frame_cls = type(pages)  # the session's concrete DataFrame class
-    persist = frame_cls.persist
 
-    def recording_persist(self, *args, **kwargs):
-        cached.append(self.columns)
-        return persist(self, *args, **kwargs)
+    def recording(name):
+        pin = getattr(frame_cls, name)
 
-    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+        def record(self, *args, **kwargs):
+            cached.append(self.columns)
+            return pin(self, *args, **kwargs)
+        return record
+
+    # persist, and the two cuts materialize() makes
+    for name in ("persist", "localCheckpoint", "checkpoint"):
+        monkeypatch.setattr(frame_cls, name, recording(name))
     jobs = []
     try:
         for r in range(3):
@@ -396,6 +403,105 @@ def test_round_job_budget_and_job_group_hygiene(spark, tables,
     assert job._bloom is not None  # rounds 1-2 add to the Bloom state
     assert cached and not [c for c in cached if "html" in c], cached
     assert max(jobs) <= ROUND_JOB_BUDGET, jobs
+
+
+class _TickingTransport:
+    """The lookup-join transport, adding 1 to ``acc`` for every fetched
+    row each time a job computes it."""
+
+    def __init__(self, pages, acc):
+        self.inner, self.acc = LookupJoinTransport(pages), acc
+
+    def fetch(self, batch, n_rows_hint=None):
+        acc = self.acc
+
+        def tick(err):
+            acc.add(1)
+            return err
+
+        fetched = self.inner.fetch(batch, n_rows_hint)
+        return fetched.withColumn("_fetch_error", F.udf(
+            tick, "string").asNondeterministic()("_fetch_error"))
+
+
+def _pinned_rdds(sc) -> set:
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_round_computes_outcome_once_and_releases_its_cuts(
+        spark, tables, tmp_path, request, mode):
+    """A round cuts its multi-consumer frames instead of caching them:
+    each batch row is fetched and extracted exactly once, and the round
+    leaves no RDD pinned — also with a checkpoint dir set, where each cut
+    persists its source before checkpointing it."""
+    if mode == "reliable":
+        request.getfixturevalue("ckpt_dir")
+    pages, cdx, _ = tables
+    sc = spark.sparkContext
+    acc = sc.accumulator(0)
+    job = CrawlJob(spark, str(tmp_path / "ck"), budget_per_host=BUDGET,
+                   transport=_TickingTransport(pages, acc))
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+    before = _pinned_rdds(sc)
+    c = job.run_round(pages)
+    assert acc.value == c["selected"] > 0
+    assert _pinned_rdds(sc) - before == set()
+
+
+@pytest.mark.spark
+def test_reliable_mode_crawl_equals_local(spark, tables, discovery_ref,
+                                          ckpt_dir, tmp_path):
+    """With a checkpoint dir set every cut is a reliable checkpoint. The
+    link-following Bloom-path crawl then commits the same articles,
+    failures, trace, seen set and frontier as the local-mode reference,
+    and still extracts each batch row exactly once."""
+    pages, cdx, _ = tables
+    acc = spark.sparkContext.accumulator(0)
+    job = CrawlJob(spark, str(tmp_path / "ck"),
+                   transport=_TickingTransport(pages, acc), **CRASH_JOB)
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+    rounds = job.run(pages, discover_links=True)
+    assert _discovery_state(job) == discovery_ref
+    assert acc.value == sum(r["selected"] for r in rounds)
+
+
+@pytest.mark.spark
+def test_round_commits_plan_over_cuts(spark, tables, tmp_path,
+                                      monkeypatch):
+    """Every commit of a round plans over the round's cuts (Scan
+    ExistingRDD leaves), never over a cached deep plan
+    (InMemoryTableScan); and the polite batch's two windows are planned
+    once — in the batch's cut, not again in the outcome read from it."""
+    from commoncrawl_spark.plans import frontier
+    from commoncrawl_spark.plans.explain import plan_string
+
+    pages, cdx, _ = tables
+    job = CrawlJob(spark, str(tmp_path / "ck"), budget_per_host=BUDGET)
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+    cut_plans, commit_plans = [], {}
+    cut, commit = frontier.materialize, SnapshotTable._commit
+
+    def recording_cut(df, eager=True):
+        cut_plans.append(plan_string(df, "simple"))
+        return cut(df, eager)
+
+    def recording_commit(self, df, operation, metadata):
+        commit_plans[os.path.basename(self.root)] = plan_string(df, "simple")
+        return commit(self, df, operation, metadata)
+
+    monkeypatch.setattr(frontier, "materialize", recording_cut)
+    monkeypatch.setattr(SnapshotTable, "_commit", recording_commit)
+    assert job.run_round(pages, discover_links=True)["discovered"] > 0
+    assert sorted(commit_plans) == sorted(ROUND_COMMITS)
+    for name, plan in commit_plans.items():
+        assert "InMemoryTableScan" not in plan, name
+        assert "Scan ExistingRDD" in plan, name
+    batch, outcome = cut_plans[:2]
+    assert batch.count("Window [") == 2
+    assert outcome.count("Window [") == 0
+    assert "Scan ExistingRDD" in outcome
 
 
 @pytest.mark.spark

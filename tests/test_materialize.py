@@ -19,21 +19,8 @@ from pyspark.sql import functions as F
 from commoncrawl_spark.materialize import (
     checkpoint_dir_configured,
     materialize,
+    release,
 )
-
-
-@pytest.fixture
-def ckpt_dir(spark, tmp_path):
-    """Temporarily configure a reliable checkpoint dir, restore after."""
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    d = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(d)
-    yield d
-    # there is no unsetCheckpointDir in the public API; clear via the
-    # underlying scala option so other tests keep sandbox behavior
-    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
-    assert sc.getCheckpointDir() is None
 
 
 def _df(spark):
@@ -111,4 +98,28 @@ def test_reliable_cut_computes_subtree_once(spark, ckpt_dir, eager):
     assert out.count() == 200
     assert out.agg(F.sum("id")).first()[0] == sum(range(200))
     assert acc.value == 200
-    df.unpersist()
+    release(out)
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_release_frees_a_lazy_cut(spark, request, reliable):
+    """unpersist() on a cut frees nothing: its blocks belong to the RDD
+    behind the cut (and, in reliable mode, to the source it persisted).
+    release() frees both."""
+    if reliable:
+        request.getfixturevalue("ckpt_dir")
+    sc = spark.sparkContext
+
+    def pinned():
+        return set(sc._jsc.getPersistentRDDs().keySet()) - before
+
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    # a plan no other test caches: persisting an already-cached plan
+    # pins nothing new
+    out = materialize(_df(spark).withColumn(
+        "tag", F.lit(f"release-{reliable}")), eager=False)
+    assert out.count() == 1000
+    out.unpersist()
+    assert pinned()
+    release(out)
+    assert pinned() == set()

@@ -230,6 +230,35 @@ def test_seen_set_add_from_committed_files(spark, tmp_path, state):
     s.release()
 
 
+def _pinned_rdds(sc) -> set:
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.spark
+@STATES
+def test_seen_set_adds_keep_pinned_rdds_bounded(spark, tmp_path, state):
+    """Every frame an add drops — the previous blob table (a cut), a
+    folded table whose buckets were then rebuilt, the generations a
+    compaction merges — is released, not merely unpersisted (which frees
+    nothing on a cut): after any number of adds the state pins at most
+    one RDD per generation, one for a compacted generation's cut and one
+    for the blobs; release() frees them all."""
+    from commoncrawl_spark.tables import SnapshotTable
+
+    sc = spark.sparkContext
+    t = SnapshotTable(str(tmp_path / "seen"))
+    t.append(_sha_keys(spark, "a-", 400))
+    before = _pinned_rdds(sc)
+    s = state(t.read(spark), n_buckets=8, max_generations=3)
+    for i in range(8):
+        # growing deltas: some adds outgrow bucket capacity and rebuild
+        t.append(_sha_keys(spark, f"k{i}-", 100 * (i + 1)))
+        s.add(t.read_added(spark), n_new=t.snapshot()["added_count"])
+        assert len(_pinned_rdds(sc) - before) <= s.max_generations + 2, i
+    s.release()
+    assert _pinned_rdds(sc) - before == set()
+
+
 @pytest.mark.spark
 def test_bloom_seen_set_unseen_is_exact(spark, keyed):
     seen = keyed.filter(F.crc32("url") % 3 == 0).select("url_sha1")

@@ -556,15 +556,19 @@ def test_bloom_requires_unpartitioned(tmp_path):
 # ---------------------------------------------------------------------------
 
 def _assert_reads_manifest_schema(spark, t, snapshot_id=None):
-    """read (and, at the current snapshot, read_added) of ``t`` launch no
-    Spark job and return the schema a merging parquet read of the
+    """read, read_point, read_pruned (and, at a current append snapshot,
+    read_added) of ``t`` launch no Spark job — equality deletes applied
+    included — and return the schema a merging parquet read of the
     snapshot's files infers: names, types, order and nullability,
     nested fields included."""
     sc = spark.sparkContext
     sc.setJobGroup("schema-probe", "schema-probe")
     try:
-        reads = [t.read(spark, snapshot_id)]
-        if snapshot_id is None:
+        reads = [t.read(spark, snapshot_id),
+                 t.read_point(spark, "url_id", 4, snapshot_id),
+                 t.read_pruned(spark, {"url_id": (0, 10)}, snapshot_id)]
+        if (snapshot_id is None
+                and t.snapshot()["operation"] in ("append", "overwrite")):
             reads.append(t.read_added(spark))
         assert list(sc.statusTracker().getJobIdsForGroup(
             "schema-probe")) == []
@@ -605,6 +609,14 @@ def test_schema_evolution_add_column(spark, tmp_path):
         t.append(spark.range(2).select(
             F.col("id").cast("int").alias("url_id")))
     assert t.current_snapshot_id() == 1
+    # an equality delete keyed in another type is written in the table's
+    # key type, so reads take the delete files' schema from the manifest
+    t.delete_where(spark.range(4, 6).select(
+        F.col("id").cast("int").alias("url_id")), "url_id")
+    _assert_reads_manifest_schema(spark, t)
+    assert sorted(r["url_id"] for r in t.read(spark).collect()) == \
+        [0, 1, 2, 3]
+    assert t.read_point(spark, "url_id", 4).count() == 0
 
 
 def test_schema_evolution_partitioned_branch(spark, tmp_path):
