@@ -6,8 +6,10 @@ graph fixpoint loops (:mod:`operators.graph`), the LM broadcast-gate
 model tables (:mod:`operators.lm`), SemDeDup's slim assignment
 (:mod:`operators.similarity`), the Block-Max posting slice
 (:mod:`operators.index`), the BPE merge loop, the seen-set blob edits
-and generations (:mod:`operators.seen_set`), the slim-output
-checkpoints in :mod:`operators.text_dedup`, and the crawl round's
+and generations (:mod:`operators.seen_set`), the slim outputs of the
+self-joining operators (:mod:`operators.text_dedup`, which the aHash
+media near-dup shares, ``graph.triangle_counts`` and
+``analytics.pmi_collocations``), and the crawl round's
 multi-consumer frames (:mod:`plans.frontier`: the polite batch, the
 outcome, the discovered links), which every later commit then plans
 over as one ``Scan ExistingRDD`` leaf instead of re-planning (and

@@ -380,7 +380,6 @@ def pmi_collocations(
     text_col: str = "text",
     min_count: int = 5,
     top_k: int = 100,
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-k collocations by pointwise mutual information (Church &
     Hanks, "Word Association Norms, Mutual Information, and
@@ -443,8 +442,6 @@ def pmi_collocations(
         )
     )
     ranked = scored.orderBy(F.desc("pmi"), "w1", "w2").limit(top_k)
-    if not materialize:
-        return ranked  # lazy plan for audits; caller owns toks cleanup
     out = ranked.transform(_materialize)
     toks.unpersist()
     return out

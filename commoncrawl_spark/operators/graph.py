@@ -928,7 +928,6 @@ def triangle_counts(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over the
     UNDIRECTED simple graph induced by ``edges`` (direction, self-loops
@@ -959,10 +958,11 @@ def triangle_counts(
 
     Returns ``(node, degree, n_triangles, clustering)`` with
     ``clustering = 2T / (deg * (deg - 1))`` rounded 6dp (0.0 when
-    degree < 2). The slim result is eagerly ``localCheckpoint``-ed and
-    the persisted degree/oriented frames unpersisted before returning
-    (repo persist-lifecycle convention); ``materialize=False`` skips
-    both so plan tests and SCALE.md can inspect the lazy shape.
+    degree < 2). The slim result is cut eagerly through ``materialize``
+    and the persisted degree/oriented frames unpersisted before
+    returning (repo persist-lifecycle convention); plan tests and
+    SCALE.md inspect the frame it cuts
+    (``scripts/plan_audit.cut_frames``).
     """
     und = (
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
@@ -975,9 +975,8 @@ def triangle_counts(
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
         .groupBy("node").agg(F.count("*").alias("degree"))
+        .persist()
     )
-    if materialize:
-        deg = deg.persist()
     # orient a<->b by (degree, id); carry the dst rank for the wedge
     # ordering below so no second degree join is needed
     ranked = (
@@ -996,9 +995,8 @@ def triangle_counts(
                          F.col("_da").alias("dv"))).alias("e"))
         .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"),
                 F.col("e.dv").alias("dv"))
+        .persist()
     )
-    if materialize:
-        ranked = ranked.persist()
     # wedges at u: ordered pairs of out-neighbors (v before w by the
     # same (deg, id) rank) -> closed iff oriented edge v->w exists
     lo = ranked.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
@@ -1030,8 +1028,6 @@ def triangle_counts(
                         / (F.col("degree") * (F.col("degree") - 1)), 6))
             .otherwise(F.lit(0.0)).alias("clustering"))
     )
-    if not materialize:
-        return out
     ck = out.transform(_materialize)
     ranked.unpersist()
     deg.unpersist()

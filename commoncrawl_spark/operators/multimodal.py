@@ -268,7 +268,6 @@ def media_near_duplicates(
     max_hamming: int = 3,
     bits: int = 32,
     blocks: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Perceptual near-duplicate media pairs ``(a, b, hamming)``:
     aHash each payload (:func:`ahash_signatures` — the bound staged
@@ -283,5 +282,5 @@ def media_near_duplicates(
     sigs = ahash_signatures(df, bin_col, id_col, bits)
     return hamming_near_duplicate_pairs(
         sigs, sig_col="ahash", id_col=id_col, max_hamming=max_hamming,
-        bits=bits, blocks=blocks, materialize=materialize,
+        bits=bits, blocks=blocks,
     )

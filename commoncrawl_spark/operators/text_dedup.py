@@ -17,18 +17,17 @@ Scale shapes:
   random hyperplanes for the same reason (see similarity.py for the
   ANN variant).
 
-Caching note (r03 — the library now OWNS the lifecycle): the
-self-joining operators cache their slim intermediate (signatures /
-shingles / buckets) because both join branches would otherwise recompute
-the md5 folds. By default (``materialize=True``) each such operator
-eagerly materializes its SLIM output via ``localCheckpoint`` and
-unpersists the fat intermediate before returning — after the call, the
-only executor storage is the bounded checkpointed result, which Spark's
-ContextCleaner frees when the frame is garbage-collected. No
-``clearCache()`` contract for callers; a long-running ``CrawlJob`` can
-invoke these in a loop without accumulating blocks. Pass
-``materialize=False`` to get the fully lazy plan (persist + caller-owned
-cleanup) — used by plan tests/audits, which need the un-truncated plan.
+Caching note (the library OWNS the lifecycle): the self-joining
+operators cache their slim intermediate (signatures / shingles /
+buckets) because both join branches would otherwise recompute the md5
+folds. Each such operator eagerly cuts its SLIM output through
+``materialize`` and unpersists the fat intermediate before returning —
+after the call, the only executor storage is the bounded cut result,
+which Spark's ContextCleaner frees when the frame is garbage-collected.
+No ``clearCache()`` contract for callers; a long-running ``CrawlJob``
+can invoke these in a loop without accumulating blocks. Plan tests and
+the SCALE.md audit read the frame each operator cuts
+(``scripts/plan_audit.cut_frames``), whose plan is not yet truncated.
 """
 
 from __future__ import annotations
@@ -158,15 +157,13 @@ def minhash_candidate_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) from LSH bucket collisions — the
     self-join runs on (band, bucket), so only genuine collisions meet.
 
-    Lifecycle (module docstring): with ``materialize`` the slim pair set
-    is checkpointed eagerly and the cached bucket frame is unpersisted
-    before returning — no storage outlives the call beyond the bounded
-    result."""
+    Lifecycle (module docstring): the slim pair set is cut eagerly and
+    the cached bucket frame is unpersisted before returning — no storage
+    outlives the call beyond the bounded result."""
     # cached for the same reason as simhash_near_duplicates: a broadcast
     # self-join recomputes the minhash fold (md5 per shingle x num_hashes)
     # on both branches; the cached frame is (id, band, 32-char bucket).
@@ -180,8 +177,6 @@ def minhash_candidate_pairs(
         .select("a", "b")
         .distinct()
     )
-    if not materialize:
-        return pairs
     out = pairs.transform(_materialize)
     bk.unpersist()
     return out
@@ -195,7 +190,6 @@ def drop_near_duplicates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """End-to-end MinHash near-dedup — what a pipeline user actually
     calls: LSH candidate pairs -> exact Jaccard verification -> drop the
@@ -214,13 +208,9 @@ def drop_near_duplicates(
     anti-join key is the slim id column.
     """
     pairs = minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_n,
-        materialize=materialize,
-    )
+        df, text_col, id_col, num_hashes, bands, shingle_n)
     confirmed = jaccard_pairs(
-        df, pairs, text_col, id_col, shingle_n, threshold=threshold,
-        materialize=materialize,
-    )
+        df, pairs, text_col, id_col, shingle_n, threshold=threshold)
     losers = confirmed.select(F.col("b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
@@ -236,7 +226,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.0,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs: |A∩B| / |A∪B| over distinct
     shingle sets. Feed LSH candidates here to confirm near-dups; never run
@@ -245,8 +234,8 @@ def jaccard_pairs(
     Scale shape (r03): documents are semi-joined to the candidate ids
     FIRST, so shingling touches only pair members — never the full
     corpus; the shingle frame is therefore bounded by the candidate set.
-    With ``materialize`` the scored pairs checkpoint eagerly and the
-    shingle cache is released before returning (module docstring)."""
+    The scored pairs are cut eagerly and the shingle cache is released
+    before returning (module docstring)."""
     ids = (
         pairs.select(F.col("a").alias(id_col))
         .unionByName(pairs.select(F.col("b").alias(id_col)))
@@ -275,8 +264,6 @@ def jaccard_pairs(
         .select("a", "b", "jaccard")
     )
     j = j.filter(F.col("jaccard") >= threshold)
-    if not materialize:
-        return j
     out = j.transform(_materialize)
     sh.unpersist()
     return out
@@ -411,7 +398,6 @@ def near_duplicates_against_index(
     bands: int = 4,
     shingle_n: int = 3,
     broadcast_segment: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate matches of a NEW crawl segment against the
     persisted signature index: ``(new_id, matched_id, est_jaccard)``
@@ -435,9 +421,8 @@ def near_duplicates_against_index(
     computed and thresholded BEFORE the pair-dedup exchange — ever
     cross a shuffle. Candidates come only from band collisions, never
     all-pairs. Disable ``broadcast_segment`` for a backfill-sized
-    segment; AQE then picks the join strategy. With ``materialize`` the
-    bounded match set is checkpointed eagerly and the cache released
-    (module lifecycle)."""
+    segment; AQE then picks the join strategy. The bounded match set is
+    cut eagerly and the cache released (module lifecycle)."""
     # the index's signature width is a TABLE property fixed at build
     # time; probing a 32-hash index with 16-hash segment signatures
     # makes buckets silently never collide (100% recall loss, no
@@ -478,8 +463,6 @@ def near_duplicates_against_index(
         .select("new_id", "matched_id", "est_jaccard")
         .distinct()
     )
-    if not materialize:
-        return out
     ck = out.transform(_materialize)
     new_sigs.unpersist()
     return ck
@@ -495,20 +478,19 @@ def drop_near_duplicates_incremental(
     bands: int = 4,
     shingle_n: int = 3,
     broadcast_segment: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """The composed incremental-dedup step a crawl pipeline calls per
     segment: drop every new document matching history (per
     :func:`near_duplicates_against_index`), keep the rest. Follow with
     :func:`merge_minhash_index` over ``build_minhash_index`` of the
-    SURVIVORS to roll the index forward. ``broadcast_segment`` /
-    ``materialize`` plumb through to the probe — disable the broadcast
-    for a backfill-sized segment (the callee's own guidance has to be
-    reachable from the API pipelines actually call)."""
+    SURVIVORS to roll the index forward. ``broadcast_segment`` plumbs
+    through to the probe — disable the broadcast for a backfill-sized
+    segment (the callee's own guidance has to be reachable from the API
+    pipelines actually call)."""
     matches = near_duplicates_against_index(
         new_df, index, threshold, text_col, id_col,
         num_hashes, bands, shingle_n,
-        broadcast_segment=broadcast_segment, materialize=materialize,
+        broadcast_segment=broadcast_segment,
     )
     losers = matches.select(F.col("new_id").alias(id_col)).distinct()
     return new_df.join(losers, id_col, "left_anti")
@@ -557,21 +539,20 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
     blocks: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming, found by the
     pigeonhole block trick: split the signature into ``blocks`` chunks; any
     pair within distance max_hamming < blocks agrees exactly on >=1 chunk,
     so the self-join key is (block_idx, chunk_value) — never all-pairs.
 
-    With ``materialize`` the pair set checkpoints eagerly and the
-    signature cache is released before returning (module docstring)."""
+    The pair set is cut eagerly and the signature cache is released
+    before returning (module docstring)."""
     sims = df.select(
         F.col(id_col), simhash_col(F.col(text_col), bits).alias("simhash")
     )
     return hamming_near_duplicate_pairs(
         sims, sig_col="simhash", id_col=id_col, max_hamming=max_hamming,
-        bits=bits, blocks=blocks, materialize=materialize,
+        bits=bits, blocks=blocks,
     )
 
 
@@ -582,7 +563,6 @@ def hamming_near_duplicate_pairs(
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
     blocks: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs ``(a, b, hamming)`` with Hamming distance <= ``max_hamming``
     between integer bit-signatures (simhash, aHash, any <= 63-bit
@@ -631,8 +611,6 @@ def hamming_near_duplicate_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    if not materialize:
-        return out
     cp = out.transform(_materialize)
     sims.unpersist()
     return cp
@@ -1499,7 +1477,6 @@ def set_similarity_join(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join above ``threshold`` via prefix
     filtering (Vernica, Carey & Li, "Efficient Parallel Set-Similarity
@@ -1595,8 +1572,6 @@ def set_similarity_join(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-    if not materialize:
-        return j
     out = j.transform(_materialize)
     sets.unpersist()
     return out
@@ -1608,7 +1583,6 @@ def containment_join(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT asymmetric containment join: every ordered pair (a, b)
     with ``C(a->b) = |Sa ∩ Sb| / |Sa| >= threshold`` — quote, excerpt
@@ -1688,8 +1662,6 @@ def containment_join(
         .filter(F.col("containment") >= threshold)
         .select("a", "b", "containment", "jaccard")
     )
-    if not materialize:
-        return out
     ck = out.transform(_materialize)
     sets.unpersist()
     return ck

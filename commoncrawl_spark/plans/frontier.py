@@ -85,6 +85,12 @@ FRONTIER_SCHEMA = T.StructType(
 
 PRIORITY = ("crawl_rank", "page", "line_no")
 
+# reference retry pacing (download_warc_segments.py:66-70): a row failing
+# on attempt a becomes eligible again after min(2 * 2^a, cap) rounds
+# (1 round ~ 1 s of the reference's per-request sleep); the cap is
+# download_and_merge.py:179's 300 s ceiling
+BACKOFF_CAP_ROUNDS = 300
+
 
 def _frontier_rows(df: DataFrame, crawl_rank: Column | int,
                   page: Column | int = 0, line_no: Column | int = 0
@@ -130,6 +136,11 @@ class CrawlJob:
     the same directory resumes exactly where the first stopped.
     """
 
+    # fetch-join strategy cutover: batches at or under this row count are
+    # broadcast (the single-host reference shape); larger batches join
+    # un-hinted so AQE and the bucketed pages layout decide
+    broadcast_batch_limit = 1_000_000
+
     def __init__(
         self,
         spark: SparkSession,
@@ -139,10 +150,7 @@ class CrawlJob:
         max_retries: int = 3,
         bloom_threshold: int = 2_000_000,
         round_seconds: float | None = None,
-        broadcast_batch_limit: int = 1_000_000,
         transport=None,
-        retry_backoff: bool = True,
-        backoff_cap_rounds: int = 300,
         seen_state: str = "bloom",
     ):
         if seen_state not in ("bloom", "cuckoo"):
@@ -154,20 +162,9 @@ class CrawlJob:
         self.salt_buckets = salt_buckets
         self.max_retries = max_retries
         self.bloom_threshold = bloom_threshold
-        # fetch-join strategy cutover: batches at or under this row count
-        # are broadcast (the single-host reference shape); larger batches
-        # join un-hinted so AQE and the bucketed pages layout decide
-        self.broadcast_batch_limit = broadcast_batch_limit
         # injectable fetch stage (sources.transport.Transport); None ->
         # LookupJoinTransport over the ``pages`` argument of run_round
         self.transport = transport
-        # reference retry pacing (download_warc_segments.py:66-70): a row
-        # failing on attempt a becomes eligible again after
-        # min(2 * 2^a, cap) rounds (1 round ~ 1 s of the reference's
-        # per-request sleep; the 300 cap is download_and_merge.py:179's
-        # 300 s ceiling). retry_backoff=False restores retry-next-round.
-        self.retry_backoff = retry_backoff
-        self.backoff_cap_rounds = backoff_cap_rounds
         # cross-round filter state (a SeenSet over the Bloom or cuckoo
         # kernel per seen_state): built lazily the first time the seen
         # table crosses bloom_threshold, then extended incrementally per
@@ -200,7 +197,6 @@ class CrawlJob:
         self,
         cdx: DataFrame,
         crawl_order: Sequence[str] | None = None,
-        arrival_cols: Sequence[str] = ("crawl", "page", "line_no"),
     ) -> int:
         """CDX records -> deduped, 200-filtered, unseen frontier (stage 1+2
         of the reference pipeline: dedup A2 then the status-200 gate F1).
@@ -210,7 +206,7 @@ class CrawlJob:
         sort chronologically, matching the list's order). Returns the
         frontier size.
         """
-        best = best_capture_per_url(cdx, arrival_cols=arrival_cols)
+        best = best_capture_per_url(cdx)
         best = best.filter(F.col("status") == "200")
         if crawl_order is None:
             # the handful of distinct crawls is ranked on the driver
@@ -473,7 +469,6 @@ class CrawlJob:
         self,
         pages: DataFrame,
         robots: DataFrame | None = None,
-        transient_fail: Column | None = None,
         discover_links: bool = False,
     ) -> dict[str, int]:
         """Execute one crawl round; returns counters. Empty frontier -> {}.
@@ -524,8 +519,7 @@ class CrawlJob:
         from ..sources.transport import LookupJoinTransport
 
         transport = self.transport or LookupJoinTransport(
-            pages, self.broadcast_batch_limit, transient_fail
-        )
+            pages, self.broadcast_batch_limit)
         fetched = transport.fetch(batch, n_rows_hint=n_frontier)
         # fetch and extraction as ONE pass: the html never outlives it, so
         # the outcome cut every commit below reads is slim. One aggregate
@@ -633,19 +627,13 @@ class CrawlJob:
             # Drop the state; the next unseen() rebuilds it from the
             # committed table (which includes the keys). Replays are
             # crash recovery, so the rebuild cost is fine.
-            self._bloom.release()
-            self._bloom = None
+            self.release()
 
-        # reference pacing mapped to rounds: failing on attempt a defers
-        # re-eligibility by min(2*2^a, cap) rounds (2*2^attempt seconds at
-        # download_warc_segments.py:66-70; 300 s cap at
-        # download_and_merge.py:179). Off -> retry next round (round 1
-        # behavior). Computed from the PRE-increment attempt.
-        backoff = (
-            F.least(F.lit(2) * F.pow(F.lit(2.0), F.col("attempt")),
-                    F.lit(float(self.backoff_cap_rounds))).cast("int")
-            if self.retry_backoff else F.lit(1)
-        )
+        # reference pacing mapped to rounds (BACKOFF_CAP_ROUNDS), computed
+        # from the PRE-increment attempt
+        backoff = F.least(
+            F.lit(2) * F.pow(F.lit(2.0), F.col("attempt")),
+            F.lit(float(BACKOFF_CAP_ROUNDS))).cast("int")
         requeued = (
             outcome.filter(retryable)
             .withColumn("not_before_round", (F.lit(rnd) + backoff).cast("int"))
@@ -692,7 +680,6 @@ class CrawlJob:
         self,
         pages: DataFrame,
         robots: DataFrame | None = None,
-        transient_fail: Column | None = None,
         max_rounds: int | None = None,
         discover_links: bool = False,
     ) -> list[dict[str, int]]:
@@ -700,12 +687,21 @@ class CrawlJob:
         out = []
         while max_rounds is None or len(out) < max_rounds:
             t0 = time.monotonic()
-            c = self.run_round(pages, robots, transient_fail, discover_links)
+            c = self.run_round(pages, robots, discover_links)
             if not c:
                 break
             c["wall_s"] = round(time.monotonic() - t0, 3)
             out.append(c)
         return out
+
+    def release(self) -> None:
+        """Free the job's cross-round seen state (its Bloom or cuckoo
+        generations, blob table and probe cache). Call it once the job
+        is done: a resumed or later job on the same directory rebuilds
+        the state from the seen table on first use."""
+        if self._bloom is not None:
+            self._bloom.release()
+            self._bloom = None
 
     # -- views -------------------------------------------------------------------
 

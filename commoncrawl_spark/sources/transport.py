@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from typing import Callable, Iterator, Optional, Protocol
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,32 +42,20 @@ class LookupJoinTransport:
     budget — the join runs un-hinted, so AQE picks the strategy and a
     bucketed-on-``url`` pages table (bench.py materialize_tables) joins
     with no shuffle or sort on the fat side at all.
-
-    ``fail_predicate`` marks rows as transient failures (fault injection
-    for tests; stands in for timeouts/5xx of a live transport).
     """
 
-    def __init__(self, pages: DataFrame, broadcast_limit: int = 1_000_000,
-                 fail_predicate: Column | None = None):
+    def __init__(self, pages: DataFrame, broadcast_limit: int = 1_000_000):
         self.pages = pages
         self.broadcast_limit = broadcast_limit
-        self.fail_predicate = fail_predicate
 
     def fetch(self, batch: DataFrame,
               n_rows_hint: int | None = None) -> DataFrame:
         small = n_rows_hint is not None and n_rows_hint <= self.broadcast_limit
         hint = F.broadcast if small else (lambda df: df)
-        hits = self.pages.select("url", "html").join(hint(batch), "url", "inner")
-        fail = (
-            self.fail_predicate if self.fail_predicate is not None
-            else F.lit(False)
-        )
-        hits = hits.select(
-            *batch.columns,
-            F.when(fail, F.lit(None).cast("binary"))
-            .otherwise(F.col("html")).alias("html"),
-            F.when(fail, F.lit("transient_http_error"))
-            .otherwise(F.lit(None).cast("string")).alias("_fetch_error"),
+        hits = (
+            self.pages.select("url", "html").join(hint(batch), "url", "inner")
+            .select(*batch.columns, F.col("html").alias("html"),
+                    F.lit(None).cast("string").alias("_fetch_error"))
         )
         # URLs absent from the pages table: recovered batch-side (an inner
         # join + slim anti-join keeps the fat side un-shuffled; a left

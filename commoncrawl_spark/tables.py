@@ -152,6 +152,9 @@ def _footer_bounds(md, c: str) -> list | None:
 #: schema (JSON) of the rows it wrote
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+# false-positive rate of the per-file ``bloom_by`` filters
+BLOOM_FP_RATE = 0.01
+
 
 def _schema_field(snap: dict[str, Any], name: str) -> T.StructField | None:
     """Column ``name`` of the schema a snapshot's manifest recorded, or
@@ -212,7 +215,6 @@ class SnapshotTable:
     def __init__(self, root: str, partition_by: tuple[str, ...] = (),
                  stats_by: tuple[str, ...] = (),
                  bloom_by: tuple[str, ...] = (),
-                 bloom_fp_rate: float = 0.01,
                  bounds_by: tuple[str, ...] = ()):
         """``partition_by`` is the table's partition spec (Iceberg's
         identity-transform case): commits lay data out hive-style
@@ -231,7 +233,6 @@ class SnapshotTable:
         self.partition_by = tuple(partition_by)
         self.stats_by = tuple(stats_by)
         self.bloom_by = tuple(bloom_by)
-        self.bloom_fp_rate = bloom_fp_rate
         self.bounds_by = tuple(bounds_by)
         if self.partition_by and (self.stats_by or self.bloom_by):
             raise ValueError(
@@ -428,7 +429,7 @@ class SnapshotTable:
         admits the key, where min/max stats admit nearly everything
         for high-cardinality keys. One grouped applyInPandas per
         column over the just-written commit; blob size ~1.2 bytes/key
-        at the default 1% fp rate, manifest-bounded.
+        at a 1% fp rate (``BLOOM_FP_RATE``), manifest-bounded.
 
         Keys are md5-hexed JVM-side so the filter works for any column
         type and reuses the seen-set family's vectorized hex bit-index
@@ -443,7 +444,6 @@ class SnapshotTable:
         from .operators.seen_set import _bloom_params, _fold_keys
 
         base = os.path.join(self._data_dir, commit_dir)
-        fp = self.bloom_fp_rate
         out: dict[str, Any] = {}
         schema = T.StructType([
             T.StructField("_f", T.StringType()),
@@ -455,7 +455,7 @@ class SnapshotTable:
         for c in self.bloom_by:
             def build(pdf: pd.DataFrame) -> pd.DataFrame:
                 ks = pdf["_h"].dropna()
-                m, k = _bloom_params(len(ks), fp)
+                m, k = _bloom_params(len(ks), BLOOM_FP_RATE)
                 # md5 keys are 32 hex chars = four independent 8-hex
                 # slices; _key_indices at k=5 would read zero-padding
                 # for the 5th slice (a constant bit — no information,
@@ -498,7 +498,7 @@ class SnapshotTable:
         tests per file in the driver). Files without a recorded filter
         are conservatively kept. Superset guarantee: a file containing
         the value is always returned (no false negatives by Bloom
-        construction); ~fp_rate of non-containing files leak through.
+        construction); ~BLOOM_FP_RATE of non-containing files leak through.
 
         The probe key is rendered through the SAME cast-to-string
         semantics the build used (:func:`_spark_cast_string` — Python

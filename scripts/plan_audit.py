@@ -13,6 +13,7 @@ report is the human-readable companion with the evidence inline.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -82,6 +83,26 @@ def partitionless_windows(plan: str) -> list[str]:
         if re.search(r"\bWindow \[", ln) and _is_partitionless(ln):
             bad.append(ln.strip()[:110])
     return bad
+
+
+@contextlib.contextmanager
+def cut_frames(module):
+    """Record every frame ``module`` cuts through its ``_materialize``
+    seam, and still cut it. Yields the recorded frames in call order:
+    the plans the operator ships, before the cut truncates them to a
+    ``Scan ExistingRDD`` leaf."""
+    cut = module._materialize
+    frames = []
+
+    def recording(df, *args, **kwargs):
+        frames.append(df)
+        return cut(df, *args, **kwargs)
+
+    module._materialize = recording
+    try:
+        yield frames
+    finally:
+        module._materialize = cut
 
 
 def grab(plan: str, *patterns: str, context: int = 0) -> list[str]:
@@ -556,10 +577,11 @@ def main() -> None:
     ))
 
     # triangle counting: degree-oriented wedges, struct-compare ranks
-    from commoncrawl_spark.operators.graph import triangle_counts
+    from commoncrawl_spark.operators import graph as graph_ops
 
-    tri = triangle_counts(pr_edges, materialize=False)
-    p = plan_of(tri, label="triangle counts")
+    with cut_frames(graph_ops) as cuts:
+        graph_ops.triangle_counts(pr_edges)
+    p = plan_of(cuts[0], label="triangle counts")
     sections.append((
         "Triangle counting: degree orientation bounds the wedge blowup",
         "Every undirected edge orients from its lower (degree, id) "
@@ -1657,6 +1679,7 @@ def main() -> None:
     ))
 
     # incremental near-dedup: the persisted index is never shuffled
+    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import (
         build_minhash_index,
         near_duplicates_against_index,
@@ -1666,10 +1689,10 @@ def main() -> None:
     build_minhash_index(docs.limit(400)).write.parquet(f"{mh_dir}/sig")
     seg = docs.filter(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + 500000).alias("doc_id"), "text")
-    nd = near_duplicates_against_index(
-        seg, spark.read.parquet(f"{mh_dir}/sig"), threshold=0.5,
-        materialize=False)
-    nd.collect()
+    with cut_frames(text_dedup) as cuts:
+        near_duplicates_against_index(
+            seg, spark.read.parquet(f"{mh_dir}/sig"), threshold=0.5)
+    nd = cuts[0]
     p = plan_of(nd)
     pf = plan_of(nd, "formatted")
     idx_exchanged = any(
@@ -1700,10 +1723,9 @@ def main() -> None:
     # the shingle df table aggregates map-side-partial
     from commoncrawl_spark.operators.text_dedup import set_similarity_join
 
-    ssj = set_similarity_join(
-        docs.limit(400), threshold=0.8, materialize=False)
-    ssj.collect()
-    p = plan_of(ssj, label="set-similarity join")
+    with cut_frames(text_dedup) as cuts:
+        set_similarity_join(docs.limit(400), threshold=0.8)
+    p = plan_of(cuts[0], label="set-similarity join")
     sections.append((
         "Exact set-similarity join: prefix filter, equi-join candidates",
         "Prefix filtering (Vernica et al. SIGMOD'10) makes the EXACT "
@@ -1728,12 +1750,11 @@ def main() -> None:
 
     # PMI collocations: token-key count joins + 1-row broadcast totals,
     # top-k as TakeOrderedAndProject — never a global rank window
-    from commoncrawl_spark.operators.analytics import pmi_collocations
+    from commoncrawl_spark.operators import analytics
 
-    pmi = pmi_collocations(docs.limit(300), min_count=2, top_k=50,
-                           materialize=False)
-    pmi.collect()
-    p = plan_of(pmi, label="pmi collocations")
+    with cut_frames(analytics) as cuts:
+        analytics.pmi_collocations(docs.limit(300), min_count=2, top_k=50)
+    p = plan_of(cuts[0], label="pmi collocations")
     sections.append((
         "PMI collocations: sum-of-logs scoring, partial top-k",
         "Both tallies aggregate map-side-partial off ONE persisted "
@@ -1946,10 +1967,11 @@ def main() -> None:
     # media aHash near-dup: signature-only shuffle, pigeonhole join
     from commoncrawl_spark.operators.multimodal import media_near_duplicates
 
-    ma = media_near_duplicates(
-        docs.select("doc_id", F.encode("text", "utf-8").alias("media")),
-        max_hamming=3, bits=32, blocks=4, materialize=False)
-    p = plan_of(ma, label="media-ahash-neardup")
+    with cut_frames(text_dedup) as cuts:  # the shared pigeonhole join
+        media_near_duplicates(
+            docs.select("doc_id", F.encode("text", "utf-8").alias("media")),
+            max_hamming=3, bits=32, blocks=4)
+    p = plan_of(cuts[0], label="media-ahash-neardup")
     sections.append((
         "Media aHash near-dup: payload bytes stay in the scan stage",
         "aHash is one hex() plus array expressions per row; only "
@@ -2611,10 +2633,9 @@ def main() -> None:
     # exact containment join: prefix-filtered probe, equi-join candidates
     from commoncrawl_spark.operators.text_dedup import containment_join
 
-    p = plan_of(
-        containment_join(docs.limit(400), threshold=0.8,
-                         materialize=False),
-        label="containment join")
+    with cut_frames(text_dedup) as cuts:
+        containment_join(docs.limit(400), threshold=0.8)
+    p = plan_of(cuts[0], label="containment join")
     sections.append((
         "Containment join: asymmetric prefix filter, no all-pairs",
         "Quote/excerpt detection needs containment C(a->b) = |Sa n Sb| "

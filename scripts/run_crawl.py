@@ -103,6 +103,7 @@ def main(argv: list[str] | None = None) -> int:
     pages = spark.read.parquet(args.pages)
     robots = spark.read.parquet(args.robots) if args.robots else None
     rounds = job.run(pages, robots=robots, max_rounds=args.max_rounds)
+    job.release()  # the exports below need no seen state
     summary = {
         "rounds": len(rounds),
         "fetched": sum(r["fetched"] for r in rounds),

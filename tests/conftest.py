@@ -7,6 +7,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,6 +42,27 @@ def ckpt_dir(spark, tmp_path):
     # underlying scala option so other tests keep sandbox behavior
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
     assert sc.getCheckpointDir() is None
+
+
+class FlakyTransport:
+    """Fault injection at the crawl's transport seam: a row ``inner``
+    fetched (``_fetch_error`` null) that matches ``predicate`` fails
+    transiently — ``html`` null, ``_fetch_error`` 'transient_http_error'
+    — as a live transport reports a timeout or 5xx. Misses keep their
+    own error (``not_found``)."""
+
+    def __init__(self, inner, predicate):
+        self.inner, self.predicate = inner, predicate
+
+    def fetch(self, batch, n_rows_hint=None):
+        fetched = self.inner.fetch(batch, n_rows_hint)
+        fail = F.col("_fetch_error").isNull() & self.predicate
+        return fetched.withColumns({
+            "html": F.when(fail, F.lit(None).cast("binary"))
+            .otherwise(F.col("html")),
+            "_fetch_error": F.when(fail, F.lit("transient_http_error"))
+            .otherwise(F.col("_fetch_error")),
+        })
 
 
 @pytest.fixture(scope="session")

@@ -255,13 +255,14 @@ def test_pmi_total_bigram_mass_counts_filtered_pairs(spark):
 
 @pytest.mark.spark
 def test_pmi_plan_topk_no_window(spark):
-    from commoncrawl_spark.operators.analytics import pmi_collocations
+    from commoncrawl_spark.operators import analytics
+    from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame(
         [(1, "a b a b a b a b")], "doc_id long, text string")
-    out = pmi_collocations(df, min_count=1, top_k=5, materialize=False)
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with cut_frames(analytics) as cuts:
+        analytics.pmi_collocations(df, min_count=1, top_k=5)
+    plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # map-side partial top-k
     assert "Window" not in plan
     assert "EvalPython" not in plan

@@ -16,6 +16,7 @@ from commoncrawl_spark.operators.dedup import deduplicate_records_py
 from commoncrawl_spark.plans.frontier import CrawlJob
 from commoncrawl_spark.sources.transport import LookupJoinTransport
 from commoncrawl_spark.tables import SnapshotTable
+from conftest import FlakyTransport
 
 BUDGET = 40
 
@@ -197,11 +198,12 @@ def test_transient_failures_retried_to_same_result(spark, tables, full_run,
     pages, cdx, _ = tables
     ref_job, _, _ = full_run
     d = str(tmp_path_factory.mktemp("crawl_flaky"))
-    job = CrawlJob(spark, d, budget_per_host=BUDGET, max_retries=3)
-    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
     # ~1/4 of first-attempt fetches fail transiently
     flaky = (F.col("attempt") == 0) & (F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
-    job.run(pages, transient_fail=flaky)
+    job = CrawlJob(spark, d, budget_per_host=BUDGET, max_retries=3,
+                   transport=FlakyTransport(LookupJoinTransport(pages), flaky))
+    job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+    job.run(pages)
 
     a = {tuple(r) for r in ref_job.seen_df().collect()}
     b = {tuple(r) for r in job.seen_df().collect()}
@@ -289,7 +291,9 @@ def discovery_ref(spark, tables, tmp_path_factory):
     job.seed_from_cdx(cdx, crawl_order=CRAWLS)
     rounds = job.run(pages, discover_links=True)
     assert len(rounds) >= 3 and sum(r["discovered"] for r in rounds) > 0
-    return _discovery_state(job)
+    state = _discovery_state(job)
+    job.release()
+    return state
 
 
 @pytest.mark.spark
@@ -426,6 +430,48 @@ class _TickingTransport:
 
 def _pinned_rdds(sc) -> set:
     return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.spark
+def test_release_frees_the_seen_state(spark, tables, tmp_path):
+    """A finished job frees its cross-round seen state with release():
+    three link-following crawls through the Bloom state, each released,
+    leave no RDD pinned that was not pinned before the crawls (earlier
+    tests' frames may be collected meanwhile)."""
+    pages, cdx, _ = tables
+    sc = spark.sparkContext
+    pages.count(), cdx.count()  # the module's cached inputs, pinned once
+    before = _pinned_rdds(sc)
+    for i in range(3):
+        job = CrawlJob(spark, str(tmp_path / f"ck{i}"), **CRASH_JOB)
+        job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+        assert len(job.run(pages, max_rounds=2, discover_links=True)) == 2
+        assert job._bloom is not None
+        job.release()
+        assert job._bloom is None
+        assert _pinned_rdds(sc) - before == set(), i
+
+
+@pytest.mark.spark
+def test_frontier_without_not_before_round_resumes(spark, tables, tmp_path):
+    """A frontier snapshot written before retry backoff lacks
+    not_before_round; a round over it reads the column as 0 and
+    schedules, fetches and requeues exactly like a round over the
+    current schema."""
+    pages, cdx, _ = tables
+    states = []
+    for legacy in (False, True):
+        job = CrawlJob(spark, str(tmp_path / f"ck{int(legacy)}"),
+                       budget_per_host=BUDGET)
+        job.seed_from_cdx(cdx, crawl_order=CRAWLS)
+        if legacy:
+            old = job.frontier.read(spark).drop("not_before_round")
+            job.frontier.overwrite(old, {"round": job.next_round()})
+            assert "not_before_round" not in job.frontier.read(spark).columns
+        assert job.run_round(pages)["selected"] > 0
+        states.append([{tuple(r) for r in df.collect()} for df in
+                       (job.trace_df(), job.frontier.read(spark))])
+    assert states[0] == states[1]
 
 
 @pytest.mark.spark

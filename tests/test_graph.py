@@ -711,13 +711,14 @@ def test_triangle_counts_hub_star_is_triangle_free(spark):
 
 @pytest.mark.spark
 def test_triangle_counts_plan_no_window_no_python(spark):
-    from commoncrawl_spark.operators.graph import triangle_counts
+    from commoncrawl_spark.operators import graph
+    from scripts.plan_audit import cut_frames
 
     edges = spark.createDataFrame(
         [(i % 7, (i * i + 1) % 7) for i in range(40)], "src long, dst long")
-    lazy = triangle_counts(edges, materialize=False)
-    lazy.collect()
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    with cut_frames(graph) as cuts:
+        graph.triangle_counts(edges)
+    plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan   # orientation rank is a struct compare
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan

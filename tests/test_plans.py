@@ -165,13 +165,16 @@ def test_near_dedup_pipeline_never_cross_joins(spark, docs):
     """The composed near-dedup must meet candidates only through the
     (band, bucket) equi-join — an all-pairs plan here would be quadratic
     at corpus scale."""
-    from commoncrawl_spark.operators.text_dedup import drop_near_duplicates
+    from commoncrawl_spark.operators import text_dedup
+    from scripts.plan_audit import cut_frames
 
-    # materialize=False: the default eagerly checkpoints the slim pair
-    # stages, which truncates the plan to RDD scans — the lazy variant
-    # exposes the joins this test pins
-    plan = plan_of(drop_near_duplicates(docs.select("doc_id", "text"),
-                                        materialize=False),
-                   mode="simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    # each slim pair stage (candidates, then verified pairs) is cut
+    # eagerly, which truncates the returned plan to RDD scans: the
+    # frames the stages cut carry the joins this test pins
+    with cut_frames(text_dedup) as cuts:
+        out = text_dedup.drop_near_duplicates(docs.select("doc_id", "text"))
+    assert len(cuts) == 2
+    for df in [*cuts, out]:
+        plan = plan_of(df, mode="simple")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan

@@ -937,8 +937,10 @@ def test_incremental_estimate_tracks_true_jaccard(spark):
 
 @pytest.mark.spark
 def test_incremental_near_dedup_never_shuffles_index(spark):
+    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import (
         build_minhash_index, near_duplicates_against_index)
+    from scripts.plan_audit import cut_frames
 
     hist = spark.createDataFrame(
         [(i, f"history document number {i} with shared filler words")
@@ -946,10 +948,10 @@ def test_incremental_near_dedup_never_shuffles_index(spark):
     new = spark.createDataFrame(
         [(100, "history document number 3 with shared filler words")],
         "doc_id long, text string")
-    m = near_duplicates_against_index(
-        new, build_minhash_index(hist), threshold=0.5, materialize=False)
-    m.collect()
-    plan = m._jdf.queryExecution().executedPlan().toString()
+    with cut_frames(text_dedup) as cuts:
+        near_duplicates_against_index(
+            new, build_minhash_index(hist), threshold=0.5)
+    plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     # segment side broadcasts; the index side must reach the join with
     # no Exchange between its scan and the BroadcastHashJoin
     assert "BroadcastHashJoin" in plan
@@ -1571,14 +1573,16 @@ def test_media_neardup_pairs(spark):
 
 @pytest.mark.spark
 def test_media_neardup_plan_no_python_no_allpairs(spark):
+    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.multimodal import media_near_duplicates
+    from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame(
         [(1, bytearray(b"abcdef")), (2, bytearray(b"abcdeg"))],
         "doc_id long, media binary")
-    out = media_near_duplicates(df, materialize=False)
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with cut_frames(text_dedup) as cuts:  # the shared pigeonhole join
+        media_near_duplicates(df)
+    plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -1868,13 +1872,15 @@ def test_ssjoin_threshold_validation(spark):
 
 @pytest.mark.spark
 def test_ssjoin_plan_no_cartesian_no_window(spark):
+    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import set_similarity_join
+    from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b c d e")], "doc_id long, text string")
-    out = set_similarity_join(df, threshold=0.5, materialize=False)
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with cut_frames(text_dedup) as cuts:
+        set_similarity_join(df, threshold=0.5)
+    plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "EvalPython" not in plan

@@ -14,6 +14,7 @@ from commoncrawl_spark.sources.transport import (
     HttpRangeTransport,
     LookupJoinTransport,
 )
+from conftest import FlakyTransport
 
 CDX_SCHEMA = (
     "url string, status string, mime_detected string, length string, "
@@ -116,10 +117,12 @@ def test_backoff_skips_rounds_deterministically(spark, fixture_dir, tmp_path):
     urls = [r["url"] for r in good.limit(3).collect()]
     flaky_url = urls[0]
 
+    flaky = FlakyTransport(LookupJoinTransport(pages),
+                           F.col("url") == flaky_url)
     job = CrawlJob(spark, str(tmp_path / "backoff"), budget_per_host=100,
-                   max_retries=3)
+                   max_retries=3, transport=flaky)
     job.seed_from_cdx(_mini_cdx(spark, urls), crawl_order=["CC-MAIN-2024-10"])
-    rounds = job.run(pages, transient_fail=F.col("url") == flaky_url)
+    rounds = job.run(pages)
 
     sched = sorted(
         r["round"] for r in job.trace_df().collect() if r["url"] == flaky_url
@@ -176,11 +179,12 @@ def test_gated_rows_do_not_mask_waiting_retries(spark, fixture_dir, tmp_path):
         "host string, disallow_prefixes array<string>",
     )
 
+    flaky = FlakyTransport(LookupJoinTransport(pages),
+                           F.col("url") == flaky_url)
     job = CrawlJob(spark, str(tmp_path / "gated"), budget_per_host=100,
-                   max_retries=1)
+                   max_retries=1, transport=flaky)
     job.seed_from_cdx(_mini_cdx(spark, urls), crawl_order=["CC-MAIN-2024-10"])
-    rounds = job.run(pages, robots=robots,
-                     transient_fail=F.col("url") == flaky_url)
+    rounds = job.run(pages, robots=robots)
 
     # round 0 selects the flaky row; round 1's batch is empty (only the
     # gated row is eligible) and fast-forwards to round 2; round 2
@@ -226,7 +230,7 @@ def test_fail_fast_group_commit(spark, fixture_dir):
         "grp", (F.crc32("url") % 4).cast("int")
     )
     fail = F.crc32("url") % 17 == 0  # a few rows fail, hitting some groups
-    t = LookupJoinTransport(pages, fail_predicate=fail)
+    t = FlakyTransport(LookupJoinTransport(pages), fail)
     res = t.fetch(batch, n_rows_hint=40).persist()
 
     committable, held = split_complete_groups(res, "grp")
