@@ -2,18 +2,17 @@
 
 Every iterative operator and model-table materialization in this
 package needs to cut lineage and pin a small intermediate result:
-graph fixpoint loops (:mod:`operators.graph`), the LM broadcast-gate
+the fixpoint loops (:func:`iterate`, below), the LM broadcast-gate
 model tables (:mod:`operators.lm`), SemDeDup's slim assignment
 (:mod:`operators.similarity`), the Block-Max posting slice
-(:mod:`operators.index`), the BPE merge loop, the seen-set blob edits
-and generations (:mod:`operators.seen_set`), the slim outputs of the
-self-joining operators (:mod:`operators.text_dedup`, which the aHash
-media near-dup shares, ``graph.triangle_counts`` and
-``analytics.pmi_collocations``), and the crawl round's
-multi-consumer frames (:mod:`plans.frontier`: the polite batch, the
-outcome, the discovered links), which every later commit then plans
-over as one ``Scan ExistingRDD`` leaf instead of re-planning (and
-re-scanning) a cached deep plan.
+(:mod:`operators.index`), the seen-set blob edits and generations
+(:mod:`operators.seen_set`), the slim outputs of the self-joining
+operators (:mod:`operators.text_dedup`, which the aHash media near-dup
+shares, ``graph.triangle_counts`` and ``analytics.pmi_collocations``),
+and the crawl round's multi-consumer frames (:mod:`plans.frontier`:
+the polite batch, the outcome, the discovered links), which every
+later commit then plans over as one ``Scan ExistingRDD`` leaf instead
+of re-planning (and re-scanning) a cached deep plan.
 
 ``DataFrame.localCheckpoint`` is the cheap way to do that — but it
 stores blocks ONLY on executors with no lineage left to recompute
@@ -53,10 +52,22 @@ nothing — the blocks belong to the RDD behind the cut's ``LogicalRDD``
 leaf, not to the cache manager, so they stay pinned until the JVM
 garbage-collects that RDD (and, in reliable mode, the persisted source
 stays cached until the session ends). :func:`release` frees a cut
-deterministically; a loop that cuts every round must call it once the
-cut's last consumer has run. Long-lived sessions that build many
-scorers should drop references to released models; see
-``operators/lm.py``'s retention note.
+deterministically, once the cut's last consumer has run. Long-lived
+sessions that build many scorers should drop references to released
+models; see ``operators/lm.py``'s retention note.
+
+Fixpoint loops cut through :func:`iterate`, which owns the one rule
+for when an iteration's state is cut and when the cut it replaces is
+freed: it cuts every ``cut_every`` steps and after the last step, and
+releases the previous cut (the initial state included) as soon as the
+new one holds its rows. A loop's result is therefore its last cut —
+one pinned frame — and the caller releases only the frames its steps
+read besides the state (a persisted edge table, a node table). The
+loops on it: ``graph.pagerank``/``trustrank`` (one biased walk),
+``opic``, ``hits``, ``seed_distances``, ``harmonic_centrality``,
+``label_propagation``, ``connected_components`` and ``kcore``;
+``bpe.bpe_train``, ``similarity.kmeans_centroids`` and
+``links.resolve_redirects``.
 """
 
 from __future__ import annotations
@@ -113,3 +124,32 @@ def release(df: DataFrame) -> None:
     pinned = getattr(df, "_pins", None)
     if pinned is not None:
         release(pinned)
+
+
+def iterate(state: DataFrame, step, n: int, cut_every: int,
+            until=None) -> DataFrame:
+    """Run ``state = step(state, i)`` for ``i`` in ``range(n)`` and
+    return the final state, cutting it every ``cut_every`` steps and
+    after the last one. Each cut releases the one before it — the
+    initial ``state`` too, so it must not be a frame the steps read on
+    their own — once the new cut holds its rows; ``n = 0`` returns
+    ``state`` untouched.
+
+    ``until(state) -> bool`` is asked at every cut but the last and
+    stops the loop when true. Those cuts are lazy, so the action
+    ``until`` runs stores the cut's blocks in the same job: a
+    convergence test costs one job per cut, not two."""
+    cut = state
+    for i in range(n):
+        state = step(state, i)
+        last = i == n - 1
+        if (i + 1) % cut_every and not last:
+            continue
+        ask = until is not None and not last
+        state = materialize(state, eager=not ask)
+        done = ask and until(state)
+        release(cut)
+        cut = state
+        if done:
+            break
+    return state

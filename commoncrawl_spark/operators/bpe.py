@@ -10,9 +10,9 @@ then runs over the histogram — a vocab-sized table (10^5..10^7 rows)
 whatever the corpus size. Per iteration: one map-side-partial pair
 count over the histogram, a 1-row ``orderBy().limit(1)`` argmax
 (TakeOrderedAndProject — the single scalar the driver is allowed to
-see), and a per-word JVM fold applying the merge. ``localCheckpoint``
-truncates the growing lineage each round, the same pattern as
-``graph.connected_components``.
+see), and a per-word JVM fold applying the merge. Each round's symbol
+table is cut through ``materialize.iterate``, the loop the graph
+fixpoints share.
 
 Merge semantics (shared with the pure-Python reference used by tests
 and the DuckDB oracle): left-to-right greedy, non-overlapping — the
@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.analytics import tokens_col
+from ..materialize import iterate, release
 from ..materialize import materialize as _materialize
 
 END = "</w>"  # end-of-word marker (the published formulation)
@@ -174,33 +175,34 @@ def bpe_train(
     Each iteration: pair counts from a zip-shift explode over the
     histogram's symbol arrays (weighted by word freq, map-side
     partial), argmax via ``orderBy().limit(1)`` (TakeOrderedAndProject,
-    one row to the driver), merge fold + eager ``localCheckpoint`` to
-    pin the new symbol table and truncate lineage.
+    one row to the driver), then the merge fold, cut to pin the new
+    symbol table and truncate lineage. The next pair's argmax is the
+    loop's stop test: it stores the cut in its own job, so a merge
+    costs one job.
     """
     words = (
         word_histogram(df, text_col, min_freq)
         .select("word", "freq", _char_symbols(F.col("word")).alias("syms"))
         .transform(_materialize)
     )
+    top = pair_count_top(words).collect() if n_merges else []
     merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = pair_count_top(words).collect()
-        if not top:
-            break
+
+    def merge(words: DataFrame, _: int) -> DataFrame:
         left, right, freq = top[0]["left"], top[0]["right"], \
             top[0]["pair_freq"]
         merges.append((left, right, int(freq)))
-        prev = words
-        words = words.select(
+        return words.select(
             "word", "freq",
             _merge_fold(F.col("syms"), left, right).alias("syms"),
-        ).transform(_materialize)
-        # the superseded checkpoint is dead the moment the new one
-        # materializes — at 10^7 histogram rows x 10^3 merges, leaking
-        # one cached copy per iteration is an executor-storage OOM
-        # (same discipline as graph.connected_components)
-        prev.unpersist()
-    words.unpersist()
+        )
+
+    def exhausted(words: DataFrame) -> bool:
+        top[:] = pair_count_top(words).collect()
+        return not top
+
+    release(iterate(words, merge, n_merges if top else 0, 1,
+                    until=exhausted))
     return merges
 
 

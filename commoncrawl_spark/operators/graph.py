@@ -1,74 +1,109 @@
-"""Distributed connected components over a pair/edge table.
+"""Link-graph operators over a slim ``(src, dst)`` edge table: the
+frontier's priority signals (PageRank, TrustRank, spam mass, OPIC,
+HITS, harmonic centrality, seed-distance rings), its community and
+duplicate structure (label propagation, connected components, k-core,
+triangles) and webgraph statistics.
 
-Near-duplicate pairs (MinHash-LSH verified Jaccard, simhash pigeonhole,
-embedding near-dup) form a GRAPH: A~B and B~C means {A,B,C} is one
-duplicate cluster even when A and C never collide in any band. The
-greedy min-id keep rule (``text_dedup.drop_near_duplicates``) is
-single-pass but not transitive; this module gives the transitive
-closure — each node labeled with the minimum id of its component — as
-iterative min-label propagation, entirely DataFrame ops.
-
-Scale shape (10^10 nodes, 1000 executors):
-- state per iteration is one slim ``(id, label)`` frame — two columns,
-  never text or vectors;
-- one iteration = one equi-join (labels onto the symmetric edge list)
-  plus one min-aggregation, both partial-aggregating map-side; no
-  windows, no driver data;
-- each iteration is a neighbor-min step PLUS a pointer-doubling step
-  (every node jumps to its label's label), so convergence is
-  O(log diameter) — a 10^6-long chain closes in ~20 iterations, and
-  the shallow clusters near-dup graphs actually produce close in 2-3;
-  ``max_iters`` is a safety guard far above that;
-- per-iteration ``localCheckpoint`` truncates the lineage so the plan
-  does not deepen with iterations (same discipline as
-  ``similarity.kmeans_centroids``), and the convergence check is the
-  driver-side count of changed labels — one long, not data.
+Scale shape of every fixpoint loop here (10^10 edges, 1000 executors):
+- the edge list is normalized once (:func:`_edge_list`: non-null,
+  distinct, symmetrized or loop-free where the operator is
+  undirected) and, where every step joins on it, hash-partitioned by
+  ``src`` once and persisted (:func:`_by_src`), so a step moves only
+  the slim state — one row per node of ids and a few scores or a
+  sketch, never text or vectors;
+- one step is equi-joins of the state onto the edge list plus
+  map-side-partial aggregates on the node key: no windows, no
+  driver-side data (totals ride 1-row broadcasts via crossJoin);
+- the steps run through ``materialize.iterate``. The fixed-count
+  walks cut every ``CUT_EVERY`` steps and after the last: a per-step
+  eager cut is a driver barrier (~1 s of serial latency per round on
+  the scaling rig) that only a convergence test needs. The
+  convergence loops (connected components, k-core) test at each cut,
+  and the test's count stores the cut in the same job. Every cut frees
+  the one it replaces, so a result pins one frame.
 
 Reference parity: the reference has no graph stage (its dedup is exact
-by canonical URL, download_and_merge.py:198-209); this operator is part
-of the LLM-training-data family the engine adds on top.
+by canonical URL, download_and_merge.py:198-209); these operators are
+part of the LLM-training-data and frontier-priority families the
+engine adds on top.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..materialize import iterate, release
 from ..materialize import materialize as _materialize
 
+CUT_EVERY = 3        # steps between the fixed-count walks' cuts
+KCORE_CUT_EVERY = 4  # peel rounds between k-core's convergence tests
 
-def _propagate(sym: DataFrame, labels: DataFrame,
-               carry_prev: bool = False) -> DataFrame:
+
+def _edge_list(edges: DataFrame, src_col: str, dst_col: str,
+               undirected: bool = False,
+               drop_loops: bool = False) -> DataFrame:
+    """``edges`` as distinct non-null ``(src, dst)`` pairs, without
+    self-loops and/or with both directions when asked."""
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    )
+    if drop_loops:
+        e = e.filter(F.col("src") != F.col("dst"))
+    if undirected:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return e.distinct()
+
+
+def _by_src(e: DataFrame) -> DataFrame:
+    """``e`` hash-partitioned by ``src`` once and persisted: every
+    step's join reuses that exchange and only the state side moves.
+    The caller releases it after the loop."""
+    return e.repartition("src").persist()
+
+
+def _nodes(e: DataFrame, *more: DataFrame) -> DataFrame:
+    """The distinct ``node`` ids of ``src ∪ dst`` (∪ ``more``)."""
+    out = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node")))
+    for m in more:
+        out = out.unionByName(m)
+    return out.distinct()
+
+
+def _out_degree(e: DataFrame) -> DataFrame:
+    return e.groupBy("src").agg(F.count("*").alias("deg"))
+
+
+def _propagate(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """One label-propagation round: neighbor-min, then pointer doubling.
 
     Split out (un-checkpointed) so plan tests and the SCALE.md audit can
     inspect the per-iteration physical plan — the loop checkpoints each
     round, which would otherwise hide it behind an RDD scan.
 
-    ``carry_prev`` threads each node's INCOMING label through the round
-    as ``_prev`` (every node contributes exactly one own-label row, so
-    a ``max`` aggregate recovers it beside the min-label fold). The
-    loop's convergence check then becomes a filter over the round's own
-    checkpointed output instead of a node-scale shuffle join of new
-    labels against old — one fewer exchange per iteration (r4; the
-    check was measurably driver/shuffle-bound at sandbox round sizes).
+    Each node's INCOMING label rides through the round as ``_prev``
+    (every node contributes exactly one own-label row, so a ``max``
+    aggregate recovers it beside the min-label fold). The loop's
+    convergence check is then a filter over the round's own cut output
+    instead of a node-scale shuffle join of new labels against old —
+    one fewer exchange per iteration.
     """
     own = labels.select("id", "cluster")
+    ctype = dict(own.dtypes)["cluster"]
     nbr_labels = (
-        sym.join(own.withColumnRenamed("id", "nb"), "nb")
-        .select("id", "cluster")
+        sym.join(own.withColumnRenamed("id", "src"), "src")
+        .select(F.col("dst").alias("id"), "cluster",
+                F.lit(None).cast(ctype).alias("_prev"))
     )
-    if carry_prev:
-        ctype = dict(own.dtypes)["cluster"]
-        own = own.withColumn("_prev", F.col("cluster"))
-        nbr_labels = nbr_labels.withColumn(
-            "_prev", F.lit(None).cast(ctype))
-        aggs = [F.min("cluster").alias("cluster"),
-                F.max("_prev").alias("_prev")]
-        carry = [F.col("_prev")]
-    else:
-        aggs = [F.min("cluster").alias("cluster")]
-        carry = []
-    stepped = own.unionByName(nbr_labels).groupBy("id").agg(*aggs)
+    stepped = (
+        own.withColumn("_prev", F.col("cluster"))
+        .unionByName(nbr_labels)
+        .groupBy("id")
+        .agg(F.min("cluster").alias("cluster"),
+             F.max("_prev").alias("_prev"))
+    )
     # pointer doubling: follow the label chain one extra hop. Every
     # label IS a node id, and labels only decrease, so the jump is
     # always valid and monotone: cluster' = label(label(id)).
@@ -78,7 +113,7 @@ def _propagate(sym: DataFrame, labels: DataFrame,
                            F.col("cluster").alias("_c2")),
             "cluster",
         )
-        .select("id", F.col("_c2").alias("cluster"), *carry)
+        .select("id", F.col("_c2").alias("cluster"), "_prev")
     )
 
 
@@ -88,7 +123,12 @@ def connected_components(
     b_col: str = "b",
     max_iters: int = 20,
 ) -> DataFrame:
-    """Label every node in ``edges`` with its component's minimum id.
+    """Label every node in ``edges`` with its component's minimum id —
+    the transitive closure of near-duplicate pairs (MinHash-LSH
+    verified Jaccard, simhash pigeonhole, embedding near-dup): A~B and
+    B~C make {A,B,C} one duplicate cluster even when A and C never
+    collide in any band, which the single-pass greedy min-id keep rule
+    (``text_dedup.drop_near_duplicates``) cannot see.
 
     Returns ``(id, cluster)`` with one row per distinct node; ``cluster``
     is the component-minimum node id (deterministic representative).
@@ -99,44 +139,55 @@ def connected_components(
     label's label (labels only shrink, so the jump is monotone). A
     fixpoint is exactly the component-minimum labeling; the doubling
     step makes the iteration count logarithmic in component diameter
-    instead of linear. Convergence is checked by counting changed
-    labels per iteration (0 = done).
+    (a 10^6-long chain closes in ~20 iterations, the shallow clusters
+    near-dup graphs produce in 2-3; ``max_iters`` is a safety guard far
+    above that). Every round is cut, and the count of changed labels
+    that stops the loop at 0 stores the cut in the same job — one job
+    and one driver barrier per round.
     """
-    sym = (
-        edges.select(F.col(a_col).alias("id"), F.col(b_col).alias("nb"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("id"), F.col(a_col).alias("nb")))
-        .filter(F.col("id").isNotNull() & F.col("nb").isNotNull())
-        .distinct()
-        .transform(_materialize)
-    )
+    sym = _edge_list(edges, a_col, b_col, undirected=True).transform(
+        _materialize)
     labels = (
-        sym.select("id").distinct()
+        sym.select(F.col("src").alias("id")).distinct()
         .withColumn("cluster", F.col("id"))
         .transform(_materialize)
     )
-    for _ in range(max_iters):
-        # LAZY materialize + count in ONE job (r5): an eager checkpoint
-        # here launches a materialization job and the convergence count
-        # launches a second — two driver barriers per round, and the
-        # 16x-edges scaling leg showed the fixed per-round barrier cost
-        # is exactly what holds CC's N->4N efficiency under pagerank's.
-        # Marked lazy, the blocks are stored DURING the count's job, so
-        # each round costs one job; later rounds read the stored blocks
-        # (plan depth stays constant — the count runs immediately, so
-        # no deep lazy chain ever builds up).
-        new_labels = _propagate(
-            sym, labels, carry_prev=True).transform(
-                _materialize, eager=False)
-        changed = (
-            new_labels.filter(F.col("cluster") != F.col("_prev")).count()
-        )
-        old = labels
-        labels = new_labels
-        old.unpersist()
-        if changed == 0:
-            break
+    labels = iterate(
+        labels, lambda labels, _: _propagate(sym, labels), max_iters, 1,
+        until=lambda labels: labels.filter(
+            F.col("cluster") != F.col("_prev")).count() == 0)
+    release(sym)
     return labels.select("id", "cluster")
+
+
+def _rank_walk(e: DataFrame, nodes: DataFrame, iters: int,
+               damping: float, col: str) -> DataFrame:
+    """Biased PageRank over the normalized edge list ``e``: ``nodes``
+    is the cut ``(node, bias)`` table, ``col`` starts at ``bias`` and
+    each iteration sets ``col' = (1-d)*bias + d*Σ_{incoming}
+    col/out_degree``. The out-degree travels with the edge list, so
+    the loop never re-joins it. Returns ``(node, col)``."""
+    ann = _by_src(e.join(_out_degree(e), "src"))
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contribs = (
+            ann.join(ranks.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col(col) / F.col("deg")).alias("mass"))
+        )
+        return nodes.join(contribs, "node", "left").select(
+            "node",
+            (F.lit(1.0 - damping) * F.col("bias")
+             + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+             ).alias(col),
+        )
+
+    ranks = iterate(nodes.select("node", F.col("bias").alias(col)),
+                    step, iters, CUT_EVERY)
+    release(ann)
+    if iters:  # else the returned starting vector still reads nodes
+        release(nodes)
+    return ranks
 
 
 def pagerank(
@@ -145,7 +196,6 @@ def pagerank(
     dst_col: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a slim ``(src, dst)`` edge table —
     the crawl-frontier priority signal: hosts (or URLs) that the link
@@ -158,66 +208,15 @@ def pagerank(
     nodes contribute nothing (mass leaks, as in GraphX's default) —
     deterministic and CTE-expressible, unlike redistribution schemes.
     Fixed ``iters`` rather than a convergence test keeps the result
-    bit-stable across runs and oracle-checkable.
-
-    Scale shape (10^10 edges, 1000 executors):
-    - the per-iteration state is ``(node, rank)`` — two slim columns;
-    - one iteration = one equi-join of ranks onto the out-degree-
-      annotated edge list plus one sum-aggregation, both map-side
-      partial; no windows, no driver data, no collect;
-    - the edge list is hash-partitioned by ``src`` ONCE and persisted —
-      every iteration's join reuses that exchange (the rank side, the
-      small one, moves);
-    - ``localCheckpoint`` every ``checkpoint_interval`` iterations (and
-      on the last) truncates lineage so the plan never nests more than
-      ``checkpoint_interval`` joins deep. Per-ITERATION checkpointing
-      (the r3-early discipline) made every round a full job with a
-      driver barrier — measured ~1 s of serial latency per round on the
-      scaling rig, the dominant cost at sandbox scale and pure overhead
-      at any scale, since unlike connected_components there is no
-      per-round convergence test needing an action.
+    bit-stable across runs and oracle-checkable. It is
+    :func:`trustrank`'s walk with a bias of 1.0 on every node:
+    ``(1-d)*1.0`` is exactly ``1-d``.
 
     Returns ``(node, rank)``, one row per distinct node.
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # degree travels WITH the edge list so the loop never re-joins it
-    ann = (
-        e.join(out_deg, "src")
-        .repartition("src")
-        .persist()
-    )
-    ann.count()  # materialize once, before the loop
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(_materialize)
-    )
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for i in range(iters):
-        contribs = (
-            ann.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("mass"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (F.lit(1.0 - damping)
-             + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-             ).alias("rank"),
-        )
-        if (i + 1) % checkpoint_interval == 0 or i == iters - 1:
-            ranks = ranks.transform(_materialize)
-    ann.unpersist()
-    return ranks
+    e = _edge_list(edges, src_col, dst_col)
+    nodes = _nodes(e).withColumn("bias", F.lit(1.0)).transform(_materialize)
+    return _rank_walk(e, nodes, iters, damping, "rank")
 
 
 def hits(
@@ -245,84 +244,48 @@ def hits(
     Fixed ``iters`` (no convergence test) keeps the result stable
     across runs and oracle-checkable.
 
-    Scale shape (10^10 edges, 1000 executors):
-    - per-iteration state is ``(node, hub, auth)`` — three slim columns,
-      never page content;
-    - one iteration = two equi-joins of scores onto the edge list plus
-      two sum-aggregations, all map-side partial; no windows, no
-      driver-side data;
-    - the edge list is hash-partitioned ONCE per join side (by ``src``
-      for the auth step, by ``dst`` for the hub step) and persisted, so
-      every iteration moves only the slim score frame;
-    - the L1 totals are 1-row aggregates broadcast back via crossJoin
-      (the ``lm.py`` totals pattern) — never ``collect``;
-    - ``localCheckpoint`` per iteration truncates lineage (same
-      discipline as :func:`pagerank`).
+    Scale shape: the module's, with two persisted layouts of the cut
+    edge list (by ``src`` for the auth update, by ``dst`` for the hub
+    update). Each update is one step of the loop and is cut: its L1
+    total and the next update both read it, so an uncut chain would
+    recompute every earlier update twice per step — which is why hits
+    cuts per update where :func:`pagerank` cuts every ``CUT_EVERY``.
 
     Returns ``(node, hub, auth)``, one row per distinct node.
     """
-    # checkpoint the deduped edge list FIRST: the two join layouts, the
-    # two materializing counts, and the node derivation below would
-    # otherwise each recompute the corpus-scale distinct() shuffle
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .transform(_materialize)
-    )
-    by_src = e.repartition("src").persist()
+    # cut the deduped edge list FIRST: the two join layouts and the
+    # node derivation would otherwise each recompute the corpus-scale
+    # distinct() shuffle
+    e = _edge_list(edges, src_col, dst_col).transform(_materialize)
+    by_src = _by_src(e)
     by_dst = e.repartition("dst").persist()
-    by_src.count()  # materialize both layouts once, before the loop
-    by_dst.count()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(_materialize)
-    )
-    scores = nodes.select(
-        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+    scores = _nodes(e).select(
+        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+    ).transform(_materialize)
 
-    def _l1(df: DataFrame, col: str) -> DataFrame:
-        total = df.agg(F.sum(col).alias("_tot"))
+    def update(scores: DataFrame, i: int) -> DataFrame:
+        # even steps: auth from the hubs over in-edges; odd steps: hub
+        # from the new auths over out-edges
+        layout, key, to, frm, score = (
+            (by_src, "src", "dst", "hub", "auth") if i % 2 == 0
+            else (by_dst, "dst", "src", "auth", "hub"))
+        mass = (
+            layout.join(scores.select(F.col("node").alias(key), frm), key)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(frm).alias("_m"))
+        )
+        upd = scores.join(mass, "node", "left").withColumn(
+            score, F.coalesce("_m", F.lit(0.0)))
+        total = upd.agg(F.sum(score).alias("_tot"))
         return (
-            df.crossJoin(F.broadcast(total))
-            .withColumn(col, F.col(col) / F.col("_tot"))
-            .drop("_tot")
+            upd.crossJoin(F.broadcast(total))
+            .withColumn(score, F.col(score) / F.col("_tot"))
+            .select("node", "hub", "auth")
         )
 
-    for _ in range(iters):
-        # auth'(n) = sum of hub over in-edges, then L1-normalize
-        auth_mass = (
-            by_src.join(
-                scores.select(F.col("node").alias("src"), "hub"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("auth"))
-        )
-        auth = _l1(
-            nodes.join(auth_mass, "node", "left")
-            .select("node", F.coalesce("auth", F.lit(0.0)).alias("auth")),
-            "auth",
-        ).transform(_materialize)
-        # hub'(n) = sum of the NEW auth over out-edges, then normalize
-        hub_mass = (
-            by_dst.join(
-                auth.select(F.col("node").alias("dst"), "auth"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hub = _l1(
-            nodes.join(hub_mass, "node", "left")
-            .select("node", F.coalesce("hub", F.lit(0.0)).alias("hub")),
-            "hub",
-        )
-        scores = (
-            hub.join(auth, "node")
-            .select("node", "hub", "auth")
-            .transform(_materialize)
-        )
-    by_src.unpersist()
-    by_dst.unpersist()
+    scores = iterate(scores, update, 2 * iters, 1)
+    for f in (e, by_src, by_dst):
+        release(f)
     return scores
 
 
@@ -334,7 +297,6 @@ def trustrank(
     seed_col: str = "node",
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Fixed-iteration TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
     VLDB 2004) — PageRank with the teleport restricted to a vetted seed
@@ -353,29 +315,14 @@ def trustrank(
     in the edge graph still receive their bias (they are real trusted
     hosts even when nothing links them yet).
 
-    Scale shape (10^10 edges, 1000 executors): identical to
-    :func:`pagerank` — slim ``(node, trust)`` state, one equi-join +
-    one map-side-partial sum per iteration, the degree-annotated edge
-    list hash-partitioned once and persisted; the seed count is a
-    1-row aggregate broadcast via crossJoin (the ``hits`` L1-totals
-    pattern), never a collect; ``localCheckpoint`` per iteration
-    truncates lineage. The seed table is corpus-tiny by construction
-    (hand-vetted lists are thousands of hosts) and joins broadcast.
+    Scale shape: :func:`pagerank`'s walk; the seed count is a 1-row
+    aggregate broadcast via crossJoin, never a collect. The seed table
+    is corpus-tiny by construction (hand-vetted lists are thousands of
+    hosts) and joins broadcast.
 
     Returns ``(node, trust)``, one row per node in ``edges ∪ seeds``.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ann = (
-        e.join(out_deg, "src")
-        .repartition("src")
-        .persist()
-    )
-    ann.count()  # materialize once, before the loop
+    e = _edge_list(edges, src_col, dst_col)
     s = (
         seeds.select(F.col(seed_col).alias("node"))
         .filter(F.col("node").isNotNull())
@@ -384,10 +331,7 @@ def trustrank(
     )
     n_seeds = s.agg(F.count("*").alias("_ns"))
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(s)
-        .distinct()
+        _nodes(e, s)
         .crossJoin(F.broadcast(n_seeds))
         .join(F.broadcast(s.withColumn("_seed", F.lit(1))), "node", "left")
         .select(
@@ -397,26 +341,8 @@ def trustrank(
         )
         .transform(_materialize)
     )
-    ranks = nodes.select("node", F.col("bias").alias("trust"))
-    for i in range(iters):
-        contribs = (
-            ann.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("trust") / F.col("deg")).alias("mass"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (F.lit(1.0 - damping) * F.col("bias")
-             + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-             ).alias("trust"),
-        )
-        # interval checkpointing, same rationale as pagerank: no
-        # per-round convergence action, so per-round barriers are pure
-        # serial overhead; lineage stays <= checkpoint_interval deep
-        if (i + 1) % checkpoint_interval == 0 or i == iters - 1:
-            ranks = ranks.transform(_materialize)
-    ann.unpersist()
-    return ranks
+    release(s)
+    return _rank_walk(e, nodes, iters, damping, "trust")
 
 
 def opic(
@@ -424,7 +350,6 @@ def opic(
     src_col: str = "src",
     dst_col: str = "dst",
     iters: int = 3,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """OPIC — batch-synchronous Online Page Importance Computation
     (Abiteboul, Preda & Cobéna, "Adaptive On-Line Page Importance
@@ -456,64 +381,34 @@ def opic(
     (T + 1)`` therefore sums to 1 — comparable across graphs and
     round counts. Fixed ``iters`` keeps the result bit-stable.
 
-    Scale shape (10^10 edges, 1000 executors):
-    - per-round state is ``(node, cash, history)`` — three slim
-      columns; no windows, no driver data;
-    - one round = one equi-join of cash onto the degree-annotated
-      edge list + one map-side-partial sum (identical shape to
-      :func:`pagerank`) plus a 1-row dangling-mass aggregate that
-      rides back in via ``crossJoin(broadcast(...))`` — never a
-      collect (n itself is a 1-row count aggregate, also broadcast);
-    - the edge list is hash-partitioned by ``src`` once and
-      persisted; every round's join reuses that exchange;
-    - ``localCheckpoint`` every ``checkpoint_interval`` rounds
-      truncates lineage (interval, not per-round: no convergence
-      action exists, so per-round barriers are pure serial overhead).
+    Scale shape: :func:`pagerank`'s join per round plus a 1-row
+    dangling-mass aggregate that rides back in via
+    ``crossJoin(broadcast(...))`` — never a collect (n itself is a
+    1-row count aggregate, also broadcast).
 
     Returns ``(node, cash, history, importance)``, one row per node.
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ann = (
-        e.join(out_deg, "src")
-        .repartition("src")
-        .persist()
-    )
-    ann.count()  # materialize once, before the loop
-    n_nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .agg(F.count("*").alias("_n"))
-    )
+    e = _edge_list(edges, src_col, dst_col)
+    out_deg = _out_degree(e)
+    ann = _by_src(e.join(out_deg, "src"))
+    nodes = _nodes(e)
+    n_nodes = nodes.agg(F.count("*").alias("_n"))
     # nodes annotated once with n (1-row broadcast) and a dangling
     # marker (left-anti-shaped via the degree table), so the loop body
     # is pure column arithmetic over slim state
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .crossJoin(F.broadcast(n_nodes))
+    state = (
+        nodes.crossJoin(F.broadcast(n_nodes))
         .join(out_deg.select(F.col("src").alias("node"),
                              F.lit(1).alias("_has_out")),
               "node", "left")
         .select("node", "_n",
-                F.coalesce("_has_out", F.lit(0)).alias("_has_out"))
+                F.coalesce("_has_out", F.lit(0)).alias("_has_out"),
+                (F.lit(1.0) / F.col("_n")).alias("cash"),
+                F.lit(0.0).alias("history"))
         .transform(_materialize)
     )
-    state = nodes.select(
-        "node", "_n", "_has_out",
-        (F.lit(1.0) / F.col("_n")).alias("cash"),
-        F.lit(0.0).alias("history"),
-    )
-    for i in range(iters):
+
+    def step(state: DataFrame, _: int) -> DataFrame:
         received = (
             ann.join(state.select(F.col("node").alias("src"), "cash"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -521,7 +416,7 @@ def opic(
         )
         dangling = state.filter(F.col("_has_out") == 0).agg(
             F.coalesce(F.sum("cash"), F.lit(0.0)).alias("_dangling"))
-        state = (
+        return (
             state.join(received, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -531,15 +426,14 @@ def opic(
                 (F.col("history") + F.col("cash")).alias("history"),
             )
         )
-        if (i + 1) % checkpoint_interval == 0 or i == iters - 1:
-            state = state.transform(_materialize)
-    ann.unpersist()
+
+    state = iterate(state, step, iters, CUT_EVERY)
+    release(ann)
     return state.select(
         "node", "cash", "history",
         ((F.col("history") + F.col("cash")) / F.lit(float(iters + 1))
          ).alias("importance"),
     )
-
 
 def dedup_clusters(
     pairs: DataFrame,
@@ -672,7 +566,6 @@ def seed_distances(
     dst_col: str = "dst",
     seed_col: str = "node",
     max_depth: int = 6,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Breadth-first link distance from a seed set — the classic
     depth-limited crawl policy (``maxdepth`` in Heritrix/Nutch scopes):
@@ -690,29 +583,16 @@ def seed_distances(
     at web scale materializing the unreachable complement is the
     mistake).
 
-    Scale shape (10^10 edges, 1000 executors):
-    - per-round state is ``(node, depth)`` — two slim columns; one
-      round = one equi-join of the CURRENT reached set onto the edge
-      list + one min-aggregation, both map-side partial; no windows,
-      no driver data (the reached set starts seed-sized and grows one
-      ring per round, so early rounds join a tiny side);
-    - the edge list is hash-partitioned by ``src`` once and persisted,
-      every round's join reuses that exchange;
-    - ``localCheckpoint`` every ``checkpoint_interval`` rounds bounds
-      lineage, same discipline as :func:`pagerank`.
+    Scale shape: the module's, with ``(node, depth)`` state; one
+    round = one equi-join of the CURRENT reached set onto the edge
+    list + one min-aggregation (the reached set starts seed-sized and
+    grows one ring per round, so early rounds join a tiny side).
 
     Returns ``(node, depth)`` for every node within ``max_depth``.
     """
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
-    e.count()  # materialize once, before the loop
+    e = _by_src(_edge_list(edges, src_col, dst_col))
     dist = (
         seeds.select(F.col(seed_col).alias("node"))
         .filter(F.col("node").isNotNull())
@@ -720,20 +600,21 @@ def seed_distances(
         .withColumn("depth", F.lit(0))
         .transform(_materialize)
     )
-    for i in range(max_depth):
+
+    def relax(dist: DataFrame, _: int) -> DataFrame:
         hop = (
             e.join(dist.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"),
                     (F.col("depth") + 1).alias("depth"))
         )
-        dist = (
+        return (
             dist.unionByName(hop)
             .groupBy("node")
             .agg(F.min("depth").alias("depth"))
         )
-        if (i + 1) % checkpoint_interval == 0 or i == max_depth - 1:
-            dist = dist.transform(_materialize)
-    e.unpersist()
+
+    dist = iterate(dist, relax, max_depth, CUT_EVERY)
+    release(e)
     return dist
 
 
@@ -743,7 +624,6 @@ def harmonic_centrality(
     dst_col: str = "dst",
     radius: int = 6,
     lgk: int = 12,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """HyperBall harmonic centrality (Boldi & Vigna, "In-Core
     Computation of Geometric Centralities with HyperBall", ICDM 2013
@@ -771,51 +651,32 @@ def harmonic_centrality(
     regime at test scale; at web scale the estimate degrades gracefully
     and the RANKING it induces is what ships.
 
-    Scale shape (10^8 hosts, 1000 executors):
-    - state is one ``(node, 2^lgk-byte sketch, long, double)`` row per
-      node — fixed size, never proportional to ball size (the whole
-      point vs. exact BFS frontier sets, which explode to V*E pairs);
-    - the edge list is hash-partitioned by ``src`` once and persisted;
-      every round's join reuses that exchange, only sketches move;
-    - ``hll_union_agg`` is a declarative aggregate: partial unions
-      build map-side, so a host with 10^6 in-links folds to one sketch
-      per map partition before the exchange (in-degree skew bounded);
-    - interval ``localCheckpoint`` (same discipline and rationale as
-      :func:`pagerank`): lineage stays <= ``checkpoint_interval``
-      rounds deep with no per-round driver barrier; there is no
-      convergence action — ``radius`` is fixed, and past the graph's
-      effective diameter the deltas are zero.
+    Scale shape: the module's, with one ``(node, 2^lgk-byte sketch,
+    long, double)`` state row per node — fixed size, never proportional
+    to ball size (the whole point vs. exact BFS frontier sets, which
+    explode to V*E pairs). ``hll_union_agg`` is a declarative
+    aggregate: partial unions build map-side, so a host with 10^6
+    in-links folds to one sketch per map partition before the exchange
+    (in-degree skew bounded). ``radius`` is fixed, and past the
+    graph's effective diameter the deltas are zero.
 
     Returns ``(node, ball, harmonic)``: the in-ball size at ``radius``
     (reachable-source count, itself the "how discoverable" metric) and
-    the harmonic centrality sum.
+    the harmonic centrality sum (at ``radius = 0``: 1 and 0).
     """
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    if radius < 0:
+        raise ValueError(f"radius must be >= 0, got {radius}")
+    e = _by_src(_edge_list(edges, src_col, dst_col, drop_loops=True))
     state = (
-        nodes.groupBy("node")
+        _nodes(e).groupBy("node")
         .agg(F.hll_sketch_agg("node", F.lit(lgk)).alias("sk"))
         .withColumn("cnt", F.lit(1).cast("long"))
         .withColumn("harm", F.lit(0.0))
         .transform(_materialize)
     )
-    for t in range(1, radius + 1):
+
+    def grow(state: DataFrame, i: int) -> DataFrame:
+        t = i + 1
         contrib = (
             e.join(state.select(F.col("node").alias("src"), "sk"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -830,16 +691,16 @@ def harmonic_centrality(
             .otherwise(F.hll_union("sk", "csk")).alias("sk"),
             "cnt", "harm",
         )
-        state = grown.select(
+        return grown.select(
             "node", "sk",
             F.hll_sketch_estimate("sk").alias("cnt"),
             (F.col("harm")
              + (F.hll_sketch_estimate("sk") - F.col("cnt"))
              / F.lit(float(t))).alias("harm"),
         )
-        if t % checkpoint_interval == 0 or t == radius:
-            state = state.transform(_materialize)
-    e.unpersist()
+
+    state = iterate(state, grow, radius, CUT_EVERY)
+    release(e)
     return state.select(
         "node",
         F.col("cnt").alias("ball"),
@@ -852,7 +713,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     iters: int = 4,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan,
     Albert & Kumara, "Near linear time algorithm to detect community
@@ -869,58 +729,41 @@ def label_propagation(
     keeps the tie-break total). Self-loops are dropped: a node must not
     vote for itself or singleton labels never merge.
 
-    Scale shape (10^8 hosts, 1000 executors):
-    - state is one slim ``(node, label)`` row per node; one round is
-      one equi-join of state onto the hash-partitioned persisted edge
-      list + TWO map-side-partial aggregates — (dst, label) vote counts
-      (collapses a 10^6-in-degree host's messages per map partition),
-      then the per-dst argmax over the already-tiny vote rows;
-    - no windows anywhere (the argmax is an aggregate, not a rank);
-    - interval ``localCheckpoint`` as in :func:`pagerank`: fixed round
-      count, lineage constant-depth, no per-round driver action.
+    Scale shape: the module's, with ``(node, label)`` state; one round
+    is one equi-join of state onto the edge list + TWO map-side-partial
+    aggregates — (dst, label) vote counts (collapses a 10^6-in-degree
+    host's messages per map partition), then the per-dst argmax over
+    the already-tiny vote rows (an aggregate, not a window rank).
 
     Returns ``(node, community)`` after ``iters`` rounds; community ids
-    are node ids (the label each community converged onto).
+    are node ids (the label each community converged onto; at
+    ``iters = 0`` every node is its own community).
     """
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
-    directed = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-    )
-    e = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
+    if iters < 0:
+        raise ValueError(f"iters must be >= 0, got {iters}")
+    e = _by_src(_edge_list(edges, src_col, dst_col, undirected=True,
+                           drop_loops=True))
     state = (
         e.select(F.col("src").alias("node")).distinct()
         .withColumn("label", F.col("node"))
         .transform(_materialize)
     )
-    for it in range(1, iters + 1):
+
+    def vote(state: DataFrame, _: int) -> DataFrame:
         votes = (
             e.join(state.select(F.col("node").alias("src"), "label"), "src")
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count("*").alias("cnt"))
         )
-        winner = votes.groupBy("node").agg(
+        return votes.groupBy("node").agg(
             F.min_by(
                 "label",
                 F.struct((-F.col("cnt")).alias("nc"),
                          F.col("label").alias("l")),
             ).alias("label"))
-        state = winner
-        if it % checkpoint_interval == 0 or it == iters:
-            state = state.transform(_materialize)
-    e.unpersist()
+
+    state = iterate(state, vote, iters, CUT_EVERY)
+    release(e)
     return state.select("node", F.col("label").alias("community"))
 
 
@@ -1055,11 +898,7 @@ def degree_distribution(
 
     Returns ``(direction, bucket, n_nodes, min_degree, max_degree)``.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
+    e = _edge_list(edges, src_col, dst_col)
     out = []
     for direction, key in (("out", "src"), ("in", "dst")):
         deg = e.groupBy(F.col(key).alias("node")).agg(
@@ -1092,12 +931,7 @@ def reciprocal_link_stats(
 
     Returns ``(node, n_out, n_reciprocal, reciprocity)`` (ratio 6dp).
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _edge_list(edges, src_col, dst_col, drop_loops=True)
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     marked = e.join(rev, ["src", "dst"], "left_semi").select(
         "src", F.lit(1).alias("_r"))
@@ -1119,7 +953,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_rounds: int = 16,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """k-core decomposition membership (Seidman, Social Networks 1983):
     the maximal subgraph in which every node has degree >= ``k``, found
@@ -1133,60 +966,46 @@ def kcore(
 
     Semantics: the input digraph is SYMMETRIZED (degree = distinct
     undirected neighbors; self-loops dropped), then peeled for at most
-    ``max_rounds`` rounds with an early exit once a round deletes
-    nothing. Returns ``(node, deg)`` for the surviving nodes with their
-    within-core degree. Peeling is confluent — any deletion order
-    reaches the same fixed point — so the result is deterministic, and
-    a bounded-round replay is EXACTLY reproducible by an external
-    engine unrolling the same recurrence (extra rounds after
-    convergence are no-ops, so early exit cannot desynchronize the
-    oracle). If the peel has not converged after ``max_rounds`` the
-    result is the round-``max_rounds`` state — the same state the
-    oracle computes — with any not-yet-peeled node still subject to the
-    final ``deg >= k`` cut.
+    ``max_rounds`` rounds, with an early exit at the first cut (every
+    ``KCORE_CUT_EVERY`` rounds) where no node is below ``k``. Returns
+    ``(node, deg)`` for the surviving nodes with their within-core
+    degree. Peeling is confluent — any deletion order reaches the same
+    fixed point — so the result is deterministic, and a bounded-round
+    replay is EXACTLY reproducible by an external engine unrolling the
+    same recurrence (rounds past the fixed point are no-ops, so where
+    the loop exits cannot desynchronize the oracle). If the peel has
+    not converged after ``max_rounds`` the result is the
+    round-``max_rounds`` state — the same state the oracle computes —
+    with any not-yet-peeled node still subject to the final
+    ``deg >= k`` cut.
 
-    Scale shape (10^10 edges): per-round state is the surviving edge
-    list plus a ``(node, deg)`` aggregate — no fat columns; one round =
-    one map-side-partial count + two semi-joins on the slim survivor
-    set; no windows, no collect (the convergence test is a scalar
-    count). ``localCheckpoint`` every ``checkpoint_interval`` rounds
-    truncates lineage. Real web graphs peel in a handful of rounds
-    (peeling depth, not diameter); ``max_rounds`` caps the adversarial
-    chain-graph case where one node falls per round."""
+    Scale shape: the module's, with the surviving edge list as the
+    state; one round = one map-side-partial count + two semi-joins on
+    the slim survivor set, and the convergence test is a scalar count.
+    Real web graphs peel in a handful of rounds (peeling depth, not
+    diameter); ``max_rounds`` caps the adversarial chain-graph case
+    where one node falls per round."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-    )
-    sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .transform(_materialize)
-    )
-    prev_alive = sym.select("a").distinct().count()
-    for i in range(max_rounds):
-        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        alive = deg.filter(F.col("deg") >= k).select("a")
-        n_alive = alive.count()
-        if n_alive == prev_alive:
-            break
-        prev_alive = n_alive
-        sym = (
-            sym.join(alive, "a", "semi")
-            .join(alive.withColumnRenamed("a", "b"), "b", "semi")
+    sym = _edge_list(edges, src_col, dst_col, undirected=True,
+                     drop_loops=True).transform(_materialize)
+
+    def degrees(sym: DataFrame) -> DataFrame:
+        return sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+    def peel(sym: DataFrame, _: int) -> DataFrame:
+        alive = degrees(sym).filter(F.col("deg") >= k).select("src")
+        return (
+            sym.join(alive, "src", "semi")
+            .join(alive.withColumnRenamed("src", "dst"), "dst", "semi")
         )
-        if (i + 1) % checkpoint_interval == 0:
-            # lazy: the NEXT round's alive-count (or the final degree
-            # aggregate) materializes the blocks inside its own job —
-            # no separate checkpoint job per interval (same one-job
-            # pattern as connected_components' convergence count)
-            sym = sym.transform(_materialize, eager=False)
+
+    sym = iterate(
+        sym, peel, max_rounds, KCORE_CUT_EVERY,
+        until=lambda sym: degrees(sym).filter(F.col("deg") < k).count() == 0)
     return (
-        sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-        .select(F.col("a").alias("node"), "deg")
+        degrees(sym).filter(F.col("deg") >= k)
+        .select(F.col("src").alias("node"), "deg")
     )

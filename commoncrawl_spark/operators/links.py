@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from ..materialize import iterate, release
 from ..materialize import materialize as _materialize
 
 # href values in <a> tags, one pattern per quoting style so the closing
@@ -476,8 +477,8 @@ def resolve_redirects(
     ``max_hops`` budget needs ``ceil(log2(max_hops))`` rounds (16 hops
     = 4 self-joins), not ``max_hops`` sequential joins; state is three
     slim columns, every join an equi-join on the url key, aggregates
-    map-side partial, ``localCheckpoint`` per round keeps the plan
-    constant-depth (the ``connected_components`` discipline).
+    map-side partial, and ``materialize.iterate`` cuts every round so
+    the plan stays constant-depth.
 
     Returns ``(url, final_url, n_hops, resolved)``, one row per
     distinct source URL.
@@ -494,11 +495,8 @@ def resolve_redirects(
         .agg(F.min("_dst").alias("cur"))
         .transform(_materialize)
     )
-    m = r.withColumn("hops", F.lit(1).cast("long"))
-    # 2^rounds >= max_hops covers every chain the budget admits; one
-    # extra doubling can overshoot past max_hops, which the final
-    # resolved clamp (hops <= max_hops) makes harmless
-    for _ in range(max(1, math.ceil(math.log2(max_hops)))):
+
+    def double(m: DataFrame, _: int) -> DataFrame:
         m2 = m.select(
             F.col("url").alias("_mu"),
             F.col("cur").alias("_mc"),
@@ -506,7 +504,7 @@ def resolve_redirects(
         )
         # a terminal cur (not a redirect source) simply misses the join
         # and carries forward unchanged — no done flag needed in-loop
-        m = (
+        return (
             m.join(m2, m.cur == m2._mu, "left")
             .select(
                 "url",
@@ -515,10 +513,18 @@ def resolve_redirects(
                        F.col("hops") + F.col("_mh"))
                 .otherwise(F.col("hops")).alias("hops"),
             )
-            .transform(_materialize)
         )
+
+    # 2^rounds >= max_hops covers every chain the budget admits; one
+    # extra doubling can overshoot past max_hops, which the final
+    # resolved clamp (hops <= max_hops) makes harmless
+    m = iterate(r.withColumn("hops", F.lit(1).cast("long")), double,
+                max(1, math.ceil(math.log2(max_hops))), 1)
+    release(r)
+    # every round keeps one row per source url, so m's urls ARE the
+    # redirect sources: a cur among them still redirects
     done = (
-        m.join(r.select(F.col("url").alias("cur"),
+        m.join(m.select(F.col("url").alias("cur"),
                         F.lit(1).alias("_is_src")),
                "cur", "left")
         .select(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from ..materialize import iterate
 from ..materialize import materialize as _materialize
 
 
@@ -293,7 +294,8 @@ def kmeans_centroids(
         .transform(_materialize)
     )
     sval = F.round(F.col("val").cast("double") * 1000000.0).cast("long")
-    for _ in range(n_iters):
+
+    def lloyd(cents: DataFrame, _: int) -> DataFrame:
         assigned = ivf_assign(vectors, cents, id_col, vec_col)
         means = (
             assigned.select("cell", F.posexplode(vec_col).alias("pos", "val"))
@@ -313,10 +315,11 @@ def kmeans_centroids(
                     F.transform("a", lambda s: s["m"]).alias(vec_col))
         )
         survivors = cents.join(means.select(id_col), id_col, "left_anti")
-        # localCheckpoint: K rows, truncates the per-iteration lineage so
-        # the final plan is not n_iters joins deep
-        cents = means.unionByName(survivors).transform(_materialize)
-    return cents
+        return means.unionByName(survivors)
+
+    # each iteration is cut (K rows), so the final plan is not n_iters
+    # joins deep
+    return iterate(cents, lloyd, n_iters, 1)
 
 
 def ivf_topk(

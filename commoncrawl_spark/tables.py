@@ -567,16 +567,8 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         paths = self.bloom_matching_files(col, value, snapshot_id)
-        if not paths:
-            return self.read(spark, snapshot_id).filter("1 = 0")
-        # the snapshot's schema: admitted files may span
-        # schema-evolution commits
-        snap = self.snapshot(snapshot_id)
-        out = (self._reader(spark, snap).parquet(*paths)
-               .filter(F.col(col) == F.lit(value)))
-        # accumulated equality deletes still apply (merge-on-read):
-        # a tombstoned row must not resurface through the point path
-        return self._apply_deletes(spark, out, snap)
+        return self._read_files(spark, paths, snapshot_id).filter(
+            F.col(col) == F.lit(value))
 
     def matching_files(self, prune: dict[str, tuple],
                        snapshot_id: int | None = None) -> list[str]:
@@ -623,13 +615,21 @@ class SnapshotTable:
         caller STILL applies its row filter — stats pruning is a
         superset guarantee, not a predicate. Returns an empty frame of
         the table's schema when every file prunes away."""
-        paths = self.matching_files(prune, snapshot_id)
+        return self._read_files(
+            spark, self.matching_files(prune, snapshot_id), snapshot_id)
+
+    def _read_files(self, spark: SparkSession, paths: list[str],
+                    snapshot_id: int | None) -> DataFrame:
+        """The admitted data ``paths`` of a snapshot, in its schema
+        (admitted files may span schema-evolution commits), with its
+        accumulated equality deletes applied (merge-on-read): a
+        tombstoned row must not resurface through a file-skipping read.
+        An empty frame of the table's schema when nothing is admitted."""
         if not paths:
-            full = self.read(spark, snapshot_id)
-            return full.filter("1 = 0")
-        # the snapshot's schema: admitted files may span
-        # schema-evolution commits
-        return self._reader(spark, self.snapshot(snapshot_id)).parquet(*paths)
+            return self.read(spark, snapshot_id).filter("1 = 0")
+        snap = self.snapshot(snapshot_id)
+        return self._apply_deletes(
+            spark, self._reader(spark, snap).parquet(*paths), snap)
 
     def append(self, df: DataFrame, metadata: dict[str, Any] | None = None) -> int:
         """ST4: incremental checkpoint commit per round."""

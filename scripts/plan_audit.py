@@ -335,26 +335,25 @@ def main() -> None:
     # 9. connected components: slim state, equi-joins only (one
     # propagation round, pre-checkpoint — the loop checkpoints each
     # round, which would hide the plan behind an RDD scan)
-    from commoncrawl_spark.operators.graph import _propagate
+    from commoncrawl_spark.operators.graph import _edge_list, _propagate
 
     edges = (
         docs.select((F.col("doc_id") % 50).alias("a"),
                     (F.col("doc_id") % 97).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    sym = (
-        edges.select(F.col("a").alias("id"), F.col("b").alias("nb"))
-        .unionByName(edges.select(F.col("b").alias("id"), F.col("a").alias("nb")))
-        .distinct()
-    )
-    labels = sym.select("id").distinct().withColumn("cluster", F.col("id"))
+    sym = _edge_list(edges, "a", "b", undirected=True)
+    labels = (sym.select(F.col("src").alias("id")).distinct()
+              .withColumn("cluster", F.col("id")))
     p = plan_of(_propagate(sym, labels))
     sections.append((
         "Dedup clusters (connected components): slim labels, no cartesian",
         "Each pointer-doubled label-propagation round is two equi-joins + "
         "one min-aggregate over (id, label) pairs — two columns through "
-        "every exchange, never text/vectors; lineage is cut per round by "
-        "localCheckpoint so the plan does not deepen with iterations.",
+        "every exchange, never text/vectors; materialize.iterate cuts "
+        "every round (the changed-label count that ends the loop stores "
+        "the cut in the same job), so the plan does not deepen with "
+        "iterations.",
         [f"CartesianProduct present: {'CartesianProduct' in p} (expect False)",
          f"Python operators: {p.count('EvalPython')} (expect 0)",
          f"HashAggregate operators: {p.count('HashAggregate')} "
@@ -364,7 +363,7 @@ def main() -> None:
     # 10. pagerank: one iteration = one equi-join + one sum-aggregate
     # over (node, rank); the degree-annotated edge list is partitioned
     # once outside the loop (the loop body never re-aggregates degrees)
-    from commoncrawl_spark.operators.graph import pagerank
+    from commoncrawl_spark.operators.graph import CUT_EVERY, pagerank
 
     pr_edges = docs.select(
         (F.col("doc_id") % 97).alias("src"),
@@ -391,9 +390,10 @@ def main() -> None:
         "Frontier PageRank: slim rank state, degree join hoisted",
         "Each iteration moves only (node, rank) pairs through one "
         "equi-join and one map-side-partial sum; the edge list carries "
-        "its out-degree from a single pre-loop join, and interval "
-        "localCheckpoint (every checkpoint_interval=3 rounds + the "
-        "last) keeps lineage bounded at <=3 joins deep WITHOUT a "
+        "its out-degree from a single pre-loop join, and "
+        "materialize.iterate's interval cut (every "
+        f"CUT_EVERY={CUT_EVERY} rounds + the last) keeps lineage "
+        f"bounded at <={CUT_EVERY} joins deep WITHOUT a "
         "driver barrier per round — per-iteration eager checkpoints "
         "cost ~1 s of serial latency each on the scaling rig and, "
         "unlike connected_components, pagerank has no per-round "
@@ -419,14 +419,14 @@ def main() -> None:
     h_nodes = (e.select(F.col("src").alias("node"))
                .unionByName(e.select(F.col("dst").alias("node"))).distinct()
                .localCheckpoint(eager=True))
-    h_scores = h_nodes.select("node", F.lit(1.0).alias("hub"))
+    h_scores = h_nodes.select(
+        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
     auth_mass = (by_src.join(
         h_scores.select(F.col("node").alias("src"), "hub"), "src")
         .groupBy(F.col("dst").alias("node"))
-        .agg(F.sum("hub").alias("auth")))
-    auth_raw = (h_nodes.join(auth_mass, "node", "left")
-                .select("node",
-                        F.coalesce("auth", F.lit(0.0)).alias("auth")))
+        .agg(F.sum("hub").alias("_m")))
+    auth_raw = (h_scores.join(auth_mass, "node", "left")
+                .withColumn("auth", F.coalesce("_m", F.lit(0.0))))
     p = plan_of(
         auth_raw.crossJoin(
             F.broadcast(auth_raw.agg(F.sum("auth").alias("_tot"))))
@@ -434,11 +434,13 @@ def main() -> None:
     full = plan_of(hits(pr_edges, iters=2))
     sections.append((
         "HITS hubs/authorities: slim score state, broadcast L1 totals",
-        "Each half-iteration moves only (node, score) pairs through one "
+        "Each half-iteration moves only the slim (node, hub, auth) state "
+        "through one "
         "equi-join and one map-side-partial sum; the L1 normalizer is a "
         "1-row aggregate broadcast back via nested-loop join (the lm.py "
-        "totals pattern), never a driver collect; localCheckpoint keeps "
-        "the per-iteration plan constant-depth.",
+        "totals pattern), never a driver collect; materialize.iterate "
+        "cuts every half-step (its total and the next half both read "
+        "it), keeping the plan constant-depth.",
         [f"auth-step CartesianProduct: {'CartesianProduct' in p} "
          f"(expect False — the total rides a BroadcastNestedLoopJoin)",
          f"auth-step BroadcastNestedLoopJoin present: "
@@ -473,7 +475,8 @@ def main() -> None:
         "TrustRank: seed-biased teleport, broadcast seed set",
         "The spam-demotion twin of the PageRank section: identical "
         "per-iteration shape (slim (node, trust) state, one equi-join, "
-        "one map-side-partial sum, constant-depth via localCheckpoint); "
+        "one map-side-partial sum, constant-depth via the same interval "
+        "cut — pagerank IS this walk with bias 1.0); "
         "the only additions are a 1-row seed-count broadcast and a "
         "broadcast left join stamping the bias column onto the node "
         "frame ONCE before the loop — hand-vetted seed lists are "
@@ -517,8 +520,8 @@ def main() -> None:
         "every ball a hop is one equi-join on the persisted edge list "
         "plus one hll_union_agg exchange on the destination key, and "
         "the harmonic sum folds from ball-size deltas per round. State "
-        "is O(V), never proportional to ball size; interval "
-        "localCheckpoint keeps lineage constant-depth across the "
+        "is O(V), never proportional to ball size; materialize.iterate's "
+        "interval cut keeps lineage constant-depth across the "
         "fixed-radius loop.",
         [f"round ObjectHashAggregate (sketch partial+final): "
          f"{hb_round.count('ObjectHashAggregate')} (expect >= 2 — "
@@ -562,8 +565,8 @@ def main() -> None:
         "messages fold per map partition before any exchange) then the "
         "per-node argmax via min_by over struct(-count, label) — an "
         "aggregate with a total deterministic tie-break, not a "
-        "row_number window; interval localCheckpoint keeps the "
-        "fixed-round loop constant-depth.",
+        "row_number window; materialize.iterate's interval cut keeps "
+        "the fixed-round loop constant-depth.",
         [f"round partial_min_by in aggregate: "
          f"{'partial_min_by' in lpa_round} (expect True)",
          f"round Window operators: {lpa_round.count('Window')} "
@@ -2419,9 +2422,10 @@ def main() -> None:
         "M(M(u)), hop counts adding), so a 16-hop budget costs 4 "
         "equi-joins of a slim (url, cur, hops) frame instead of 16 "
         "sequential joins; terminals simply miss the left join and "
-        "carry forward; localCheckpoint per round keeps the plan "
-        "constant-depth. Loops and over-budget chains fall out of the "
-        "final resolved clamp — no cycle detection pass is needed.",
+        "carry forward; materialize.iterate cuts every round, keeping "
+        "the plan constant-depth. Loops and over-budget chains fall "
+        "out of the final resolved clamp — no cycle detection pass is "
+        "needed.",
         [f"doubling round CartesianProduct: "
          f"{'CartesianProduct' in rr_round} (expect False)",
          f"doubling round SortMergeJoin/ShuffledHashJoin on the url "
@@ -2741,9 +2745,9 @@ def main() -> None:
         "equi-join on the degree-annotated edge list plus one map-side-"
         "partial sum; the dangling-cash recycle is a 1-row aggregate "
         "that rides back via crossJoin(broadcast(...)), so the virtual-"
-        "page redistribution costs a scalar, not a shuffle. Interval "
-        "localCheckpoint collapses the final plan to a checkpoint scan "
-        "— identical discipline to pagerank/trustrank.",
+        "page redistribution costs a scalar, not a shuffle. The interval "
+        "cut collapses the final plan to a checkpoint scan — identical "
+        "discipline to pagerank/trustrank.",
         [f"post-loop plan collapsed to checkpoint scan: "
          f"{'Scan ExistingRDD' in p}",
          f"CartesianProduct: {'CartesianProduct' in p} (expect False)",
@@ -2917,7 +2921,7 @@ def main() -> None:
         "round 1, one ring bigger per round) onto the src-partitioned "
         "edge list and min-aggregates — map-side partial, no windows, "
         "no driver data; unreachable nodes are never materialized. "
-        "Interval localCheckpoint collapses the final plan to a "
+        "The interval cut collapses the final plan to a "
         "checkpoint scan, the pagerank discipline.",
         [f"post-loop plan collapsed to checkpoint scan: "
          f"{'Scan ExistingRDD' in p}",
@@ -3217,20 +3221,34 @@ def main() -> None:
         build_tf_index,
     )
 
-    from commoncrawl_spark.operators.graph import kcore
+    from commoncrawl_spark.operators.graph import _edge_list, kcore
 
-    p = plan_of(kcore(pr_edges, k=9, max_rounds=2), label="k-core")
+    # one peel round over the cut survivor set, as the loop steps it
+    # (the loop cuts the last round, so the full plan hides the joins)
+    kc_sym = _edge_list(pr_edges, "src", "dst", undirected=True,
+                        drop_loops=True).localCheckpoint(eager=True)
+    kc_alive = (kc_sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+                .filter(F.col("deg") >= 9).select("src"))
+    kc_round = plan_of(
+        kc_sym.join(kc_alive, "src", "semi")
+        .join(kc_alive.withColumnRenamed("src", "dst"), "dst", "semi"),
+        label="k-core one round")
+    plan_of(kcore(pr_edges, k=9, max_rounds=2), label="k-core")
     sections.append((
         "k-core peel: slim edge state, semi-join restriction per round",
         "Each peel round is one map-side-partial degree count plus two "
         "SEMI joins on the slim survivor set — no fat columns move, no "
-        "window anywhere, the convergence test is a scalar count. "
-        "Interval localCheckpoint bounds lineage; peeling is confluent "
-        "so the bounded-round state is engine-replayable.",
-        [f"LeftSemi joins present: {'LeftSemi' in p} (expect True)",
-         f"Window operators: {p.count('Window')} (expect 0)",
-         f"CartesianProduct: {p.count('CartesianProduct')} (expect 0)",
-         f"Python operators: {p.count('EvalPython')} (expect 0)"],
+        "window anywhere, the convergence test is a scalar count asked "
+        "at each interval cut, whose job stores the cut. Peeling is "
+        "confluent so the bounded-round state is engine-replayable.",
+        [f"round LeftSemi joins present: {'LeftSemi' in kc_round} "
+         f"(expect True)",
+         f"round Window operators: {kc_round.count('Window')} "
+         f"(expect 0)",
+         f"round CartesianProduct: {kc_round.count('CartesianProduct')} "
+         f"(expect 0)",
+         f"round Python operators: {kc_round.count('EvalPython')} "
+         f"(expect 0)"],
     ))
 
     from commoncrawl_spark.operators.links import cocitation
@@ -3584,7 +3602,10 @@ def main() -> None:
         for f in files:
             if f.endswith(".py"):
                 with open(os.path.join(root, f)) as fh:
-                    nsites += fh.read().count(".transform(_materialize")
+                    src = fh.read()
+                    nsites += (src.count(".transform(_materialize")
+                               + src.count("iterate(")
+                               - src.count("def iterate("))
     toy = spark.range(0, 100).withColumn("k", F.col("id") % 3)
     sandbox = not checkpoint_dir_configured(toy)
     ckd = tempfile.mkdtemp(prefix="ckpt_audit_")

@@ -606,7 +606,7 @@ def test_harmonic_plan_no_python_no_window(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "Window" not in plan
-    # radius 2 with checkpoint_interval 3 -> final forced checkpoint
+    # radius 2 < CUT_EVERY (3): the cut after the last round
     # collapses the returned plan to a checkpoint scan
     assert "Scan ExistingRDD" in plan
 

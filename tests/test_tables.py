@@ -314,6 +314,22 @@ def test_stats_append_accumulates_and_guards(spark, tmp_path):
                       stats_by=("v",))
 
 
+@pytest.mark.spark
+def test_stats_pruned_read_respects_equality_deletes(spark, tmp_path):
+    """A pruned read is the full read with files skipped: rows that a
+    delete_where removed stay removed (merge-on-read), as in read()."""
+    t = SnapshotTable(str(tmp_path / "s"), stats_by=("v",))
+    t.append(spark.range(0, 100).toDF("v").coalesce(1))
+    t.append(spark.range(1000, 1100).toDF("v").coalesce(1))
+    t.delete_where(spark.createDataFrame([(1000,), (1001,)], "v long"), "v")
+    band = "v BETWEEN 1000 AND 1050"
+    want = {r["v"] for r in t.read(spark).filter(band).collect()}
+    got = {r["v"] for r in
+           t.read_pruned(spark, {"v": (1000, 1050)}).filter(band).collect()}
+    assert want == set(range(1002, 1051))
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # equality-delete files (merge-on-read)
 # ---------------------------------------------------------------------------
