@@ -79,10 +79,6 @@ def _out_degree(e: DataFrame) -> DataFrame:
 def _propagate(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """One label-propagation round: neighbor-min, then pointer doubling.
 
-    Split out (un-checkpointed) so plan tests and the SCALE.md audit can
-    inspect the per-iteration physical plan — the loop checkpoints each
-    round, which would otherwise hide it behind an RDD scan.
-
     Each node's INCOMING label rides through the round as ``_prev``
     (every node contributes exactly one own-label row, so a ``max``
     aggregate recovers it beside the min-label fold). The loop's
@@ -804,8 +800,8 @@ def triangle_counts(
     degree < 2). The slim result is cut eagerly through ``materialize``
     and the persisted degree/oriented frames unpersisted before
     returning (repo persist-lifecycle convention); plan tests and
-    SCALE.md inspect the frame it cuts
-    (``scripts/plan_audit.cut_frames``).
+    SCALE.md inspect the frame it cuts, as
+    ``scripts/plan_audit.cut_frames()`` records it.
     """
     und = (
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))

@@ -1067,7 +1067,12 @@ def pagination_chains(
     Scale shape: per round ONE hash equi-join of the current ring
     (slim (head, url) pairs) against the edge table — ring-sized work
     like the seed-BFS walk, no window, no Python; cycles cannot loop
-    because position strictly increases and the bound cuts them."""
+    because position strictly increases and the bound cuts them. The
+    edge table is cut once up front, so the ``max_pages`` unrolled
+    joins read it from that cut instead of each re-planning (and
+    re-scanning) its input; the result reads the cut, which stays
+    pinned."""
+    edges = edges.select("url", "next_url").transform(_materialize)
     heads = edges.join(
         edges.select(F.col("next_url").alias("url")).distinct(),
         "url", "left_anti",

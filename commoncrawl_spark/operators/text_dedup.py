@@ -26,8 +26,9 @@ after the call, the only executor storage is the bounded cut result,
 which Spark's ContextCleaner frees when the frame is garbage-collected.
 No ``clearCache()`` contract for callers; a long-running ``CrawlJob``
 can invoke these in a loop without accumulating blocks. Plan tests and
-the SCALE.md audit read the frame each operator cuts
-(``scripts/plan_audit.cut_frames``), whose plan is not yet truncated.
+the SCALE.md audit read the frame each operator cuts, whose plan is not
+yet truncated: ``scripts/plan_audit.cut_frames()`` records every frame
+cut through the seam while its block runs.
 """
 
 from __future__ import annotations

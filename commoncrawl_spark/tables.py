@@ -37,7 +37,7 @@ import os
 import re
 import shutil
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -514,47 +514,21 @@ class SnapshotTable:
 
         from .operators.seen_set import _key_indices
 
-        import glob as _glob
-
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise FileNotFoundError(f"table {self.root} has no snapshots")
-        blooms = snap.get("file_blooms") or {}
-        live_dirs = set(snap["files"])
         rendered = _spark_cast_string(value)
         if rendered is None:
-            keep = []
-            for d in live_dirs:
-                keep.extend(_glob.glob(
-                    os.path.join(self._data_dir, d, "**", "*.parquet"),
-                    recursive=True))
-            return keep
+            return self._admitted_files(snapshot_id, "file_blooms", None)
         hkey = hashlib.md5(rendered.encode()).hexdigest()
-        keep = []
-        covered_dirs: set[str] = set()
-        for rel, cols in blooms.items():
-            d = rel.split(os.sep, 1)[0]
-            if d not in live_dirs:
-                continue
-            covered_dirs.add(d)
+
+        def admit(cols: dict[str, Any]) -> bool:
             meta = cols.get(col)
             if meta is None:
-                keep.append(os.path.join(self._data_dir, rel))
-                continue
+                return True
             bits = np.frombuffer(base64.b64decode(meta["b64"]), np.uint8)
             idx = _key_indices(pd.Series([hkey]), meta["m"],
                                meta["k"]).ravel()
-            if bool(np.all((bits[idx // 8] >> (idx % 8)) & 1)):
-                keep.append(os.path.join(self._data_dir, rel))
-        # conservative keep: a live commit written before bloom_by was
-        # set (or by a writer without it) has no filters at all — every
-        # one of its data files stays a candidate; dropping them would
-        # be a silent false negative
-        for d in live_dirs - covered_dirs:
-            keep.extend(_glob.glob(
-                os.path.join(self._data_dir, d, "**", "*.parquet"),
-                recursive=True))
-        return keep
+            return bool(np.all((bits[idx // 8] >> (idx % 8)) & 1))
+
+        return self._admitted_files(snapshot_id, "file_blooms", admit)
 
     def read_point(self, spark: SparkSession, col: str, value: Any,
                    snapshot_id: int | None = None) -> DataFrame:
@@ -576,33 +550,42 @@ class SnapshotTable:
         EVERY ``{col: (lo, hi)}`` bound — the file-skipping decision,
         made from the manifest alone (no file opened). Files without
         recorded stats are conservatively kept."""
+        def admit(cols: dict[str, Any]) -> bool:
+            for c, (lo, hi) in prune.items():
+                if c in cols:
+                    mn, mx = cols[c]
+                    if mn is None or mx is None or mx < lo or mn > hi:
+                        return False
+            return True
+
+        return self._admitted_files(snapshot_id, "file_stats", admit)
+
+    def _admitted_files(
+            self, snapshot_id: int | None, per_file: str,
+            admit: Callable[[dict[str, Any]], bool] | None) -> list[str]:
+        """The live data files of a snapshot that ``admit`` accepts, given
+        a file's entry in the manifest's ``per_file`` map (``file_stats``
+        or ``file_blooms``); ``admit=None`` keeps every live file.
+        Conservative keep: every file of a live commit with no entries
+        at all (written before ``stats_by`` or ``bloom_by`` was set, or
+        by a writer without it) stays a candidate — dropping it would
+        silently lose its rows."""
         import glob as _glob
 
         snap = self.snapshot(snapshot_id)
         if snap is None:
             raise FileNotFoundError(f"table {self.root} has no snapshots")
-        stats = snap.get("file_stats") or {}
         live_dirs = set(snap["files"])
         keep = []
         covered_dirs: set[str] = set()
-        for rel, cols in stats.items():
+        entries = {} if admit is None else snap.get(per_file) or {}
+        for rel, cols in entries.items():
             d = rel.split(os.sep, 1)[0]
             if d not in live_dirs:
                 continue
             covered_dirs.add(d)
-            ok = True
-            for c, (lo, hi) in prune.items():
-                if c in cols:
-                    mn, mx = cols[c]
-                    if mn is None or mx is None or mx < lo or mn > hi:
-                        ok = False
-                        break
-            if ok:
+            if admit(cols):
                 keep.append(os.path.join(self._data_dir, rel))
-        # conservative keep (the bloom_matching_files rule): a live
-        # commit written before stats_by was set has no stats rows —
-        # its files stay candidates rather than silently vanishing
-        # from pruned reads
         for d in live_dirs - covered_dirs:
             keep.extend(_glob.glob(
                 os.path.join(self._data_dir, d, "**", "*.parquet"),

@@ -8,11 +8,15 @@ actual optimizer output so the claims cannot drift from the code:
 rerun after engine changes (`python scripts/plan_audit.py`) and diff.
 
 The hard assertions live in tests/test_plans.py and friends; this
-report is the human-readable companion with the evidence inline.
+report is the human-readable companion with the evidence inline. A cut
+truncates a frame's plan to an RDD scan, so sections on frames the
+engine cuts read them through :func:`cut_frames` — a loop section runs
+its operator for one step — never a hand-built copy of the step.
 """
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import os
 import re
@@ -37,6 +41,25 @@ def plan_of(df, mode: str = "simple", label: str = "") -> str:
     p = plan_string(df, mode)
     _AUDITED.append((label or f"plan-{len(_AUDITED) + 1}", p))
     return p
+
+
+def planned_once(plan: str) -> str:
+    """``plan`` as the planner chose it before adaptive re-planning at
+    audit scale (an executed frame's ``Initial Plan``; an unexecuted
+    one prints only that), without the subtrees of the cached frames it
+    reads: a loop step's persisted edge table is planned once, before
+    the loop, not in every step."""
+    lines = plan.splitlines()
+    if "+- == Initial Plan ==" in lines:
+        lines = lines[lines.index("+- == Initial Plan ==") + 1:]
+    out, cached = [], None
+    for line in lines:
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached is not None and depth > cached:
+            continue
+        cached = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
 
 
 def _window_groups(line: str) -> list[str]:
@@ -85,24 +108,73 @@ def partitionless_windows(plan: str) -> list[str]:
     return bad
 
 
+def _rebind_seam(old, new) -> None:
+    """Point every package-module binding of ``old`` at ``new``: the
+    seam module's own ``materialize`` (which ``iterate`` looks up) and
+    each alias a module imported (``_materialize``, ``materialize``)."""
+    for name, mod in list(sys.modules.items()):
+        if name.split(".", 1)[0] != "commoncrawl_spark":
+            continue
+        for attr, val in list(vars(mod).items()):
+            if val is old:
+                setattr(mod, attr, new)
+
+
 @contextlib.contextmanager
-def cut_frames(module):
-    """Record every frame ``module`` cuts through its ``_materialize``
-    seam, and still cut it. Yields the recorded frames in call order:
-    the plans the operator ships, before the cut truncates them to a
-    ``Scan ExistingRDD`` leaf."""
-    cut = module._materialize
+def cut_frames():
+    """Record every frame cut through ``materialize.materialize`` while
+    the block runs — under any alias, and the cuts ``materialize.iterate``
+    makes — and still cut it. Yields the recorded frames in call order:
+    the plans the engine ships, before the cut truncates them to a
+    ``Scan ExistingRDD`` leaf. Every binding is restored on exit, also
+    when the block raises."""
+    from commoncrawl_spark import materialize as seam
+
+    cut = seam.materialize
     frames = []
 
     def recording(df, *args, **kwargs):
         frames.append(df)
         return cut(df, *args, **kwargs)
 
-    module._materialize = recording
+    _rebind_seam(cut, recording)
     try:
         yield frames
     finally:
-        module._materialize = cut
+        # a module imported inside the block bound the recorder
+        _rebind_seam(recording, cut)
+
+
+def seam_call_sites() -> dict[str, int]:
+    """Calls of the seam per package module: calls of a name a module
+    bound to ``materialize.materialize`` or ``materialize.iterate``
+    (under any alias), and ``.transform(<that name>, ...)``."""
+    pkg = os.path.join(os.path.dirname(OUT), "commoncrawl_spark")
+    sites = {}
+    for root, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            bound = {a.asname or a.name
+                     for node in ast.walk(tree)
+                     if isinstance(node, ast.ImportFrom)
+                     and (node.module or "").split(".")[-1] == "materialize"
+                     for a in node.names
+                     if a.name in ("materialize", "iterate")}
+            n = 0
+            for c in ast.walk(tree):
+                if not isinstance(c, ast.Call):
+                    continue
+                fn = c.func
+                if isinstance(fn, ast.Attribute) and fn.attr == "transform":
+                    fn = c.args[0] if c.args else None
+                n += isinstance(fn, ast.Name) and fn.id in bound
+            if n:
+                sites[os.path.relpath(path, pkg)] = n
+    return dict(sorted(sites.items()))
 
 
 def grab(plan: str, *patterns: str, context: int = 0) -> list[str]:
@@ -232,17 +304,7 @@ def main() -> None:
     from commoncrawl_spark.operators.seen_set import BloomSeenSet
 
     def outside_exchanges(plan: str) -> int:
-        out, cache_depth = 0, None
-        for line in plan.splitlines():
-            indent = len(line) - len(line.lstrip(" :+-"))
-            if cache_depth is not None and indent > cache_depth:
-                continue
-            cache_depth = None
-            if "InMemoryRelation" in line:
-                cache_depth = indent
-            elif "Exchange hashpartitioning" in line:
-                out += 1
-        return out
+        return planned_once(plan).count("Exchange hashpartitioning")
 
     quarters = [keyed.filter(F.crc32("url") % 4 == i).select("url_sha1")
                 for i in range(4)]
@@ -288,25 +350,32 @@ def main() -> None:
          f"Python operators: {p.count('EvalPython')} (expect 0)"],
     ))
 
-    # 6. extraction barrier above the join
-    from commoncrawl_spark.operators.extraction import (
-        extract_articles,
-        split_articles,
-    )
+    # 6. the production round: extraction above the fetch join, read
+    # off the outcome frame one tiny CrawlJob round cuts
+    from commoncrawl_spark.plans.frontier import CrawlJob
 
-    fetch = pages.select("url").limit(10).join(pages.select("url", "html"), "url")
-    ok, _ = split_articles(extract_articles(fetch))
-    p = plan_of(ok)
+    job = CrawlJob(spark, tempfile.mkdtemp(), budget_per_host=2)
+    job.seed_from_cdx(cdx)
+    with cut_frames() as cuts:
+        job.run_round(pages)
+    outcome = next(c for c in cuts if "_fetch_error" in c.columns)
+    p = planned_once(plan_of(outcome, label="crawl round outcome"))
     join_pos = max(p.find("SortMergeJoin"), p.find("BroadcastHashJoin"),
                    p.find("ShuffledHashJoin"))
     sections.append((
-        "Extraction (C6/UDF1): MapInPandas barrier above the fetch join",
+        "Crawl round (C6/UDF1): MapInPandas barrier above the fetch join",
         "A pandas_udf EXPRESSION got pushed below the join by Catalyst "
         "(ran twice, shuffled fat article rows — round-1 pathology #1). "
         "MapInPandas is a plan-node barrier: exactly one, after the join, "
-        "and the fat html column dies at the barrier.",
+        "and the fat html column dies at the barrier. Read off the "
+        "outcome frame CrawlJob.run_round cuts, whose commits all read "
+        "that cut; the pages scans and batch leaves are observed, not "
+        "yet bounded (the lookup join reads pages for its hits and again "
+        "for the hit urls its misses anti-join against).",
         [f"MapInPandas count: {p.count('MapInPandas')} (expect 1)",
-         f"MapInPandas above join: {p.find('MapInPandas') < join_pos}"],
+         f"MapInPandas above join: {-1 < p.find('MapInPandas') < join_pos}",
+         f"pages scans: {len(grab(p, 'FileScan parquet'))}",
+         f"batch Scan ExistingRDD leaves: {p.count('Scan ExistingRDD')}"],
     ))
 
     # 7. aggregation partials
@@ -332,20 +401,36 @@ def main() -> None:
         grab(p, "LeftAnti")[:2],
     ))
 
-    # 9. connected components: slim state, equi-joins only (one
-    # propagation round, pre-checkpoint — the loop checkpoints each
-    # round, which would hide the plan behind an RDD scan)
-    from commoncrawl_spark.operators.graph import _edge_list, _propagate
+    # the fixpoint loops below: each section runs the operator for one
+    # step and reads the step frame materialize.iterate cuts (the cut
+    # truncates the returned plan to an RDD scan)
+    from commoncrawl_spark.operators.graph import (
+        CUT_EVERY,
+        connected_components,
+        harmonic_centrality,
+        hits,
+        label_propagation,
+        pagerank,
+        trustrank,
+    )
 
+    def one_step(run, label):
+        """Call ``run``: the plan of each frame it cuts, in cut order
+        (:func:`planned_once`), and the plan of the frame it returns."""
+        with cut_frames() as cuts:
+            out = run()
+        return ([planned_once(plan_of(c, label=f"{label} cut {i}"))
+                 for i, c in enumerate(cuts)], plan_of(out, label=label))
+
+    # 9. connected components: slim state, equi-joins only
     edges = (
         docs.select((F.col("doc_id") % 50).alias("a"),
                     (F.col("doc_id") % 97).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    sym = _edge_list(edges, "a", "b", undirected=True)
-    labels = (sym.select(F.col("src").alias("id")).distinct()
-              .withColumn("cluster", F.col("id")))
-    p = plan_of(_propagate(sym, labels))
+    cuts, _ = one_step(lambda: connected_components(edges, max_iters=1),
+                       "connected components")
+    p = cuts[-1]
     sections.append((
         "Dedup clusters (connected components): slim labels, no cartesian",
         "Each pointer-doubled label-propagation round is two equi-joins + "
@@ -363,29 +448,12 @@ def main() -> None:
     # 10. pagerank: one iteration = one equi-join + one sum-aggregate
     # over (node, rank); the degree-annotated edge list is partitioned
     # once outside the loop (the loop body never re-aggregates degrees)
-    from commoncrawl_spark.operators.graph import CUT_EVERY, pagerank
-
     pr_edges = docs.select(
         (F.col("doc_id") % 97).alias("src"),
         ((F.col("doc_id") * F.col("doc_id") + 1) % 97).alias("dst"),
     )
-    e = pr_edges.filter(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # checkpoint/persist exactly as the loop does, so this is the plan of
-    # ONE iteration, not iteration+setup
-    ann = e.join(deg, "src").repartition("src").localCheckpoint(eager=True)
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node"))).distinct()
-             .localCheckpoint(eager=True))
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    contribs = (ann.join(ranks.withColumnRenamed("node", "src"), "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("mass")))
-    p = plan_of(nodes.join(contribs, "node", "left").select(
-        "node", (F.lit(0.15) + F.lit(0.85)
-                 * F.coalesce("mass", F.lit(0.0))).alias("rank")))
-    full = plan_of(pagerank(pr_edges, iters=2))
+    cuts, full = one_step(lambda: pagerank(pr_edges, iters=1), "pagerank")
+    p = cuts[-1]
     sections.append((
         "Frontier PageRank: slim rank state, degree join hoisted",
         "Each iteration moves only (node, rank) pairs through one "
@@ -411,27 +479,8 @@ def main() -> None:
 
     # HITS: one iteration = two equi-joins + two sum-aggregates over
     # (node, score); L1 totals ride 1-row broadcasts, never a collect
-    from commoncrawl_spark.operators.graph import hits
-
-    e = pr_edges.filter(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
-    by_src = e.repartition("src").localCheckpoint(eager=True)
-    h_nodes = (e.select(F.col("src").alias("node"))
-               .unionByName(e.select(F.col("dst").alias("node"))).distinct()
-               .localCheckpoint(eager=True))
-    h_scores = h_nodes.select(
-        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
-    auth_mass = (by_src.join(
-        h_scores.select(F.col("node").alias("src"), "hub"), "src")
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.sum("hub").alias("_m")))
-    auth_raw = (h_scores.join(auth_mass, "node", "left")
-                .withColumn("auth", F.coalesce("_m", F.lit(0.0))))
-    p = plan_of(
-        auth_raw.crossJoin(
-            F.broadcast(auth_raw.agg(F.sum("auth").alias("_tot"))))
-        .withColumn("auth", F.col("auth") / F.col("_tot")).drop("_tot"))
-    full = plan_of(hits(pr_edges, iters=2))
+    cuts, full = one_step(lambda: hits(pr_edges, iters=1), "hits")
+    p = cuts[-2]  # the auth update; the hub update is cut after it
     sections.append((
         "HITS hubs/authorities: slim score state, broadcast L1 totals",
         "Each half-iteration moves only the slim (node, hub, auth) state "
@@ -453,24 +502,13 @@ def main() -> None:
     ))
 
     # TrustRank: the pagerank loop with a seed-biased teleport — the
-    # bias column rides the checkpointed node frame, the seed count is
-    # a 1-row broadcast, and each iteration is the same slim join+sum
-    from commoncrawl_spark.operators.graph import trustrank
-
+    # bias column rides the cut node frame, the seed count is a 1-row
+    # broadcast, and each iteration is the same slim join+sum
     tr_seeds = docs.select((F.col("doc_id") % 97).alias("node")).filter(
         F.col("node") % 10 == 0)
-    tr_full = plan_of(trustrank(pr_edges, tr_seeds, iters=2),
-                      label="trustrank")
-    tr_s = tr_seeds.filter(F.col("node").isNotNull()).distinct()
-    tr_bias = plan_of(
-        nodes.crossJoin(
-            F.broadcast(tr_s.agg(F.count("*").alias("_ns"))))
-        .join(F.broadcast(tr_s.withColumn("_seed", F.lit(1))),
-              "node", "left")
-        .select("node",
-                F.when(F.col("_seed").isNotNull(), 1.0 / F.col("_ns"))
-                .otherwise(F.lit(0.0)).alias("bias")),
-        label="trustrank bias derivation")
+    cuts, tr_full = one_step(lambda: trustrank(pr_edges, tr_seeds, iters=1),
+                             "trustrank")
+    tr_bias = cuts[1]  # after the seed cut, before the walk's step
     sections.append((
         "TrustRank: seed-biased teleport, broadcast seed set",
         "The spam-demotion twin of the PageRank section: identical "
@@ -498,21 +536,9 @@ def main() -> None:
     # the partial/final split shows as ObjectHashAggregate pairs (the
     # map-side partial union is what bounds in-degree skew: a host with
     # 10^6 in-links folds to one sketch per map partition pre-shuffle)
-    from commoncrawl_spark.operators.graph import harmonic_centrality
-
-    hb_state = (
-        pr_edges.select(F.col("src").alias("node")).distinct()
-        .groupBy("node")
-        .agg(F.hll_sketch_agg("node", F.lit(12)).alias("sk"))
-        .localCheckpoint(eager=True))
-    hb_round = plan_of(
-        pr_edges.join(
-            hb_state.select(F.col("node").alias("src"), "sk"), "src")
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.hll_union_agg("sk", F.lit(False)).alias("csk")),
-        label="hyperball one round")
-    hb_full = plan_of(harmonic_centrality(pr_edges, radius=2),
-                      label="hyperball")
+    cuts, hb_full = one_step(
+        lambda: harmonic_centrality(pr_edges, radius=1), "hyperball")
+    hb_round = cuts[-1]
     sections.append((
         "HyperBall harmonic centrality: ball growth as sketch union",
         "Exact all-pairs distances are O(V*E) — hopeless at 10^8 hosts. "
@@ -540,23 +566,9 @@ def main() -> None:
     # label propagation: the per-round argmax is an AGGREGATE
     # (min_by over struct(-count, label)), never a rank window — votes
     # collapse map-side on (dst, label) before the winner agg
-    from commoncrawl_spark.operators.graph import label_propagation
-
-    lpa_state = (pr_edges.select(F.col("src").alias("node")).distinct()
-                 .withColumn("label", F.col("node"))
-                 .localCheckpoint(eager=True))
-    lpa_round = plan_of(
-        pr_edges.join(
-            lpa_state.select(F.col("node").alias("src"), "label"), "src")
-        .groupBy(F.col("dst").alias("node"), "label")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("node")
-        .agg(F.min_by("label", F.struct((-F.col("cnt")).alias("nc"),
-                                        F.col("label").alias("l")))
-             .alias("label")),
-        label="label propagation one round")
-    lpa_full = plan_of(label_propagation(pr_edges, iters=2),
-                       label="label propagation")
+    cuts, lpa_full = one_step(
+        lambda: label_propagation(pr_edges, iters=1), "label propagation")
+    lpa_round = cuts[-1]
     sections.append((
         "Label propagation: argmax as aggregate, never a rank window",
         "One round is one equi-join of slim (node, label) state onto "
@@ -582,7 +594,7 @@ def main() -> None:
     # triangle counting: degree-oriented wedges, struct-compare ranks
     from commoncrawl_spark.operators import graph as graph_ops
 
-    with cut_frames(graph_ops) as cuts:
+    with cut_frames() as cuts:
         graph_ops.triangle_counts(pr_edges)
     p = plan_of(cuts[0], label="triangle counts")
     sections.append((
@@ -1682,7 +1694,6 @@ def main() -> None:
     ))
 
     # incremental near-dedup: the persisted index is never shuffled
-    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import (
         build_minhash_index,
         near_duplicates_against_index,
@@ -1692,7 +1703,7 @@ def main() -> None:
     build_minhash_index(docs.limit(400)).write.parquet(f"{mh_dir}/sig")
     seg = docs.filter(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + 500000).alias("doc_id"), "text")
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         near_duplicates_against_index(
             seg, spark.read.parquet(f"{mh_dir}/sig"), threshold=0.5)
     nd = cuts[0]
@@ -1726,7 +1737,7 @@ def main() -> None:
     # the shingle df table aggregates map-side-partial
     from commoncrawl_spark.operators.text_dedup import set_similarity_join
 
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         set_similarity_join(docs.limit(400), threshold=0.8)
     p = plan_of(cuts[0], label="set-similarity join")
     sections.append((
@@ -1755,7 +1766,7 @@ def main() -> None:
     # top-k as TakeOrderedAndProject — never a global rank window
     from commoncrawl_spark.operators import analytics
 
-    with cut_frames(analytics) as cuts:
+    with cut_frames() as cuts:
         analytics.pmi_collocations(docs.limit(300), min_count=2, top_k=50)
     p = plan_of(cuts[0], label="pmi collocations")
     sections.append((
@@ -1970,7 +1981,7 @@ def main() -> None:
     # media aHash near-dup: signature-only shuffle, pigeonhole join
     from commoncrawl_spark.operators.multimodal import media_near_duplicates
 
-    with cut_frames(text_dedup) as cuts:  # the shared pigeonhole join
+    with cut_frames() as cuts:  # the shared pigeonhole join
         media_near_duplicates(
             docs.select("doc_id", F.encode("text", "utf-8").alias("media")),
             max_hamming=3, bits=32, blocks=4)
@@ -2394,28 +2405,15 @@ def main() -> None:
         F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url"),
         F.concat(F.lit("u"), (F.col("doc_id") % 211).cast("string"))
         .alias("location"))
-    rr_m = (rr_edges.groupBy("url")
-            .agg(F.min("location").alias("cur"))
-            .localCheckpoint(eager=True)
-            .withColumn("hops", F.lit(1).cast("long")))
-    rr_m2 = rr_m.select(F.col("url").alias("_mu"),
-                        F.col("cur").alias("_mc"),
-                        F.col("hops").alias("_mh"))
     # render with broadcast disabled: at audit scale the mapping fits a
     # broadcast, but at 10^9 edges both sides exceed any threshold —
     # the shape that matters is the non-broadcast strategy
     _prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    rr_round = plan_of(
-        rr_m.join(rr_m2, rr_m.cur == rr_m2._mu, "left")
-        .select("url", F.coalesce("_mc", "cur").alias("cur"),
-                F.when(F.col("_mu").isNotNull(),
-                       F.col("hops") + F.col("_mh"))
-                .otherwise(F.col("hops")).alias("hops")),
-        label="redirect resolution doubling round")
+    cuts, rr_full = one_step(
+        lambda: resolve_redirects(rr_edges, max_hops=2), "redirect resolution")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _prev_bc)
-    rr_full = plan_of(resolve_redirects(rr_edges, max_hops=16),
-                      label="redirect resolution")
+    rr_round = cuts[-1]
     sections.append((
         "Redirect resolution: pointer doubling on the redirect function",
         "Each round composes the hop mapping with itself (M'(u) = "
@@ -2637,7 +2635,7 @@ def main() -> None:
     # exact containment join: prefix-filtered probe, equi-join candidates
     from commoncrawl_spark.operators.text_dedup import containment_join
 
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         containment_join(docs.limit(400), threshold=0.8)
     p = plan_of(cuts[0], label="containment join")
     sections.append((
@@ -3221,19 +3219,10 @@ def main() -> None:
         build_tf_index,
     )
 
-    from commoncrawl_spark.operators.graph import _edge_list, kcore
+    from commoncrawl_spark.operators.graph import kcore
 
-    # one peel round over the cut survivor set, as the loop steps it
-    # (the loop cuts the last round, so the full plan hides the joins)
-    kc_sym = _edge_list(pr_edges, "src", "dst", undirected=True,
-                        drop_loops=True).localCheckpoint(eager=True)
-    kc_alive = (kc_sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= 9).select("src"))
-    kc_round = plan_of(
-        kc_sym.join(kc_alive, "src", "semi")
-        .join(kc_alive.withColumnRenamed("src", "dst"), "dst", "semi"),
-        label="k-core one round")
-    plan_of(kcore(pr_edges, k=9, max_rounds=2), label="k-core")
+    cuts, _ = one_step(lambda: kcore(pr_edges, k=9, max_rounds=1), "k-core")
+    kc_round = cuts[-1]
     sections.append((
         "k-core peel: slim edge state, semi-join restriction per round",
         "Each peel round is one map-side-partial degree count plus two "
@@ -3596,16 +3585,7 @@ def main() -> None:
         materialize,
     )
 
-    pkg = os.path.join(os.path.dirname(OUT), "commoncrawl_spark")
-    nsites = 0
-    for root, _, files in os.walk(pkg):
-        for f in files:
-            if f.endswith(".py"):
-                with open(os.path.join(root, f)) as fh:
-                    src = fh.read()
-                    nsites += (src.count(".transform(_materialize")
-                               + src.count("iterate(")
-                               - src.count("def iterate("))
+    sites = seam_call_sites()
     toy = spark.range(0, 100).withColumn("k", F.col("id") % 3)
     sandbox = not checkpoint_dir_configured(toy)
     ckd = tempfile.mkdtemp(prefix="ckpt_audit_")
@@ -3624,7 +3604,8 @@ def main() -> None:
         "executor loss is near-certain. Every lineage cut in the package "
         "(graph fixpoint loops, LM model tables, SemDeDup assignment, "
         "Block-Max posting slice, BPE merge loop, cuckoo kick rounds, "
-        "text-dedup slim outputs) routes through materialize() "
+        "text-dedup slim outputs, the crawl round's polite batch, "
+        "outcome and discovered links) routes through materialize() "
         "(commoncrawl_spark/materialize.py), which uses reliable "
         "DataFrame.checkpoint whenever sc.setCheckpointDir was called — "
         "the normal cluster setup, paired with "
@@ -3632,7 +3613,9 @@ def main() -> None:
         "falls back to localCheckpoint only in single-JVM sandboxes, "
         "where executor loss already implies job loss. Result identity "
         "across modes is pytest-pinned (tests/test_materialize.py).",
-        [f"package call sites routed through the seam: {nsites}",
+        [f"package call sites routed through the seam: "
+         f"{sum(sites.values())}",
+         "by module: " + ", ".join(f"{m} {n}" for m, n in sites.items()),
          f"no checkpoint dir -> sandbox localCheckpoint mode: {sandbox}",
          f"checkpoint dir set -> reliable checkpoint mode: {cluster}",
          f"reliable checkpoint wrote files under the dir: "
@@ -3665,8 +3648,15 @@ def main() -> None:
             "`scripts/plan_audit.py`)\n\n"
             "Each 100 TB claim, with the optimizer's own output as "
             "evidence. Regenerate after engine changes; the matching hard "
-            "assertions live in `tests/test_plans.py`, "
-            "`tests/test_transport.py`, `tests/test_seen_set.py`.\n"
+            "assertions live in `tests/test_plans.py` and each operator "
+            "family's own test file (`tests/test_transport.py`, "
+            "`tests/test_seen_set.py`, ...). Those on frames the engine "
+            "cuts read them through `cut_frames()`: the crawl round in "
+            "`tests/test_frontier.py`, the loop steps and triangle counts "
+            "in `tests/test_graph.py`, pagination in `tests/test_links.py`, "
+            "the text-dedup and PMI frames in `tests/test_text_ops.py`, "
+            "`tests/test_plans.py` and `tests/test_analytics.py`, the "
+            "recorder itself in `tests/test_materialize.py`.\n"
         )
         for title, why, ev in sections:
             fh.write(f"\n## {title}\n\n{why}\n\n```\n")

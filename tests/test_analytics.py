@@ -260,7 +260,7 @@ def test_pmi_plan_topk_no_window(spark):
 
     df = spark.createDataFrame(
         [(1, "a b a b a b a b")], "doc_id long, text string")
-    with cut_frames(analytics) as cuts:
+    with cut_frames() as cuts:
         analytics.pmi_collocations(df, min_count=1, top_k=5)
     plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # map-side partial top-k

@@ -519,35 +519,47 @@ def test_round_commits_plan_over_cuts(spark, tables, tmp_path,
     """Every commit of a round plans over the round's cuts (Scan
     ExistingRDD leaves), never over a cached deep plan
     (InMemoryTableScan); and the polite batch's two windows are planned
-    once — in the batch's cut, not again in the outcome read from it."""
-    from commoncrawl_spark.plans import frontier
+    once — in the batch's cut, not again in the outcome read from it.
+
+    The outcome keeps extraction above the fetch join. As a pandas_udf
+    EXPRESSION, extraction (dragged by the article.error filter) was
+    pushed below the join by PushPredicateThroughJoin — evaluated twice
+    and forcing the join to shuffle fat extracted rows. The MapInPandas
+    barrier must keep a single extraction above the join."""
     from commoncrawl_spark.plans.explain import plan_string
+    from scripts.plan_audit import cut_frames, planned_once
 
     pages, cdx, _ = tables
     job = CrawlJob(spark, str(tmp_path / "ck"), budget_per_host=BUDGET)
     job.seed_from_cdx(cdx, crawl_order=CRAWLS)
-    cut_plans, commit_plans = [], {}
-    cut, commit = frontier.materialize, SnapshotTable._commit
-
-    def recording_cut(df, eager=True):
-        cut_plans.append(plan_string(df, "simple"))
-        return cut(df, eager)
+    commit_plans = {}
+    commit = SnapshotTable._commit
 
     def recording_commit(self, df, operation, metadata):
         commit_plans[os.path.basename(self.root)] = plan_string(df, "simple")
         return commit(self, df, operation, metadata)
 
-    monkeypatch.setattr(frontier, "materialize", recording_cut)
     monkeypatch.setattr(SnapshotTable, "_commit", recording_commit)
-    assert job.run_round(pages, discover_links=True)["discovered"] > 0
+    with cut_frames() as cuts:
+        assert job.run_round(pages, discover_links=True)["discovered"] > 0
     assert sorted(commit_plans) == sorted(ROUND_COMMITS)
     for name, plan in commit_plans.items():
         assert "InMemoryTableScan" not in plan, name
         assert "Scan ExistingRDD" in plan, name
-    batch, outcome = cut_plans[:2]
+    # the batch, the outcome, the discovered links: each planned as the
+    # planner chose it, before AQE re-planned the executed cut
+    batch, outcome, _ = (planned_once(plan_string(c, "simple"))
+                         for c in cuts)
     assert batch.count("Window [") == 2
     assert outcome.count("Window [") == 0
     assert "Scan ExistingRDD" in outcome
+    assert outcome.count("MapInPandas") == 1  # evaluated exactly once
+    join_pos = max(outcome.find("SortMergeJoin"),
+                   outcome.find("BroadcastHashJoin"),
+                   outcome.find("ShuffledHashJoin"))
+    # physical plans print top-down: the single MapInPandas must appear
+    # ABOVE (before) the join operator in the tree
+    assert -1 < outcome.find("MapInPandas") < join_pos
 
 
 @pytest.mark.spark

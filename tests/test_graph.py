@@ -599,16 +599,19 @@ def test_harmonic_radius_clips_path(spark):
 @pytest.mark.spark
 def test_harmonic_plan_no_python_no_window(spark):
     from commoncrawl_spark.operators.graph import harmonic_centrality
+    from commoncrawl_spark.plans.explain import plan_string
+    from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    out = harmonic_centrality(df, radius=2)
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    assert "Window" not in plan
-    # radius 2 < CUT_EVERY (3): the cut after the last round
-    # collapses the returned plan to a checkpoint scan
-    assert "Scan ExistingRDD" in plan
+    with cut_frames() as cuts:
+        out = harmonic_centrality(df, radius=1)
+    step = plan_string(cuts[-1], "simple")  # the one grow step, uncut
+    assert "hll_union_agg" in step
+    assert "EvalPython" not in step
+    assert "Window" not in step
+    # the cut after the last round collapses the returned plan to a
+    # checkpoint scan
+    assert "Scan ExistingRDD" in plan_string(out, "simple")
 
 
 def _lpa_py(edges, iters):
@@ -666,14 +669,17 @@ def test_lpa_separates_cliques(spark):
 @pytest.mark.spark
 def test_lpa_plan_no_python_no_window(spark):
     from commoncrawl_spark.operators.graph import label_propagation
+    from commoncrawl_spark.plans.explain import plan_string
+    from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    out = label_propagation(df, iters=3)
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    assert "Window" not in plan  # the argmax is min_by, not a rank
-    assert "Scan ExistingRDD" in plan  # final checkpoint collapse
+    with cut_frames() as cuts:
+        out = label_propagation(df, iters=1)
+    step = plan_string(cuts[-1], "simple")  # the one vote step, uncut
+    assert "min_by" in step
+    assert "EvalPython" not in step
+    assert "Window" not in step  # the argmax is min_by, not a rank
+    assert "Scan ExistingRDD" in plan_string(out, "simple")
 
 
 @pytest.mark.spark
@@ -716,7 +722,7 @@ def test_triangle_counts_plan_no_window_no_python(spark):
 
     edges = spark.createDataFrame(
         [(i % 7, (i * i + 1) % 7) for i in range(40)], "src long, dst long")
-    with cut_frames(graph) as cuts:
+    with cut_frames() as cuts:
         graph.triangle_counts(edges)
     plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan   # orientation rank is a struct compare

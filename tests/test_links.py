@@ -1011,13 +1011,24 @@ def test_pagination_chains_order_cycle_truncation(spark):
 
 
 @pytest.mark.spark
-def test_pagination_chains_plan(spark):
+def test_pagination_chains_plan(spark, tmp_path):
+    """The edge input is scanned once, by the one cut the operator
+    makes; the unrolled joins read that cut."""
     from commoncrawl_spark.operators.links import pagination_chains
     from commoncrawl_spark.plans.explain import plan_string
+    from scripts.plan_audit import cut_frames, planned_once
 
-    edges = spark.createDataFrame([("a", "b")],
-                                  "url string, next_url string")
-    p = plan_string(pagination_chains(edges, max_pages=4), "simple")
+    spark.createDataFrame([("a", "b"), ("b", "c")],
+                          "url string, next_url string").write.parquet(
+        str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+    with cut_frames() as cuts:
+        out = pagination_chains(edges, max_pages=4)
+    assert len(cuts) == 1
+    cut = planned_once(plan_string(cuts[0], "simple"))
+    p = plan_string(out, "simple")
+    assert cut.count("FileScan parquet") == 1
+    assert "FileScan parquet" not in p and "Scan ExistingRDD" in p
     assert "CartesianProduct" not in p and "EvalPython" not in p
     assert "Window" not in p
 

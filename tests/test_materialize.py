@@ -215,6 +215,47 @@ def test_release_frees_a_lazy_cut(spark, request, reliable):
     assert pinned() == set()
 
 
+def test_cut_frames_records_every_seam_cut(spark):
+    """``scripts/plan_audit.cut_frames`` records the cuts a loop makes
+    through ``iterate`` besides the ones a module makes through its own
+    alias, and puts every binding back on exit — also a binding made
+    inside the block, and also when the block raises. (The crawl
+    round's cuts are recorded in ``tests/test_frontier.py``'s
+    ``test_round_commits_plan_over_cuts``.)"""
+    import sys
+    import types
+
+    from commoncrawl_spark import materialize as seam
+    from commoncrawl_spark.operators import graph
+    from commoncrawl_spark.plans import frontier
+    from commoncrawl_spark.plans.explain import plan_string
+    from scripts.plan_audit import cut_frames
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                  "src long, dst long")
+    with cut_frames() as cuts:
+        graph.pagerank(edges, iters=1)
+    # the pre-loop node cut, then the step iterate cut
+    assert [c.columns for c in cuts] == [["node", "bias"], ["node", "rank"]]
+    step = plan_string(cuts[1], "simple")
+    assert "partial_sum" in step and "Join" in step
+
+    late = types.ModuleType("commoncrawl_spark._late_import")
+    with pytest.raises(RuntimeError):
+        with cut_frames():
+            recorder = seam.materialize
+            late.materialize = seam.materialize  # imported in the block
+            sys.modules[late.__name__] = late
+            raise RuntimeError
+    del sys.modules[late.__name__]
+    assert recorder is not materialize
+    assert (seam.materialize is graph._materialize is frontier.materialize
+            is late.materialize is materialize)
+    assert not [f"{name}.{attr}" for name, mod in list(sys.modules.items())
+                if name.startswith("commoncrawl_spark")
+                for attr, val in vars(mod).items() if val is recorder]
+
+
 def _is_cut(node) -> bool:
     """``materialize(...)``, ``_materialize(...)`` or
     ``<frame>.transform(_materialize, ...)``."""

@@ -171,7 +171,7 @@ def test_near_dedup_pipeline_never_cross_joins(spark, docs):
     # each slim pair stage (candidates, then verified pairs) is cut
     # eagerly, which truncates the returned plan to RDD scans: the
     # frames the stages cut carry the joins this test pins
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         out = text_dedup.drop_near_duplicates(docs.select("doc_id", "text"))
     assert len(cuts) == 2
     for df in [*cuts, out]:

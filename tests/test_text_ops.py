@@ -937,7 +937,6 @@ def test_incremental_estimate_tracks_true_jaccard(spark):
 
 @pytest.mark.spark
 def test_incremental_near_dedup_never_shuffles_index(spark):
-    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import (
         build_minhash_index, near_duplicates_against_index)
     from scripts.plan_audit import cut_frames
@@ -948,7 +947,7 @@ def test_incremental_near_dedup_never_shuffles_index(spark):
     new = spark.createDataFrame(
         [(100, "history document number 3 with shared filler words")],
         "doc_id long, text string")
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         near_duplicates_against_index(
             new, build_minhash_index(hist), threshold=0.5)
     plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
@@ -1573,14 +1572,13 @@ def test_media_neardup_pairs(spark):
 
 @pytest.mark.spark
 def test_media_neardup_plan_no_python_no_allpairs(spark):
-    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.multimodal import media_near_duplicates
     from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame(
         [(1, bytearray(b"abcdef")), (2, bytearray(b"abcdeg"))],
         "doc_id long, media binary")
-    with cut_frames(text_dedup) as cuts:  # the shared pigeonhole join
+    with cut_frames() as cuts:  # the shared pigeonhole join
         media_near_duplicates(df)
     plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
@@ -1872,13 +1870,12 @@ def test_ssjoin_threshold_validation(spark):
 
 @pytest.mark.spark
 def test_ssjoin_plan_no_cartesian_no_window(spark):
-    from commoncrawl_spark.operators import text_dedup
     from commoncrawl_spark.operators.text_dedup import set_similarity_join
     from scripts.plan_audit import cut_frames
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b c d e")], "doc_id long, text string")
-    with cut_frames(text_dedup) as cuts:
+    with cut_frames() as cuts:
         set_similarity_join(df, threshold=0.5)
     plan = cuts[0]._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
