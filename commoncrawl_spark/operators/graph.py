@@ -272,7 +272,10 @@ def hits(
         )
         upd = scores.join(mass, "node", "left").withColumn(
             score, F.coalesce("_m", F.lit(0.0)))
-        total = upd.agg(F.sum(score).alias("_tot"))
+        # every mass row's node is in the state, so the L1 total is the
+        # mass's own sum: planned from `mass`, it reads the same
+        # exchanges as the update instead of re-planning `upd`
+        total = mass.agg(F.sum("_m").alias("_tot"))
         return (
             upd.crossJoin(F.broadcast(total))
             .withColumn(score, F.col(score) / F.col("_tot"))

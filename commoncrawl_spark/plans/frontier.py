@@ -683,14 +683,21 @@ class CrawlJob:
         max_rounds: int | None = None,
         discover_links: bool = False,
     ) -> list[dict[str, int]]:
-        """Drive rounds until the frontier drains (or max_rounds)."""
+        """Drive rounds until the frontier drains (or max_rounds).
+
+        Each round's counters gain ``wall_s`` and ``jit_s``: the time
+        the driver JVM's JIT compilers spent in the round (the delta of
+        its CompilationMXBean total, read without a Spark job)."""
+        jit = (self.spark._jvm.java.lang.management.ManagementFactory
+               .getCompilationMXBean())
         out = []
         while max_rounds is None or len(out) < max_rounds:
-            t0 = time.monotonic()
+            t0, jit0 = time.monotonic(), jit.getTotalCompilationTime()
             c = self.run_round(pages, robots, discover_links)
             if not c:
                 break
             c["wall_s"] = round(time.monotonic() - t0, 3)
+            c["jit_s"] = (jit.getTotalCompilationTime() - jit0) / 1000
             out.append(c)
         return out
 

@@ -2,7 +2,7 @@
 
 Single-JVM ``local[N]`` in this sandbox; on a real cluster the same
 builder options apply (AQE, Arrow, UTC, shuffle partitions ~ cores, a
-codegen cache that holds a crawl round's classes).
+codegen cache that holds a crawl round's classes, a C1-only driver JIT).
 """
 
 from __future__ import annotations
@@ -11,6 +11,11 @@ import os
 import zipfile
 
 from pyspark.sql import SparkSession
+
+# the driver JVM's options: see get_spark; spark-submit takes the same
+# string with --conf spark.driver.extraJavaOptions=...
+DRIVER_JAVA_OPTIONS = ("-XX:+UseParallelGC -XX:TieredStopAtLevel=1 "
+                       "-XX:ReservedCodeCacheSize=256m")
 
 
 def _package_zip() -> str:
@@ -79,7 +84,25 @@ def get_spark(
         # concurrent tasks G1 write barriers halved Arrow-UDF throughput in
         # measurement — ParallelGC is the right collector for this
         # throughput-batch workload (2x on the extraction stage at 32 cores)
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        #
+        # The driver JIT stops at C1 (TieredStopAtLevel=1). A crawl round
+        # runs Catalyst and planner code that a one-round warm-up ran too
+        # few times to compile, so with tiered C2 the compiler threads
+        # took 5.5-7 of the 15-19 CPU-s of a benchmark round (4-core
+        # host), more than the Python extraction; C1 code is compiled
+        # fast and is good enough for code the driver runs a few
+        # thousand times: round CPU fell 30-37% on both benchmark
+        # workloads. The price is paid by long-lived JVMs, where C2 code
+        # would have paid back its compile time: the test suite's crawl
+        # tests run ~30% longer. C1 alone gets an unsegmented 48 MB code
+        # cache, which planner code overflows (the sweeper then flushes
+        # and recompiles it); the longest-lived JVM, the full test suite,
+        # peaked at 86 MB, so 256 MB keeps ~3x headroom.
+        # In local mode this is the JVM that runs every round, task and
+        # operator; on a cluster it is the driver only (planning,
+        # scheduling, commits), and executors keep tiered C2 for the
+        # task code.
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         # a crawl round's generated classes overflow Spark's default
         # 100-entry codegen cache: each round evicted its own classes
         # before reuse, so Janino recompiled 90-110 sources per benchmark

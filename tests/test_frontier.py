@@ -158,6 +158,8 @@ def test_metrics_lineage(spark, full_run):
     tot = m.agg(F.sum("n_selected"), F.sum("n_fetched")).first()
     assert tot[0] == sum(r["selected"] for r in rounds)
     assert tot[1] == sum(r["fetched"] for r in rounds)
+    # the driver-side timings ride on every round's counters
+    assert all(r["wall_s"] > 0 and r["jit_s"] >= 0 for r in rounds), rounds
     # per-partition lineage accounts for every fetched row, per round
     lin = job.lineage.read(spark)
     per_round = {r["round"]: r["s"] for r in
@@ -582,6 +584,16 @@ def test_repeated_round_compiles_no_new_code(spark, tables,
         compiles.append(compiled.getCount() - before)
     assert compiles[1] == 0, compiles
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    # the driver JIT stops at C1, and its code cache keeps 2x headroom
+    # over what this session compiled: a full cache flushes and
+    # recompiles planner code every round
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=1" in args, args
+    assert "-XX:ReservedCodeCacheSize=256m" in args, args
+    pool = next(p for p in mf.getMemoryPoolMXBeans()
+                if p.getName() == "CodeCache")
+    assert pool.getPeakUsage().getUsed() < pool.getUsage().getMax() / 2
 
 
 @pytest.mark.spark
