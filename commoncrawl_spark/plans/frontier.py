@@ -682,12 +682,13 @@ class CrawlJob:
         robots: DataFrame | None = None,
         max_rounds: int | None = None,
         discover_links: bool = False,
-    ) -> list[dict[str, int]]:
+    ) -> list[dict[str, int | float]]:
         """Drive rounds until the frontier drains (or max_rounds).
 
-        Each round's counters gain ``wall_s`` and ``jit_s``: the time
-        the driver JVM's JIT compilers spent in the round (the delta of
-        its CompilationMXBean total, read without a Spark job)."""
+        Each round's counters gain ``wall_s``, its wall time, and
+        ``jit_s``, the time the driver JVM's JIT compilers spent in it
+        (the delta of its CompilationMXBean total, read without a Spark
+        job); both in seconds to 3 places."""
         jit = (self.spark._jvm.java.lang.management.ManagementFactory
                .getCompilationMXBean())
         out = []
@@ -697,7 +698,7 @@ class CrawlJob:
             if not c:
                 break
             c["wall_s"] = round(time.monotonic() - t0, 3)
-            c["jit_s"] = (jit.getTotalCompilationTime() - jit0) / 1000
+            c["jit_s"] = round((jit.getTotalCompilationTime() - jit0) / 1000, 3)
             out.append(c)
         return out
 

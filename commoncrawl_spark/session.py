@@ -2,7 +2,8 @@
 
 Single-JVM ``local[N]`` in this sandbox; on a real cluster the same
 builder options apply (AQE, Arrow, UTC, shuffle partitions ~ cores, a
-codegen cache that holds a crawl round's classes, a C1-only driver JIT).
+codegen cache that holds a crawl round's classes). The driver JVM's
+C1-only JIT suits a short-lived JVM that runs a few rounds.
 """
 
 from __future__ import annotations
@@ -12,8 +13,9 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-# the driver JVM's options: see get_spark; spark-submit takes the same
-# string with --conf spark.driver.extraJavaOptions=...
+# the driver JVM's options (see get_spark): a C1-only JIT, measured to
+# pay off in a short-lived JVM that runs a few rounds, not in one that
+# drains a frontier
 DRIVER_JAVA_OPTIONS = ("-XX:+UseParallelGC -XX:TieredStopAtLevel=1 "
                        "-XX:ReservedCodeCacheSize=256m")
 
@@ -85,23 +87,23 @@ def get_spark(
         # measurement — ParallelGC is the right collector for this
         # throughput-batch workload (2x on the extraction stage at 32 cores)
         #
-        # The driver JIT stops at C1 (TieredStopAtLevel=1). A crawl round
-        # runs Catalyst and planner code that a one-round warm-up ran too
-        # few times to compile, so with tiered C2 the compiler threads
-        # took 5.5-7 of the 15-19 CPU-s of a benchmark round (4-core
-        # host), more than the Python extraction; C1 code is compiled
-        # fast and is good enough for code the driver runs a few
-        # thousand times: round CPU fell 30-37% on both benchmark
-        # workloads. The price is paid by long-lived JVMs, where C2 code
-        # would have paid back its compile time: the test suite's crawl
-        # tests run ~30% longer. C1 alone gets an unsegmented 48 MB code
-        # cache, which planner code overflows (the sweeper then flushes
-        # and recompiles it); the longest-lived JVM, the full test suite,
-        # peaked at 86 MB, so 256 MB keeps ~3x headroom.
+        # The driver JIT stops at C1 (TieredStopAtLevel=1), for a
+        # short-lived JVM that runs a few rounds. A crawl round runs
+        # Catalyst and planner code that a one-round warm-up ran too few
+        # times to compile, so with tiered C2 the compiler threads took
+        # 5.5-7 of the 15-19 CPU-s of a benchmark round (4-core host),
+        # more than the Python extraction; C1 compiles it cheaply: round
+        # CPU fell 30-37% on both benchmark workloads, round wall time
+        # unchanged. A long-lived JVM pays for it, because C2 code pays
+        # back its compile time: in one JVM draining a frontier over 49
+        # rounds, rounds 30-48 ran 21-30% longer at the same CPU, and the
+        # test suite runs 16-29% longer. C1 alone gets an unsegmented
+        # 48 MB code cache, which planner code overflows (the sweeper
+        # then flushes and recompiles it); the longest-lived JVM, the
+        # full test suite, peaked at 86 MB, so 256 MB keeps ~3x headroom.
         # In local mode this is the JVM that runs every round, task and
         # operator; on a cluster it is the driver only (planning,
-        # scheduling, commits), and executors keep tiered C2 for the
-        # task code.
+        # scheduling, commits), and executors keep tiered C2.
         .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         # a crawl round's generated classes overflow Spark's default
         # 100-entry codegen cache: each round evicted its own classes

@@ -9,7 +9,6 @@ print(_package_zip())"   # build the zip
     spark-submit --py-files .commoncrawl_spark.zip \
         --conf spark.checkpoint.dir=hdfs:///crawl/lineage \
         --conf spark.sql.codegen.cache.maxEntries=1024 \
-        --conf spark.driver.extraJavaOptions="-XX:+UseParallelGC -XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=256m" \
         scripts/run_crawl.py --pages pages.parquet --cdx cdx.parquet \
         --checkpoint /data/crawl_ckpt --budget 200 --max-rounds 10
 
@@ -30,13 +29,11 @@ there. Pass ``spark.sql.codegen.cache.maxEntries=1024``: it is a static
 conf, and at Spark's default of 100 entries a crawl round evicts its own
 compiled classes before the next round reuses them, so every round
 recompiles its whole-stage-codegen sources (and the JIT recompiles the
-new classes). Pass ``get_spark``'s driver JVM options too
-(``session.DRIVER_JAVA_OPTIONS``): the driver starts before this script
-runs, so only the command line can set them. They stop the driver's JIT
-at C1 with a code cache sized for it; the C2 compiler otherwise spends
-more CPU on the driver's planner code than a round spends extracting.
-Executors keep their own JVM options. Each round's ``jit_s`` (summed in
-the printed summary) is the driver's JIT time in that round.
+new classes). ``get_spark``'s driver JVM options
+(``session.DRIVER_JAVA_OPTIONS``, a C1-only JIT) are not passed: they
+pay off in a short-lived JVM that runs a few rounds, and a driver that
+drains a frontier lives for many. Each round's ``jit_s`` (summed in the
+printed summary) is the driver's JIT time in that round.
 """
 
 from __future__ import annotations

@@ -14,6 +14,7 @@ from commoncrawl_spark.fixtures import CRAWLS
 from commoncrawl_spark.functions.urls import canonicalize_url_py
 from commoncrawl_spark.operators.dedup import deduplicate_records_py
 from commoncrawl_spark.plans.frontier import CrawlJob
+from commoncrawl_spark.session import DRIVER_JAVA_OPTIONS
 from commoncrawl_spark.sources.transport import LookupJoinTransport
 from commoncrawl_spark.tables import SnapshotTable
 from conftest import FlakyTransport
@@ -584,13 +585,12 @@ def test_repeated_round_compiles_no_new_code(spark, tables,
         compiles.append(compiled.getCount() - before)
     assert compiles[1] == 0, compiles
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
-    # the driver JIT stops at C1, and its code cache keeps 2x headroom
-    # over what this session compiled: a full cache flushes and
-    # recompiles planner code every round
+    # the session JVM runs get_spark's driver options (a C1-only JIT),
+    # and its code cache keeps 2x headroom over what this session
+    # compiled: a full cache flushes and recompiles planner code
     mf = spark._jvm.java.lang.management.ManagementFactory
     args = list(mf.getRuntimeMXBean().getInputArguments())
-    assert "-XX:TieredStopAtLevel=1" in args, args
-    assert "-XX:ReservedCodeCacheSize=256m" in args, args
+    assert set(DRIVER_JAVA_OPTIONS.split()) <= set(args), args
     pool = next(p for p in mf.getMemoryPoolMXBeans()
                 if p.getName() == "CodeCache")
     assert pool.getPeakUsage().getUsed() < pool.getUsage().getMax() / 2

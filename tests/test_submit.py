@@ -24,7 +24,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
 
     sys.path.insert(0, REPO)
     from commoncrawl_spark.fixtures import write_fixtures
-    from commoncrawl_spark.session import DRIVER_JAVA_OPTIONS, _package_zip
+    from commoncrawl_spark.session import _package_zip
 
     zip_path = _package_zip()
     fixtures = str(tmp_path / "fixtures")
@@ -40,9 +40,8 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         "--master", "local[4]",
         "--conf", "spark.sql.shuffle.partitions=8",
         "--conf", "spark.ui.enabled=false",
-        # the deploy command's confs (README, run_crawl.py's docstring)
+        # the deploy command's conf (README, run_crawl.py's docstring)
         "--conf", "spark.sql.codegen.cache.maxEntries=1024",
-        "--conf", f"spark.driver.extraJavaOptions={DRIVER_JAVA_OPTIONS}",
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", "run_crawl.py"),
         "--pages", f"{fixtures}/pages.parquet",
@@ -74,16 +73,3 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert summary["extract_ok"] > 0
     assert summary["articles_total"] == summary["extract_ok"]
     assert summary["jit_s"] >= 0
-
-
-def test_deploy_docs_pass_the_session_java_options():
-    """The documented spark-submit commands carry the driver JVM options
-    get_spark sets: under spark-submit the driver starts before the
-    script, so the command line is the only place they can be set."""
-    sys.path.insert(0, REPO)
-    from commoncrawl_spark.session import DRIVER_JAVA_OPTIONS
-
-    conf = f'spark.driver.extraJavaOptions="{DRIVER_JAVA_OPTIONS}"'
-    for doc in ("README.md", os.path.join("scripts", "run_crawl.py")):
-        with open(os.path.join(REPO, doc)) as fh:
-            assert conf in fh.read(), doc
