@@ -34,6 +34,12 @@ new classes). ``get_spark``'s driver JVM options
 pay off in a short-lived JVM that runs a few rounds, and a driver that
 drains a frontier lives for many. Each round's ``jit_s`` (summed in the
 printed summary) is the driver's JIT time in that round.
+
+The Python workers keep PySpark's stock daemon. ``get_spark``'s
+``commoncrawl_spark.pydaemon`` spares each task a re-read of every zip
+directory on the worker's path, but Spark starts the daemon from the
+executors' ``PYTHONPATH`` before ``--py-files`` reaches them, so the
+package is not importable there.
 """
 
 from __future__ import annotations
