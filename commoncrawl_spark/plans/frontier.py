@@ -12,7 +12,7 @@ One **round** =
              article struct, hrefs when discovering; never html),
              cut, counted in ONE aggregate (the round's counters)
             ──commit, each derived from outcome:
-              articles / failures / trace / metrics / lineage
+              articles / failures / trace (metrics_df, lineage_df read it)
               / seen ──▶ seen-state add (delta read back from the commit)
               / frontier (+ discovered links, probed against the seen set)
 
@@ -188,8 +188,6 @@ class CrawlJob:
         self.articles = t("articles")
         self.failures = t("failures")
         self.trace = t("trace")
-        self.metrics = t("metrics")
-        self.lineage = t("lineage")
 
     # -- seeding ---------------------------------------------------------------
 
@@ -581,37 +579,11 @@ class CrawlJob:
             self.trace,
             outcome.select(
                 F.lit(rnd).alias("round"), "host", "host_rank",
-                "crawl_rank", "page", "line_no", "url",
+                "crawl_rank", "page", "line_no", "url", "url_sha1",
+                F.col("_fetch_error").alias("fetch_error"),
             ),
             rnd,
         )
-        per_host = (
-            outcome.groupBy("host")
-            .agg(
-                F.count(F.lit(1)).alias("n_selected"),
-                F.count(F.when(ok_fetch, 1)).alias("n_fetched"),
-                F.count(F.when(~ok_fetch, 1)).alias("n_fetch_failed"),
-            )
-            .select(F.lit(rnd).alias("round"), "host", "n_selected",
-                    "n_fetched", "n_fetch_failed")
-        )
-        self._append_once(self.metrics, per_host, rnd)
-        # per-partition lineage: which physical partition produced how many
-        # fetched rows this round, with the key range it covered (audit
-        # trail for a 1000-executor run; partition ids are physical, so
-        # this table is observability, not part of the deterministic state)
-        per_part = (
-            outcome.filter(ok_fetch)
-            .groupBy(F.spark_partition_id().alias("part_id"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.min("url_sha1").alias("min_key"),
-                F.max("url_sha1").alias("max_key"),
-            )
-            .select(F.lit(rnd).alias("round"), "part_id", "n_rows",
-                    "min_key", "max_key")
-        )
-        self._append_once(self.lineage, per_part, rnd)
         # fetched and exhausted rows are done; retryable ones requeue
         done = outcome.filter(ok_fetch | exhausted)
         if self._append_once(self.seen, done.select("url_sha1").distinct(),
@@ -723,4 +695,27 @@ class CrawlJob:
         return self.trace.read(self.spark)
 
     def metrics_df(self) -> DataFrame:
-        return self.metrics.read(self.spark)
+        """Per-host counts of every round: (round, host, n_selected,
+        n_fetched, n_fetch_failed), aggregated from the trace."""
+        ok = F.col("fetch_error").isNull()
+        return self.trace_df().groupBy("round", "host").agg(
+            F.count(F.lit(1)).alias("n_selected"),
+            F.count(F.when(ok, 1)).alias("n_fetched"),
+            F.count(F.when(~ok, 1)).alias("n_fetch_failed"),
+        )
+
+    def lineage_df(self) -> DataFrame:
+        """Per-partition lineage of every round: (round, part_id, n_rows,
+        min_key, max_key) of the fetched rows. The trace is written from
+        the outcome cut without an exchange, so each data file, named
+        ``part-<id>-...``, holds one physical outcome partition."""
+        part_id = F.split(F.col("_metadata.file_name"), "-")[1].cast("int")
+        return (
+            self.trace_df().filter(F.col("fetch_error").isNull())
+            .groupBy("round", part_id.alias("part_id"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("url_sha1").alias("min_key"),
+                F.max("url_sha1").alias("max_key"),
+            )
+        )

@@ -120,7 +120,7 @@ def main(argv: list[str] | None = None) -> int:
         "extract_ok": sum(r["extract_ok"] for r in rounds),
         "wall_s": round(sum(r["wall_s"] for r in rounds), 2),
         "jit_s": round(sum(r["jit_s"] for r in rounds), 2),
-        "articles_total": job.articles_df().count() if rounds else 0,
+        "articles_total": job.articles.count(spark),
     }
     if args.export_shards:
         from commoncrawl_spark.tables import verify_shards, write_shards

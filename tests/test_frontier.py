@@ -162,7 +162,7 @@ def test_metrics_lineage(spark, full_run):
     # the driver-side timings ride on every round's counters
     assert all(r["wall_s"] > 0 and r["jit_s"] >= 0 for r in rounds), rounds
     # per-partition lineage accounts for every fetched row, per round
-    lin = job.lineage.read(spark)
+    lin = job.lineage_df()
     per_round = {r["round"]: r["s"] for r in
                  lin.groupBy("round").agg(F.sum("n_rows").alias("s")).collect()}
     # lineage covers exactly the rounds that fetched something; rounds
@@ -170,6 +170,8 @@ def test_metrics_lineage(spark, full_run):
     # failures produce no per-partition rows
     assert per_round == {r["round"]: r["fetched"] for r in rounds if r["fetched"]}
     assert lin.filter(F.col("min_key") > F.col("max_key")).count() == 0
+    # both are reads of the trace: the round commits no table for them
+    assert not {"metrics", "lineage"} & set(os.listdir(job.dir))
 
 
 @pytest.mark.spark
@@ -206,7 +208,11 @@ def test_transient_failures_retried_to_same_result(spark, tables, full_run,
     job = CrawlJob(spark, d, budget_per_host=BUDGET, max_retries=3,
                    transport=FlakyTransport(LookupJoinTransport(pages), flaky))
     job.seed_from_cdx(cdx, crawl_order=CRAWLS)
-    job.run(pages)
+    rounds = job.run(pages)
+    # the trace keeps each fetch's error: per-host failures add up to
+    # the rounds' unfetched rows
+    n_failed = job.metrics_df().agg(F.sum("n_fetch_failed")).first()[0]
+    assert n_failed == sum(r["selected"] - r["fetched"] for r in rounds) > 0
 
     a = {tuple(r) for r in ref_job.seen_df().collect()}
     b = {tuple(r) for r in job.seen_df().collect()}
@@ -261,8 +267,7 @@ def test_robots_gating(spark, tables, tmp_path_factory):
 
 # a round's commits, in the order run_round makes them (the frontier,
 # the resume authority, is last)
-ROUND_COMMITS = ("articles", "failures", "trace", "metrics", "lineage",
-                 "seen", "frontier")
+ROUND_COMMITS = ("articles", "failures", "trace", "seen", "frontier")
 # discovery crawl with the Bloom membership path on from round 0, one
 # attempt per URL (discovered fixture links mostly point at pages the
 # corpus lacks), and a budget that drains the fixture in a few rounds
@@ -356,13 +361,14 @@ def test_mid_round_crash_between_commits_replays_idempotently(
 
 
 # Spark jobs a round may launch under its caller's job group: the most
-# measured on this fixture (8 shuffle partitions) over six three-round
-# crawls, 33-38 per round (AQE varies a round's count by a few jobs). A
+# measured on this fixture (8 shuffle partitions) over eight three-round
+# crawls, 29-33 per round (AQE varies a round's count by a few jobs). A
 # slim outcome cut counted in one aggregate, commits planned over the
 # round's cuts, an O(delta) Bloom add, counts and the frontier's max
 # crawl_rank from manifests, table schemas from manifests (no
-# schema-inference job per read)
-ROUND_JOB_BUDGET = 38
+# schema-inference job per read), five commits (per-host metrics and
+# lineage are reads of the trace)
+ROUND_JOB_BUDGET = 33
 
 
 @pytest.mark.spark
@@ -682,6 +688,29 @@ def test_evict_validates_before_mutating_seen(spark, tables, full_run,
         job.evict_for_recrawl(keyed, requeue=True)
     after = {r["url_sha1"] for r in job.seen_df().collect()}
     assert after == before  # nothing was evicted
+
+
+@pytest.mark.spark
+def test_run_crawl_reports_articles_of_a_drained_checkpoint(
+        spark, fixture_dir, tmp_path, capsys):
+    """run_crawl's articles_total is the articles table's row count, also
+    when a re-run finds the frontier already drained and runs no round."""
+    import json
+
+    from scripts.run_crawl import main
+
+    argv = ["--pages", f"{fixture_dir}/pages.parquet",
+            "--cdx", f"{fixture_dir}/cdx.parquet",
+            "--checkpoint", str(tmp_path / "ck"),
+            "--budget", "400", "--max-retries", "0"]
+    summaries = []
+    for _ in range(2):
+        assert main(argv) == 0
+        summaries.append(json.loads(capsys.readouterr().out.splitlines()[-1]))
+    first, again = summaries
+    assert first["rounds"] >= 1 and first["articles_total"] > 0
+    assert again["rounds"] == 0
+    assert again["articles_total"] == first["articles_total"]
 
 
 # ---------------------------------------------------------------------------
