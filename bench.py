@@ -201,8 +201,8 @@ def bench_full_round(spark, pages, cdx) -> tuple[float, int]:
 
 def bench_round_loop(spark, pages, cdx, rounds: int = 3) -> tuple[float, int, int]:
     """The PRODUCTION path under measurement: CrawlJob rounds with real
-    snapshot commits (articles, failures, trace, seen-set, frontier
-    overwrite) — i.e. frontier throughput
+    snapshot commits (trace, seen-set, frontier overwrite) — i.e.
+    frontier throughput
     including all checkpoint/resume bookkeeping, not just the dataflow.
     Returns (seconds, urls_extracted, rounds_run)."""
     import shutil

@@ -59,26 +59,23 @@ def extract_articles(pages: DataFrame, html_col: str = "html") -> DataFrame:
     return flat.select(*pass_names, article)
 
 
+def article_rows(with_struct: DataFrame, *extra: str) -> DataFrame:
+    """The rows whose extraction succeeded, as articles: ``id``, ``url``,
+    the article's fields, then the ``extra`` columns. Article id =
+    md5(url) for reference parity (download_warc_segments.py:46-48 names
+    files md5(url).warc.gz and extract_from_warc.py:164,179 carries that
+    stem as the record id)."""
+    fields = [f"article.{f.name}" for f in ARTICLE_STRUCT.fields
+              if f.name != "error"]
+    return with_struct.filter(F.col("article.error").isNull()).select(
+        page_id_col(F.col("url")).alias("id"), "url", *fields, *extra)
+
+
 def split_articles(with_struct: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(articles, failures). Article id = md5(url) for reference parity
-    (download_warc_segments.py:46-48 names files md5(url).warc.gz and
-    extract_from_warc.py:164,179 carries that stem as the record id)."""
-    ok = (
-        with_struct.filter(F.col("article.error").isNull())
-        .select(
-            page_id_col(F.col("url")).alias("id"),
-            "url",
-            "article.title",
-            "article.publish_time",
-            "article.author",
-            "article.text",
-            "article.signposting_tags",
-            "article.section_labels",
-            "article.keyword_tags",
-        )
-    )
+    """(articles, failures): :func:`article_rows`, and the url and
+    extraction error of every other row."""
     failed = (
         with_struct.filter(F.col("article.error").isNotNull())
         .select("url", F.col("article.error").alias("reason"))
     )
-    return ok, failed
+    return article_rows(with_struct), failed

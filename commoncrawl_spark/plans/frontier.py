@@ -12,9 +12,12 @@ One **round** =
              article struct, hrefs when discovering; never html),
              cut, counted in ONE aggregate (the round's counters)
             ──commit, each derived from outcome:
-              articles / failures / trace (metrics_df, lineage_df read it)
+              trace (every outcome row once, with its article and its
+              permanent-failure reason; articles, failures, metrics_df
+              and lineage_df are reads of it)
               / seen ──▶ seen-state add (delta read back from the commit)
-              / frontier (+ discovered links, probed against the seen set)
+              / frontier (+ discovered links not in the pre-round
+              frontier, probed against the seen set)
 
 The round's multi-consumer frames — the polite batch, the outcome and
 the discovered links — are lineage CUTS (``materialize``), not cached
@@ -51,7 +54,7 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Sequence
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,7 +62,7 @@ from pyspark.sql import types as T
 
 from ..materialize import materialize, release
 from ..operators.dedup import best_capture_per_url, dedup_first_seen
-from ..operators.extraction import extract_articles, split_articles
+from ..operators.extraction import article_rows, extract_articles
 from ..operators.schedule import apply_robots, select_polite_batch, with_host
 from ..operators.seen_set import (
     SEEN_SCHEMA,
@@ -129,6 +132,11 @@ def _outcome(fetched: DataFrame, batch_cols: Sequence[str],
         F.when(F.col("_fetch_error").isNull(), F.col("article")))
 
 
+class TraceView(NamedTuple):
+    """A read-only table computed from the trace each time it is read."""
+    read: Callable[[SparkSession], DataFrame]
+
+
 class CrawlJob:
     """Checkpoint-resumable crawl over a pages table.
 
@@ -156,6 +164,12 @@ class CrawlJob:
         if seen_state not in ("bloom", "cuckoo"):
             raise ValueError(
                 f"seen_state must be 'bloom' or 'cuckoo', got {seen_state!r}")
+        for old in ("articles", "failures"):
+            if os.path.exists(os.path.join(checkpoint_dir, old)):
+                raise ValueError(
+                    f"{checkpoint_dir} holds a {old} table: it predates "
+                    "articles and failures being reads of the trace, and "
+                    "no migration exists")
         self.spark = spark
         self.dir = checkpoint_dir
         self.budget = budget_per_host
@@ -185,9 +199,12 @@ class CrawlJob:
         # rows below every queued one without an aggregate job
         self.frontier = t("frontier", bounds_by=("crawl_rank",))
         self.seen = t("seen")
-        self.articles = t("articles")
-        self.failures = t("failures")
         self.trace = t("trace")
+        self.articles = TraceView(lambda spark: article_rows(
+            self.trace.read(spark).filter(F.col("article").isNotNull()),
+            "round"))
+        self.failures = TraceView(lambda spark: self.trace.read(spark).filter(
+            F.col("reason").isNotNull()).select("url", "reason", "round"))
 
     # -- seeding ---------------------------------------------------------------
 
@@ -561,26 +578,18 @@ class CrawlJob:
             return {**counters, "discovered": 0, "fast_forward_to": int(nxt)}
 
         # ---- commits (deterministic; _append_once makes replay idempotent) ----
-        ok, extract_failed = split_articles(outcome.filter(ok_fetch))
-        self._append_once(
-            self.articles, ok.withColumn("round", F.lit(rnd)), rnd
-        )
-        perm_failures = (
-            extract_failed.select("url", "reason")
-            .unionByName(outcome.filter(exhausted).select(
-                "url",
-                F.coalesce(F.col("_fetch_error"), F.lit("fetch_failed"))
-                .alias("reason"),
-            ))
-            .withColumn("round", F.lit(rnd))
-        )
-        self._append_once(self.failures, perm_failures, rnd)
+        # a failed fetch has no article, so a row's permanent-failure
+        # reason is its extraction error, or its fetch error once its
+        # retries are exhausted
         self._append_once(
             self.trace,
             outcome.select(
                 F.lit(rnd).alias("round"), "host", "host_rank",
                 "crawl_rank", "page", "line_no", "url", "url_sha1",
-                F.col("_fetch_error").alias("fetch_error"),
+                F.col("_fetch_error").alias("fetch_error"), "article",
+                F.when(~retryable, F.coalesce(
+                    F.col("article.error"), F.col("_fetch_error")))
+                .alias("reason"),
             ),
             rnd,
         )
@@ -627,11 +636,13 @@ class CrawlJob:
 
             # membership through _filter_unseen so a long discovery crawl
             # pays the Bloom probe, not a per-round exact anti-join
-            # against the ever-growing seen table
-            cands = (
-                self._filter_unseen(href_candidates(outcome.filter(ok_fetch)))
-                .join(remaining.select("url_sha1"), "url_sha1", "left_anti")
-            )
+            # against the ever-growing seen table. The pre-round frontier
+            # holds the remaining keys and this round's done ones, which
+            # the seen set already holds, so one anti-join against it
+            # before the probe drops what the remaining frontier would.
+            cands = self._filter_unseen(
+                href_candidates(outcome.filter(ok_fetch))
+                .join(frontier.select("url_sha1"), "url_sha1", "left_anti"))
             new_rows = _frontier_rows(
                 with_host(cands), self._next_rank()).transform(
                     materialize, eager=False)

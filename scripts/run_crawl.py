@@ -114,18 +114,20 @@ def main(argv: list[str] | None = None) -> int:
     robots = spark.read.parquet(args.robots) if args.robots else None
     rounds = job.run(pages, robots=robots, max_rounds=args.max_rounds)
     job.release()  # the exports below need no seen state
+    # the articles are a read of the trace, which the first round creates
+    crawled = job.trace.exists()
     summary = {
         "rounds": len(rounds),
         "fetched": sum(r["fetched"] for r in rounds),
         "extract_ok": sum(r["extract_ok"] for r in rounds),
         "wall_s": round(sum(r["wall_s"] for r in rounds), 2),
         "jit_s": round(sum(r["jit_s"] for r in rounds), 2),
-        "articles_total": job.articles.count(spark),
+        "articles_total": job.articles_df().count() if crawled else 0,
     }
     if args.export_shards:
         from commoncrawl_spark.tables import verify_shards, write_shards
 
-        if job.articles.exists():
+        if crawled:
             manifest = write_shards(
                 job.articles_df(), args.export_shards, key="url",
                 target_bytes=args.shard_bytes)
@@ -141,14 +143,14 @@ def main(argv: list[str] | None = None) -> int:
             # zero rounds on a fresh checkpoint: nothing to export is a
             # reportable outcome, not a crash
             summary["export"] = {"dir": args.export_shards,
-                                 "skipped": "no articles table"}
+                                 "skipped": "no trace table"}
     if args.export_tars:
         from commoncrawl_spark.tables import (
             verify_tar_shards,
             write_tar_shards,
         )
 
-        if job.articles.exists():
+        if crawled:
             manifest = write_tar_shards(
                 job.articles_df(), args.export_tars, key="url",
                 target_bytes=args.shard_bytes)
@@ -161,7 +163,7 @@ def main(argv: list[str] | None = None) -> int:
             }
         else:
             summary["export_tars"] = {"dir": args.export_tars,
-                                      "skipped": "no articles table"}
+                                      "skipped": "no trace table"}
     print(json.dumps(summary))
     return 0
 

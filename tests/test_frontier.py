@@ -141,6 +141,12 @@ def test_extracted_text_byte_identical(spark, tables, full_run):
     # failures are logged, not dropped: articles + failures == fetched urls
     n_failed = job.failures.read(spark).count()
     assert arts.count() + n_failed == job.seen_df().count()
+    # both are reads of the trace with the columns the round's own
+    # articles and failures tables had
+    assert job.articles.read(spark).columns == [
+        "id", "url", "title", "publish_time", "author", "text",
+        "signposting_tags", "section_labels", "keyword_tags", "round"]
+    assert job.failures.read(spark).columns == ["url", "reason", "round"]
 
 
 @pytest.mark.spark
@@ -170,8 +176,25 @@ def test_metrics_lineage(spark, full_run):
     # failures produce no per-partition rows
     assert per_round == {r["round"]: r["fetched"] for r in rounds if r["fetched"]}
     assert lin.filter(F.col("min_key") > F.col("max_key")).count() == 0
-    # both are reads of the trace: the round commits no table for them
-    assert not {"metrics", "lineage"} & set(os.listdir(job.dir))
+    # these, articles and failures are reads of the trace: the round
+    # commits no table for them
+    assert not ({"metrics", "lineage", "articles", "failures"}
+                & set(os.listdir(job.dir)))
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("table", ["articles", "failures"])
+def test_checkpoint_with_articles_or_failures_table_is_refused(
+        spark, tmp_path, table):
+    """A checkpoint from when a round still committed articles and
+    failures tables is refused, not resumed: the views read the trace,
+    so that table's rows would silently vanish from them."""
+    d = str(tmp_path / "ck")
+    SnapshotTable(os.path.join(d, table)).append(
+        spark.createDataFrame([("https://a.test/", 0)],
+                              "url string, round int"), {"round": 0})
+    with pytest.raises(ValueError, match=f"holds a {table} table"):
+        CrawlJob(spark, d)
 
 
 @pytest.mark.spark
@@ -190,7 +213,8 @@ def test_resume_equals_uninterrupted(spark, tables, full_run, tmp_path_factory):
         ("seen", ref_job.seen_df(), job2.seen_df()),
         ("articles", ref_job.articles_df().select("url", "text"),
          job2.articles_df().select("url", "text")),
-        ("trace", ref_job.trace_df(), job2.trace_df()),
+        ("trace", ref_job.trace_df().drop("article"),
+         job2.trace_df().drop("article")),
     ]:
         ra = {tuple(r) for r in a.collect()}
         rb = {tuple(r) for r in b.collect()}
@@ -267,7 +291,7 @@ def test_robots_gating(spark, tables, tmp_path_factory):
 
 # a round's commits, in the order run_round makes them (the frontier,
 # the resume authority, is last)
-ROUND_COMMITS = ("articles", "failures", "trace", "seen", "frontier")
+ROUND_COMMITS = ("trace", "seen", "frontier")
 # discovery crawl with the Bloom membership path on from round 0, one
 # attempt per URL (discovered fixture links mostly point at pages the
 # corpus lacks), and a budget that drains the fixture in a few rounds
@@ -285,7 +309,8 @@ def _discovery_state(job):
                      job.articles_df().select("url", "text").collect()},
         "failures": {tuple(r) for r in
                      job.failures.read(spark).collect()},
-        "trace": {tuple(r) for r in job.trace_df().collect()},
+        # the article structs (unhashable rows) are compared as articles
+        "trace": {tuple(r) for r in job.trace_df().drop("article").collect()},
         "seen": {tuple(r) for r in job.seen_df().collect()},
         "frontier": {tuple(r) for r in job.frontier.read(spark).collect()},
     }
@@ -361,14 +386,15 @@ def test_mid_round_crash_between_commits_replays_idempotently(
 
 
 # Spark jobs a round may launch under its caller's job group: the most
-# measured on this fixture (8 shuffle partitions) over eight three-round
-# crawls, 29-33 per round (AQE varies a round's count by a few jobs). A
-# slim outcome cut counted in one aggregate, commits planned over the
+# measured on this fixture (8 shuffle partitions) over ten three-round
+# crawls, 25-28 per round (AQE varies a round's count by a job or two).
+# A slim outcome cut counted in one aggregate, commits planned over the
 # round's cuts, an O(delta) Bloom add, counts and the frontier's max
 # crawl_rank from manifests, table schemas from manifests (no
-# schema-inference job per read), five commits (per-host metrics and
-# lineage are reads of the trace)
-ROUND_JOB_BUDGET = 33
+# schema-inference job per read), three commits (articles, failures,
+# per-host metrics and lineage are reads of the trace), and discovered
+# links anti-joined once against the pre-round frontier
+ROUND_JOB_BUDGET = 28
 
 
 @pytest.mark.spark
@@ -479,7 +505,8 @@ def test_frontier_without_not_before_round_resumes(spark, tables, tmp_path):
             assert "not_before_round" not in job.frontier.read(spark).columns
         assert job.run_round(pages)["selected"] > 0
         states.append([{tuple(r) for r in df.collect()} for df in
-                       (job.trace_df(), job.frontier.read(spark))])
+                       (job.trace_df().drop("article"),
+                        job.frontier.read(spark))])
     assert states[0] == states[1]
 
 
@@ -693,7 +720,7 @@ def test_evict_validates_before_mutating_seen(spark, tables, full_run,
 @pytest.mark.spark
 def test_run_crawl_reports_articles_of_a_drained_checkpoint(
         spark, fixture_dir, tmp_path, capsys):
-    """run_crawl's articles_total is the articles table's row count, also
+    """run_crawl's articles_total is the count of the articles view, also
     when a re-run finds the frontier already drained and runs no round."""
     import json
 
